@@ -482,8 +482,8 @@ object LogTable {
 
   /** `ndv.cols = a,b` — columns whose per-file HLL sketches every write
     * records (see [[ColStats.ndv]]), feeding CBO distinct counts through
-    * [[Snapshot.ndv]] with NO table rescan, ever: the sketches are
-    * computed in the same one-pass stats scan each write already runs,
+    * [[Snapshot.ndv]] with NO table rescan, ever: the writer tasks fold
+    * the sketches beside the stats each write already records,
     * and the union is a driver-side fold over O(files) ~hundred-byte
     * sketches. The 100 TB contrast is ANALYZE TABLE: a full-column
     * rescan that is stale the moment the next batch lands.
@@ -528,10 +528,11 @@ object LogTable {
 
   /** `hist.cols = a,b` — NUMERIC columns whose per-file equi-spaced
     * quantile points every write records (17 points = 16 equal-weight
-    * intervals, one `percentile_approx` riding the same one-pass stats
-    * scan). [[Snapshot.histogramOf]] merges the per-file pieces into a
-    * global EQUI-HEIGHT histogram for CBO ([[CatalogColumnStat]]
-    * `histogram`) — skewed-key join estimates stop assuming uniformity,
+    * intervals, one `percentile_approx` the writer tasks fold beside
+    * the other per-file stats). [[Snapshot.histogramOf]] merges the
+    * per-file pieces into a global EQUI-HEIGHT histogram for CBO
+    * ([[CatalogColumnStat]] `histogram`) — skewed-key join estimates
+    * stop assuming uniformity,
     * with NO ANALYZE rescan, ever: deletes and compaction update the
     * histogram for free (a removed file's pieces drop out of the merge).
     */
@@ -2584,7 +2585,9 @@ object LogTable {
   def deleteWhere(spark: SparkSession, path: String, predicate: Column,
                   maxRetries: Int = 3,
                   deletionVectors: Boolean = false): Long =
-    if (deletionVectors) dvMarkWhere(spark, path, predicate, maxRetries, None)
+    if (deletionVectors) withDesc(spark, s"dv-mark($path)") {
+      dvMarkWhere(spark, path, predicate, maxRetries, None)
+    }
     else rewriteWhere(spark, path, predicate, maxRetries, "DELETE") { (snap, rows) =>
       // NOT(coalesce(p, false)): keep rows where p is FALSE or NULL —
       // a bare !p would silently delete every NULL-predicate row
@@ -2615,8 +2618,9 @@ object LogTable {
                   set: Map[String, Column], maxRetries: Int = 3,
                   deletionVectors: Boolean = false): Long = {
     require(set.nonEmpty, "updateWhere needs at least one assignment")
-    if (deletionVectors)
-      return dvMarkWhere(spark, path, predicate, maxRetries, Some(set))
+    if (deletionVectors) return withDesc(spark, s"dv-mark($path)") {
+      dvMarkWhere(spark, path, predicate, maxRetries, Some(set))
+    }
     rewriteWhere(spark, path, predicate, maxRetries, "UPDATE") { (snap, rows) =>
       validateAssignments(path, snap, set)
       val hit = coalesce(predicate, lit(false))
@@ -6887,6 +6891,131 @@ object LogTable {
     }
   }
 
+  /** What a write records per data file: the tracked columns (partition
+    * columns first, then the declared stats, NDV and histogram columns,
+    * each resolved against the written `schema`), the global aggregates
+    * that compute one file's stats from its rows — row count first —
+    * and the conversion of one evaluated row into the file's log entry.
+    */
+  private[sources] final case class FileStatsSpec(tracked: Seq[String],
+      ndvTracked: Seq[String], histTracked: Seq[String], aggs: Seq[Column],
+      partitioned: Boolean) {
+    def logFile(name: String, bytes: Long, r: Row): LogFile = {
+      val rows = r.getLong(r.fieldIndex("__rows"))
+      val ndvB64: Map[String, String] = ndvTracked.zipWithIndex.flatMap {
+        case (c, j) =>
+          Option(r.getAs[Array[Byte]](r.fieldIndex(s"__ndv_$j")))
+            .filter(_.nonEmpty)
+            .map(b => c -> java.util.Base64.getEncoder.encodeToString(b))
+      }.toMap
+      val hqOf: Map[String, String] = histTracked.zipWithIndex.flatMap {
+        case (c, j) =>
+          Option(r.getSeq[Double](r.fieldIndex(s"__hq_$j")))
+            .filter(_.nonEmpty)
+            .map(qs => c -> qs.map(_.toString).mkString(","))
+      }.toMap
+      val colStats = tracked.zipWithIndex.map { case (c, i) =>
+        val mn = Option(r.getString(r.fieldIndex(s"__min_$i")))
+        val mx = Option(r.getString(r.fieldIndex(s"__max_$i")))
+        val nulls = rows - r.getLong(r.fieldIndex(s"__nn_$i"))
+        // NULL partition values are FIRST-CLASS (the Delta/Iceberg null
+        // partition shape): the file records the column's null count,
+        // victim matching and IS NULL skipping consult it, and non-NULL
+        // predicates prune all-NULL files through mayMatch's absent-range
+        // arm — nothing desynchronizes because nothing pretends a range
+        c -> ColStats(mn, mx, nulls,
+          ndv = ndvB64.collectFirst {
+            case (nc, b) if nc.equalsIgnoreCase(c) => b
+          },
+          hq = hqOf.collectFirst {
+            case (hc, q) if hc.equalsIgnoreCase(c) => q
+          })
+      }.toMap
+      // unpartitioned tables carry no leading-column range — pmin/pmax
+      // are "" and never consulted (partitionCol is "" there)
+      val (pmin, pmax) =
+        if (!partitioned) ("", "")
+        else {
+          // an all-NULL leading column has no range — "" sentinels are
+          // never consulted (statsRange declines the pmin/pmax fallback
+          // whenever a stats entry exists for the column)
+          val lead = tracked.head
+          (colStats(lead).min.getOrElse(""), colStats(lead).max.getOrElse(""))
+        }
+      LogFile(name, pmin, pmax, rows, bytes, colStats)
+    }
+  }
+
+  private[sources] def fileStatsSpec(schema: StructType,
+                                     partitionCols: Seq[String],
+                                     statsCols: Seq[String],
+                                     ndvCols: Seq[String],
+                                     histCols: Seq[String]): FileStatsSpec = {
+    // tracked columns: partitions first (dedup preserves order), then the
+    // declared data-skipping columns; matched case-insensitively against
+    // the frame actually written (an evolved merge carries every column).
+    // A statsCol may be a DOTTED path into a struct ("meta.ua") — the
+    // resolver walks the levels and the stats key at rest is the exact
+    // dotted physical path.
+    val tracked0 = (partitionCols ++ statsCols).foldLeft(Vector.empty[String]) {
+      (acc, c) => if (acc.exists(_.equalsIgnoreCase(c))) acc else acc :+ c
+    }.flatMap(c => resolvePathIn(schema, c).map(_._1))
+    // declared NDV columns join the same one-pass scan: min/max/nulls
+    // like any tracked column (extra skipping for free) PLUS a per-file
+    // HLL sketch — the increment [[Snapshot.ndv]] unions, so distinct
+    // counts stay fresh without ever rescanning the table
+    val ndvTracked = ndvCols.flatMap(c =>
+      resolvePathIn(schema, c).map(_._1))
+      .foldLeft(Vector.empty[String]) { (acc, c) =>
+        if (acc.exists(_.equalsIgnoreCase(c))) acc else acc :+ c
+      }
+    // declared HISTOGRAM columns: numeric only (quantiles of anything
+    // else are meaningless to the CBO); non-numeric declarations are
+    // silently skipped rather than failing a write
+    val histTracked = histCols.flatMap(c => resolvePathIn(schema, c))
+      .collect { case (c, dt) if dt.isInstanceOf[NumericType] => c }
+      .foldLeft(Vector.empty[String]) { (acc, c) =>
+        if (acc.exists(_.equalsIgnoreCase(c))) acc else acc :+ c
+      }
+    val tracked = (tracked0 ++
+      ndvTracked.filterNot(c => tracked0.exists(_.equalsIgnoreCase(c)))) ++
+      histTracked.filterNot(c => (tracked0 ++ ndvTracked)
+        .exists(_.equalsIgnoreCase(c)))
+    val trackedType: Map[String, DataType] = tracked.iterator
+      .flatMap(c => resolvePathIn(schema, c).map(c -> _._2)).toMap
+    val aggs = (count(lit(1)).as("__rows") +:
+      tracked.zipWithIndex.flatMap { case (c, i) =>
+        // timestamps persist as UTC MICROSECOND integers, not the
+        // session-zone string rendering — zone-free (a reader in another
+        // session zone must not re-interpret the bound) and monotonic
+        // (local-time strings order wrongly across a DST fold);
+        // unix_micros is monotonic, so min/max commute with it
+        val v = trackedType.get(c) match {
+          case Some(TimestampType) => unix_micros(pathCol(c))
+          case _ => pathCol(c)
+        }
+        Seq(min(v).cast("string").as(s"__min_$i"),
+          max(v).cast("string").as(s"__max_$i"),
+          count(pathCol(c)).as(s"__nn_$i"))
+      }) ++ ndvTracked.zipWithIndex.map { case (c, j) =>
+        // the sketch agg's input vocabulary is integral/string/binary —
+        // anything else renders injectively as its string form (distinct
+        // values stay distinct; the count is what matters, not the type)
+        val v = trackedType(c) match {
+          case ByteType | ShortType | IntegerType | LongType | StringType |
+               BinaryType => pathCol(c)
+          case _ => pathCol(c).cast("string")
+        }
+        hll_sketch_agg(v, lit(NdvLgK)).as(s"__ndv_$j")
+      } ++ histTracked.zipWithIndex.map { case (c, j) =>
+        val ps = (0 until HistQuantiles)
+          .map(i => i.toDouble / (HistQuantiles - 1))
+        percentile_approx(pathCol(c).cast("double"),
+          array(ps.map(lit): _*), lit(2500)).as(s"__hq_$j")
+      }
+    FileStatsSpec(tracked, ndvTracked, histTracked, aggs, partitionCols.nonEmpty)
+  }
+
   private[sources] def writeDataFiles(spark: SparkSession, path: String,
                              df0: DataFrame,
                              partitionCols: Seq[String],
@@ -6994,218 +7123,43 @@ object LogTable {
       .repartitionByRange(n,
         (partitionCols.map(col) ++ layout) :+ col("__salt"): _*)
       .drop("__salt")
-    // PIN the physical execution: materialize the plan to its RDD once,
-    // so the parquet write and the per-file stats aggregation below are
-    // two reduce-side jobs over the SAME map output — the DAGScheduler
-    // skips the shared shuffle map stage on the second job. Two separate
-    // Dataset actions would re-plan and re-shuffle everything.
-    val pinned = withDesc(spark, s"write-shuffle($path)") {
-      org.apache.spark.sql.GraftBridge.pinRdd(shuffled)
+    // Per-file stats WITHOUT a second query: the writer tasks fold every
+    // row they write into per-file buffers ([[FileStatsTracker]]) that
+    // evaluate the same Catalyst aggregates a rescan grouped by file
+    // would (one pass, not two — guide §1.2/§6)
+    val spec = fileStatsSpec(df.schema, partitionCols, statsCols, ndvCols,
+      histCols)
+    val tracker = FileStatsTracker(shuffled, spec.aggs)
+    // ONE planned query: the range shuffle's stages run under their own
+    // label, then the parquet write consumes the same plan's final stage
+    withDesc(spark, s"write-shuffle($path)") {
+      org.apache.spark.sql.GraftBridge.runShuffleStages(shuffled)
     }
-    // tracked columns: partitions first (dedup preserves order), then the
-    // declared data-skipping columns; matched case-insensitively against
-    // the frame actually written (an evolved merge carries every column).
-    // A statsCol may be a DOTTED path into a struct ("meta.ua") — the
-    // resolver walks the levels and the stats key at rest is the exact
-    // dotted physical path.
-    val tracked0 = (partitionCols ++ statsCols).foldLeft(Vector.empty[String]) {
-      (acc, c) => if (acc.exists(_.equalsIgnoreCase(c))) acc else acc :+ c
-    }.flatMap(c => resolvePathIn(df.schema, c).map(_._1))
-    // declared NDV columns join the same one-pass scan: min/max/nulls
-    // like any tracked column (extra skipping for free) PLUS a per-file
-    // HLL sketch — the increment [[Snapshot.ndv]] unions, so distinct
-    // counts stay fresh without ever rescanning the table
-    val ndvTracked = ndvCols.flatMap(c =>
-      resolvePathIn(df.schema, c).map(_._1))
-      .foldLeft(Vector.empty[String]) { (acc, c) =>
-        if (acc.exists(_.equalsIgnoreCase(c))) acc else acc :+ c
-      }
-    // declared HISTOGRAM columns: numeric only (quantiles of anything
-    // else are meaningless to the CBO); non-numeric declarations are
-    // silently skipped rather than failing a write
-    val histTracked = histCols.flatMap(c => resolvePathIn(df.schema, c))
-      .collect { case (c, dt) if dt.isInstanceOf[NumericType] => c }
-      .foldLeft(Vector.empty[String]) { (acc, c) =>
-        if (acc.exists(_.equalsIgnoreCase(c))) acc else acc :+ c
-      }
-    val tracked = (tracked0 ++
-      ndvTracked.filterNot(c => tracked0.exists(_.equalsIgnoreCase(c)))) ++
-      histTracked.filterNot(c => (tracked0 ++ ndvTracked)
-        .exists(_.equalsIgnoreCase(c)))
-    val trackedType: Map[String, DataType] = tracked.iterator
-      .flatMap(c => resolvePathIn(df.schema, c).map(c -> _._2)).toMap
-    // the stats scan projects each tracked path to a FLAT alias first —
-    // a dotted path is an extraction, not a column name the later
-    // aggregate could reference
-    def tAlias(c: String): String = s"__t_${tracked.indexOf(c)}"
-    val aggs = (count(lit(1)).as("__rows") +:
-      tracked.zipWithIndex.flatMap { case (c, i) =>
-        // timestamps persist as UTC MICROSECOND integers, not the
-        // session-zone string rendering — zone-free (a reader in another
-        // session zone must not re-interpret the bound) and monotonic
-        // (local-time strings order wrongly across a DST fold);
-        // unix_micros is monotonic, so min/max commute with it
-        val v = trackedType.get(c) match {
-          case Some(TimestampType) => unix_micros(col(tAlias(c)))
-          case _ => col(tAlias(c))
-        }
-        Seq(min(v).cast("string").as(s"__min_$i"),
-          max(v).cast("string").as(s"__max_$i"),
-          count(col(tAlias(c))).as(s"__nn_$i"))
-      }) ++ ndvTracked.zipWithIndex.map { case (c, j) =>
-        // the sketch agg's input vocabulary is integral/string/binary —
-        // anything else renders injectively as its string form (distinct
-        // values stay distinct; the count is what matters, not the type)
-        val v = trackedType(c) match {
-          case ByteType | ShortType | IntegerType | LongType | StringType |
-               BinaryType => col(tAlias(c))
-          case _ => col(tAlias(c)).cast("string")
-        }
-        hll_sketch_agg(v, lit(NdvLgK)).as(s"__ndv_$j")
-      } ++ histTracked.zipWithIndex.map { case (c, j) =>
-        val ps = (0 until HistQuantiles)
-          .map(i => i.toDouble / (HistQuantiles - 1))
-        percentile_approx(col(tAlias(c)).cast("double"),
-          array(ps.map(lit): _*), lit(2500)).as(s"__hq_$j")
-      }
-    // Per-file stats WITHOUT re-reading a byte of what was just written
-    // (guide §1.2/§6: one pass, not two — the old post-write "stats-scan"
-    // re-read every new file). Each writer task writes exactly ONE
-    // part-<pid>-* file (no partitionBy, no maxRecordsPerFile), so
-    // aggregating the PINNED frame by spark_partition_id() produces the
-    // same per-file groups over the very rows the write serialized —
-    // parquet round-trips every tracked type exactly and the rendering
-    // casts are the same Catalyst expressions, so the stat strings come
-    // out identical to the rescan's. The aggregation job is submitted
-    // CONCURRENTLY with the write (§2.6): both are reduce-side jobs over
-    // the same shuffle output, so the agg back-fills the write's task
-    // tail. A session with maxRecordsPerFile > 0 breaks the one-task-
-    // one-file invariant and falls back to the rescan.
-    val perFileSafe = spark.sessionState.conf.maxRecordsPerFile <= 0
-    def statsViaRescan(): Array[(String, Long, Row)] = {
-      // explicit schema: no footer inference, and a legitimately EMPTY
-      // write (deleteWhere emptying every victim file) still reads as an
-      // empty frame instead of failing schema inference
-      withDesc(spark, s"stats-scan($path)") {
-        spark.read.schema(df.schema).parquet(tmp.toString)
-          .select(col("_metadata.file_path").as("__f") +:
-            tracked.zipWithIndex.map { case (c, i) =>
-              pathCol(c).as(s"__t_$i")
-            }: _*)
-          .groupBy(col("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect() // bounded: one row per NEW file
-      }.map { r =>
-        val src = new Path(java.net.URI.create(r.getString(r.fieldIndex("__f"))))
-        (src.getName, fs.getFileStatus(src).getLen, r)
-      }
+    withDesc(spark, s"write-data-files($path)") {
+      org.apache.spark.sql.GraftBridge.writeFiles(shuffled, tmp.toString,
+        bloomOpts, Seq(tracker))
     }
-    val statsF =
-      if (!perFileSafe) None
-      else Some(submitOverlapped(spark) {
-        withDesc(spark, s"stats-agg($path)") {
-          pinned.select(spark_partition_id().as("__f") +:
-            tracked.zipWithIndex.map { case (c, i) =>
-              pathCol(c).as(s"__t_$i")
-            }: _*)
-            .groupBy(col("__f"))
-            .agg(aggs.head, aggs.tail: _*)
-            .collect() // bounded: one row per non-empty partition
-        }
-      })
-    try {
-      withDesc(spark, s"write-data-files($path)") {
-        pinned.write.mode("overwrite").options(bloomOpts).parquet(tmp.toString)
-      }
-    } catch { case t: Throwable =>
-      // the overlapped stats job must not outlive a failed write
-      statsF.foreach(f => try f.get() catch { case _: Throwable => () })
-      throw t
-    }
-    val stats: Array[(String, Long, Row)] = statsF match {
-      case None => statsViaRescan()
-      case Some(f) =>
-        val byPid =
-          try f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
-          }
-        // task partition id <-> part file: the writer names files
-        // part-<pid>-<uuid>-c000...; a duplicate pid (an unexpected
-        // second c-file) or a missing one breaks the 1:1 mapping —
-        // defensively rescan instead of guessing
-        val partRe = "part-(\\d+)-.*".r
-        val listed = fs.listStatus(tmp).toIndexedSeq
-          .filter(_.getPath.getName.startsWith("part-"))
-          .flatMap(st => st.getPath.getName match {
-            case partRe(p) => Some(p.toInt -> st)
-            case _ => None
-          })
-        val byFile = listed.groupBy(_._1)
-        val pids = byPid.map(_.getInt(0))
-        if (byFile.valuesIterator.exists(_.size > 1) ||
-            !pids.forall(byFile.contains)) statsViaRescan()
-        else byPid.map { r =>
-          val st = byFile(r.getInt(0)).head._2
-          (st.getPath.getName, st.getLen, r)
-        }
-    }
+    val bytesOf = fs.listStatus(tmp).iterator
+      .map(st => st.getPath.getName -> st.getLen).toMap
     // a zero-row file (footer-only artifact of an empty write) carries
     // no information — it is never referenced and dies with the tmp dir
-    val adds = stats.filter { case (_, _, r) =>
-      r.getLong(r.fieldIndex("__rows")) > 0L
-    }.map { case (name, bytes, r) =>
-      val rows = r.getLong(r.fieldIndex("__rows"))
-      val ndvB64: Map[String, String] = ndvTracked.zipWithIndex.flatMap {
-        case (c, j) =>
-          Option(r.getAs[Array[Byte]](r.fieldIndex(s"__ndv_$j")))
-            .filter(_.nonEmpty)
-            .map(b => c -> java.util.Base64.getEncoder.encodeToString(b))
-      }.toMap
-      val hqOf: Map[String, String] = histTracked.zipWithIndex.flatMap {
-        case (c, j) =>
-          Option(r.getSeq[Double](r.fieldIndex(s"__hq_$j")))
-            .filter(_.nonEmpty)
-            .map(qs => c -> qs.map(_.toString).mkString(","))
-      }.toMap
-      val colStats = tracked.zipWithIndex.map { case (c, i) =>
-        val mn = Option(r.getString(r.fieldIndex(s"__min_$i")))
-        val mx = Option(r.getString(r.fieldIndex(s"__max_$i")))
-        val nulls = rows - r.getLong(r.fieldIndex(s"__nn_$i"))
-        // NULL partition values are FIRST-CLASS (the Delta/Iceberg null
-        // partition shape): the file records the column's null count,
-        // victim matching and IS NULL skipping consult it, and non-NULL
-        // predicates prune all-NULL files through mayMatch's absent-range
-        // arm — nothing desynchronizes because nothing pretends a range
-        c -> ColStats(mn, mx, nulls,
-          ndv = ndvB64.collectFirst {
-            case (nc, b) if nc.equalsIgnoreCase(c) => b
-          },
-          hq = hqOf.collectFirst {
-            case (hc, q) if hc.equalsIgnoreCase(c) => q
-          })
-      }.toMap
-      // unpartitioned tables carry no leading-column range — pmin/pmax
-      // are "" and never consulted (partitionCol is "" there)
-      val (pmin, pmax) =
-        if (partitionCols.isEmpty) ("", "")
-        else {
-          // an all-NULL leading column has no range — "" sentinels are
-          // never consulted (statsRange declines the pmin/pmax fallback
-          // whenever a stats entry exists for the column)
-          val lead = tracked.head
-          (colStats(lead).min.getOrElse(""), colStats(lead).max.getOrElse(""))
-        }
-      val src = new Path(tmp, name)
-      val dst = new Path(path, name)
+    val adds = tracker.files.toIndexedSeq.map { case (name, r) =>
+      spec.logFile(name, bytesOf.getOrElse(name, throw new java.io.IOException(
+        s"written file $name missing under $tmp")), r)
+    }.filter(_.rows > 0L)
+    adds.foreach { f =>
+      val src = new Path(tmp, f.name)
+      val dst = new Path(path, f.name)
       if (!fs.rename(src, dst))
         throw new java.io.IOException(s"rename $src -> $dst failed")
-      LogFile(name, pmin, pmax, rows, bytes, colStats)
-    }.toIndexedSeq
-    fs.delete(tmp, true): Unit
+    }
     adds
-    } finally inputCache.foreach(_.unpersist(): Unit)
+    } finally {
+      // the tmp dir goes on failure too — a failed write or rename must
+      // not leave it for vacuum
+      try fs.delete(tmp, true): Unit
+      finally inputCache.foreach(_.unpersist(): Unit)
+    }
   }
 
   private def commitJson(version: Long, schemaDdl: String,

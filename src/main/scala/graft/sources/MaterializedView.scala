@@ -280,9 +280,12 @@ object MaterializedView {
     * carries min/max, plus ONE keyed semi-join rescan of the base
     * snapshot for exactly the groups where a delete may have removed the
     * stored extremum (pure-insert windows fold in place and never
-    * rescan).
+    * rescan). Its jobs without a finer label carry `mv-refresh`.
     */
-  def refresh(spark: SparkSession, mvPath: String): Long = {
+  def refresh(spark: SparkSession, mvPath: String): Long =
+    LogTable.withDesc(spark, s"mv-refresh($mvPath)")(refreshOnce(spark, mvPath))
+
+  private def refreshOnce(spark: SparkSession, mvPath: String): Long = {
     val d = definition(spark, mvPath)
     val to = LogTable.latestVersion(spark, d.basePath)
     val from = refreshedVersion(spark, mvPath)

@@ -134,7 +134,10 @@ final case class MergeInto private[sources] (
     }
   }
 
-  def run(): Long = {
+  /** Run the merge; its jobs without a finer label carry `merge`. */
+  def run(): Long = LogTable.withDesc(spark, s"merge($path)")(transact())
+
+  private def transact(): Long = {
     require(matched.nonEmpty || insert.isDefined || bySource.nonEmpty,
       s"merge into $path: no clauses — nothing to do")
     val fs = LogTable.fsOf(spark, path)

@@ -32,17 +32,47 @@ object GraftBridge {
       data.queryExecution.toRdd, data.schema, isStreaming = false)
   }
 
-  /** Pin a frame's PHYSICAL execution: materialize the plan to its RDD
-    * once and wrap that same RDD back as a DataFrame, so several actions
-    * (a write and a stats aggregation, say) share ONE execution — the
-    * DAGScheduler sees the same ShuffleDependency on the second job and
-    * skips the map stage instead of re-planning and re-shuffling, which
-    * is what two separate Dataset actions over the same lineage would do.
+  /** Run a frame's AQE plan up to its final stage (shuffle map stages,
+    * and the sample a range partitioning takes) without running that
+    * stage — so the caller can label the shuffle's jobs apart from the
+    * write that consumes it. The plan is kept; [[writeFiles]] resumes it.
     */
-  def pinRdd(data: DataFrame): DataFrame = {
+  def runShuffleStages(data: DataFrame): Unit =
+    data.queryExecution.executedPlan match {
+      case a: execution.adaptive.AdaptiveSparkPlanExec => a.finalPhysicalPlan: Unit
+      case _ => ()
+    }
+
+  /** Write a frame as parquet files under `dir` in ONE planned query:
+    * `FileFormatWriter.write` over the frame's own executed plan (the
+    * pattern of Delta's transactional write), with `trackers` riding the
+    * writer tasks. A `df.write.parquet(dir)` would wrap the frame in a
+    * write command and plan it again. Committer, Hadoop conf, options,
+    * output metrics and the recorded nullability match that path.
+    */
+  def writeFiles(data: DataFrame, dir: String, options: Map[String, String],
+                 trackers: Seq[execution.datasources.WriteJobStatsTracker]): Unit = {
+    import execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
     val spark = data.sparkSession.asInstanceOf[classic.SparkSession]
-    spark.internalCreateDataFrame(
-      data.queryExecution.toRdd, data.schema, isStreaming = false)
+    val qe = data.queryExecution
+    val plan = qe.executedPlan
+    val output = plan.output.zip(data.schema.fields).map { case (a, f) =>
+      a.withNullability(f.nullable)
+    }
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+    val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+      spark.sessionState.conf.fileCommitProtocolClass,
+      jobId = java.util.UUID.randomUUID().toString, outputPath = dir)
+    val basic = new BasicWriteJobStatsTracker(
+      new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+      BasicWriteJobStatsTracker.metrics)
+    execution.SQLExecution.withNewExecutionId(qe, Some("graft-write")) {
+      FileFormatWriter.write(spark, plan,
+        new execution.datasources.parquet.ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(dir, Map.empty, output), hadoopConf,
+        partitionColumns = Nil, bucketSpec = None,
+        statsTrackers = basic +: trackers, options = options)
+    }: Unit
   }
 
   /** Snapshot of the calling thread's SparkContext-local properties
