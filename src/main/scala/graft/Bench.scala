@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints ONE bare JSON line (build.sbt routes forked stdout unprefixed).
   *
@@ -16,8 +14,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     // Fresh warehouse root per bench run: rounds 17→18 showed untouched
     // shuffle-heavy gates drifting 1.2-1.6× while warehouse/index scratch
     // from prior rounds accumulated to ~1.5 GB next to them. Benchmarks
@@ -25,15 +21,7 @@ object Bench {
     val warehouse = sys.env.getOrElse("SPARK_GRAFT_BENCH_WAREHOUSE",
       "/root/repo/target/bench-warehouse")
     deleteRecursively(new java.io.File(warehouse))
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SessionTuning.session(warehouse = Some(warehouse))
     spark.sparkContext.setLogLevel("WARN")
 
     // Optional comma-separated subset for bisecting (dev use).

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints `explain("formatted")` for the named queries
   * (or all) at the given SF dir. Used to check pushdown (PushedFilters),
   * broadcast choices, and WholeStageCodegen coverage.
@@ -21,15 +19,7 @@ object Explain {
       f.delete(): Unit
     }
     rmr(new java.io.File(warehouse))
-    val spark = SessionTuning(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SessionTuning.session("4", Some(warehouse))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")

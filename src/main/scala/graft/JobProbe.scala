@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only gate profiler: runs the named queries bench-style (sf0.001
   * warm-up, then one timed pass) and reports, per query, how the wall
@@ -15,17 +14,8 @@ import org.apache.spark.sql.SparkSession
 object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warehouse = "/root/repo/target/bench-warehouse"
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SessionTuning.session(warehouse = Some(warehouse))
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class Job(id: Int, desc: String, var start: Long, var end: Long,

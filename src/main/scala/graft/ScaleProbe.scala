@@ -166,15 +166,7 @@ object ScaleProbe {
     val passes = sys.env.getOrElse("SPARK_GRAFT_SCALE_PASSES", "2").toInt.max(1)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "BENCH_SCALE.json")
     val rebuild = sys.env.get("SPARK_GRAFT_SCALE_REBUILD").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val tierDir = new java.io.File(s"target/scaleprobe/sf${copies}x").getAbsolutePath

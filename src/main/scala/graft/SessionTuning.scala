@@ -3,12 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Engine-recommended session settings shared by every runnable main
-  * (Bench / Verify / JobProbe / Explain) so the timed surface, the
-  * correctness surface and the dev profilers all execute under the same
-  * configuration. Each setting is parameterised by an env var so the
-  * bench stays comparable across scales (the driver's contract), with
-  * the local default being the production-recommended value — nothing
-  * here is a local-mode-only knob.
+  * (Bench, Verify, JobProbe, Explain, ScaleProbe, CkptMillionProbe), so
+  * the timed surface, the correctness surface, the scale probes and the
+  * dev profilers all execute under the same configuration. Each value
+  * is the production-recommended one — nothing here is a
+  * local-mode-only knob.
   *
   *  - `spark.sql.codegen.cache.maxEntries` (default 100) caps the
   *    JVM-wide cache of Janino-compiled generated classes. The engine
@@ -35,23 +34,37 @@ import org.apache.spark.sql.SparkSession
   *    Interleaved A/B: 1.03x total on the heavy-gate subset.
   */
 object SessionTuning {
-  def apply(b: SparkSession.Builder): SparkSession.Builder = {
-    val b0 = b
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-    // No-fork local filesystems (see [[graft.sources.FastLocalFileSystem]]):
-    // without libhadoop, every created file/dir forks a `chmod` subprocess;
-    // these substitutes apply the same permission bits via java.nio. Both
-    // Hadoop file APIs are covered (FileSystem for data/commit writes,
-    // FileContext for streaming offset/commit logs). Not a local-mode-only
-    // knob: any cluster node without native Hadoop libs pays the same forks.
-    if (sys.env.getOrElse("SPARK_GRAFT_FAST_LOCALFS", "true").toBoolean)
-      b0.config("spark.hadoop.fs.file.impl",
-          classOf[graft.sources.FastLocalFileSystem].getName)
-        .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-          classOf[graft.sources.FastLocalFs].getName)
-    else b0
+  def apply(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      // No-fork local filesystems (see [[graft.sources.FastLocalFileSystem]]):
+      // without libhadoop, every created file/dir forks a `chmod`
+      // subprocess; these substitutes apply the same permission bits via
+      // java.nio. Both Hadoop file APIs are covered (FileSystem for
+      // data/commit writes, FileContext for streaming offset/commit logs).
+      // Not a local-mode-only knob: any cluster node without native
+      // Hadoop libs pays the same forks.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.FastLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.FastLocalFs].getName)
+
+  /** The session a runnable main drives: `local[cpus]` (by default
+    * `SPARK_GRAFT_CPUS`, else nproc) with one shuffle partition per
+    * core, UTC, parquet nanosecond timestamps read as longs
+    * (`events.ts`), the engine's extensions, no UI, the settings of
+    * [[apply]], and optionally a warehouse root.
+    */
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+                Runtime.getRuntime.availableProcessors.toString),
+              warehouse: Option[String] = None): SparkSession = {
+    val b = apply(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
+      .config("spark.ui.enabled", "false"))
+    warehouse.fold(b)(b.config("spark.sql.warehouse.dir", _)).getOrCreate()
   }
 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-
 /** The parquet-checkpoint CROSSOVER, measured honestly at the scale it
   * was built for: `BENCH_SCALE_CKPT{,40}.json` stop at 20k file entries
   * (where one driver-side JSON parse still wins), so this probe
@@ -20,13 +18,7 @@ object CkptMillionProbe {
     val passes = sys.env.getOrElse("SPARK_GRAFT_CKPT1M_PASSES", "3").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_CKPT1M_OUT",
       "BENCH_SCALE_CKPT1M.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionTuning.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -446,11 +446,11 @@ object LogTable {
     * a file's pmin/pmax describe the leading column IN EFFECT WHEN IT
     * WAS WRITTEN, so once the current leading column differs from the
     * original, the fallback could compare a predicate's literal against
-    * a DIFFERENT column's values and wrongly prune — every fallback site
-    * consults [[leadFallbackSound]] instead. Engine-written files always
-    * carry real per-column stats for their spec's partition columns, so
-    * disabling the fallback costs pruning only on pre-stats legacy files
-    * (kept, never wrongly dropped).
+    * a DIFFERENT column's values and wrongly prune — the stats
+    * resolver ([[statsOf]]) consults [[leadFallbackSound]] instead.
+    * Engine-written files always carry real per-column stats for their
+    * spec's partition columns, so disabling the fallback costs pruning
+    * only on pre-stats legacy files (kept, never wrongly dropped).
     *
     * `pspec.lategen` — comma-joined generated columns introduced AFTER
     * create (by an evolution): old data files predate the column
@@ -2115,7 +2115,7 @@ object LogTable {
           "make ITS min/max ranges prune")
     }
     // `OPTIMIZE ... WHERE` scopes maintenance to the files that MAY hold
-    // matching rows (mayMatch inclusion is conservative — compacting a
+    // matching rows (inclusion is conservative — compacting a
     // boundary file that turns out not to match is harmless; at 100 TB
     // the point is compacting yesterday's partition without listing,
     // judging, or rewriting the other 3,000 days)
@@ -2123,8 +2123,7 @@ object LogTable {
     val candidates = where match {
       case None => snap.files
       case Some(p) =>
-        val cj = analyzedConjuncts(spark, snap, p)
-        snap.files.filter(f => cj.forall(c => mayMatch(snap, f, c, zoneW)))
+        possibleFiles(snap, analyzedConjuncts(spark, snap, p), zoneW)
     }
     val countByValue = scala.collection.mutable.Map.empty[String, Int]
     candidates.foreach { f =>
@@ -2142,15 +2141,12 @@ object LogTable {
     // current layout (this is how a partition evolution migrates data:
     // incrementally, at the operator's leisure, never inside the
     // evolution commit itself)
+    // (an EXISTING entry with absent bounds is an all-NULL-lead file
+    // under the CURRENT spec, not debt — rewriting it would produce
+    // another all-NULL file, forever: non-convergent)
     val stale =
       if (snap.partitionCols.isEmpty) Nil
-      else candidates.filter(f =>
-        statsRange(snap, f, snap.partitionCol).isEmpty &&
-          // an EXISTING entry with absent bounds is an all-NULL-lead
-          // file under the CURRENT spec, not debt — rewriting it would
-          // produce another all-NULL file, forever (non-convergent)
-          !f.stats.keys.exists(_.equalsIgnoreCase(
-            snap.physicalOfPath(snap.partitionCol))))
+      else candidates.filter(f => statsOf(snap, f, snap.partitionCol).isEmpty)
     if (over.isEmpty && stale.isEmpty) return -1L
     val victims = (candidates.filter(f =>
       over.contains(f.pmin) || over.contains(f.pmax)) ++ stale).distinct
@@ -2490,8 +2486,7 @@ object LogTable {
     val snap = snapshot(spark, path, asOf)
     val zone = spark.sessionState.conf.sessionLocalTimeZone
     val cj = analyzedConjuncts(spark, snap, predicate)
-    val keep = snap.files.filter(f => cj.forall(c => mayMatch(snap, f, c, zone)))
-    readFiles(spark, path, snap, keep).filter(predicate)
+    readFiles(spark, path, snap, possibleFiles(snap, cj, zone)).filter(predicate)
   }
 
   /** The shared scaffold of the predicate WRITE operations
@@ -2516,8 +2511,7 @@ object LogTable {
     while (true) {
       val snap = snapshot(spark, path)
       val cj = analyzedConjuncts(spark, snap, predicate)
-      val victims = snap.files.filter(f =>
-        cj.forall(c => mayMatch(snap, f, c, zone)))
+      val victims = possibleFiles(snap, cj, zone)
       if (victims.isEmpty) return -1L
       val (rewritten, ddl) = transform(snap, readFiles(spark, path, snap, victims))
       // an UPDATE can manufacture violating rows; a DELETE only drops
@@ -2801,8 +2795,7 @@ object LogTable {
         rel.select(snap.schema.fields.toIndexedSeq
           .map(f => assignedCol(s, f, None)): _*)
       val cj = analyzedConjuncts(spark, snap, predicate)
-      val victims = snap.files.filter(f =>
-        cj.forall(c => mayMatch(snap, f, c, zone)))
+      val victims = possibleFiles(snap, cj, zone)
       if (victims.isEmpty) return -1L
       // the victims' LIVE rows with their physical positions attached
       // (scan under PHYSICAL names, alias logical — predicate and SET
@@ -3648,8 +3641,8 @@ object LogTable {
     * PROVE every row satisfies the predicate contributes its exact
     * per-file row count straight from the log (min strictly above a
     * `>` bound, a single-value partition file under an equality, zero
-    * nulls — the dual of [[mayMatch]]'s can-any-row test); a file whose
-    * stats exclude every row contributes nothing; only the UNDECIDED
+    * nulls — a [[verdict]] of `Must`); a file whose stats exclude every
+    * row (`Cannot`) contributes nothing; only the UNDECIDED
     * boundary files are scanned. A `count(*) WHERE date = yesterday`
     * over a 100 TB table then reads a handful of boundary files instead
     * of a partition — and a fully-aligned predicate reads nothing at
@@ -3661,14 +3654,16 @@ object LogTable {
     val snap = snapshot(spark, path, asOf)
     val zone = spark.sessionState.conf.sessionLocalTimeZone
     val cj = analyzedConjuncts(spark, snap, predicate)
-    val (possible, excluded) = snap.files.partition(f =>
-      cj.forall(c => mayMatch(snap, f, c, zone)))
     // a DV'd file is never metadata-decided: its stats and row count are
     // PHYSICAL, and some physical rows are logically gone — exclusion
     // stays sound (no physical row matches ⇒ no live row does), but an
     // all-rows proof would count deleted rows, so those files scan
-    val (decided, scan) = possible.partition(f =>
-      f.dv.isEmpty && cj.forall(c => mustMatch(snap, f, c, zone)))
+    val byVerdict = snap.files.groupBy { f =>
+      val v = verdict(snap, f, cj, zone)
+      if (v == Verdict.Must && f.dv.nonEmpty) Verdict.May else v
+    }.withDefaultValue(Nil)
+    val (decided, scan, excluded) = (byVerdict(Verdict.Must),
+      byVerdict(Verdict.May), byVerdict(Verdict.Cannot))
     val scanned =
       if (scan.isEmpty) 0L
       else readFiles(spark, path, snap, scan).filter(predicate).count()
@@ -3678,101 +3673,22 @@ object LogTable {
 
   /** A FILTERED count answered purely from metadata, or None when any
     * file is undecided — the SQL fold's strict form of [[countWhere]]:
-    * every live file must be either provably empty under the conjuncts
-    * (mayMatch false) or provably all-matching (mustMatch true, no DV,
-    * zero nulls per mustMatch's discipline). `cj` arrives ANALYZED
-    * (optimizer-plan conjuncts referencing the relation's physical
-    * attributes — the same vocabulary mayMatch resolves).
+    * every live file's [[verdict]] must be `Cannot`, or `Must` on a
+    * file without a DV. `cj` arrives ANALYZED (optimizer-plan conjuncts
+    * referencing the relation's physical attributes — a vocabulary the
+    * evaluator resolves like the logical one).
     */
   private[sources] def decidedCount(snap: Snapshot, cj: Seq[Expression],
                                     zone: String): Option[Long] = {
     var total = 0L
     snap.files.foreach { f =>
-      val may = cj.forall(c => mayMatch(snap, f, c, zone))
-      if (may) {
-        if (f.dv.isEmpty && cj.forall(c => mustMatch(snap, f, c, zone)))
-          total += f.rows
-        else return None // undecided: the scan must answer
+      verdict(snap, f, cj, zone) match {
+        case Verdict.Cannot =>
+        case Verdict.Must if f.dv.isEmpty => total += f.rows
+        case _ => return None // undecided: the scan must answer
       }
     }
     Some(total)
-  }
-
-  /** Does EVERY row of `f` provably satisfy conjunct `e`? The strict
-    * dual of [[mayMatch]]: comparisons additionally require ZERO nulls
-    * in the column (a NULL row satisfies no comparison), and anything
-    * unprovable answers false — the file is scanned, never counted on
-    * faith.
-    */
-  private def mustMatch(snap: Snapshot, f: LogFile, e: Expression,
-                        zone: String): Boolean = {
-    def colInfo(a: Expression): Option[(DataType, ColStats)] =
-      attrName(a).flatMap { n =>
-        // names may be logical (DML) or physical (FileIndex), possibly a
-        // dotted struct path — resolve to the at-rest physical path and
-        // key stats by it; leaf type off the physical schema
-        val pn = snap.physicalOfPath(n)
-        resolvePathIn(snap.physicalSchema, pn)
-          .flatMap { case (_, dt) =>
-            f.stats.collectFirst { case (k, s) if k.equalsIgnoreCase(pn) => s }
-              .orElse(
-                if (pn.equalsIgnoreCase(snap.partitionCol) &&
-                    leadFallbackSound(snap))
-                  Some(ColStats(Some(f.pmin), Some(f.pmax), 0L))
-                else None)
-              .map(st => (dt, st))
-          }
-      }
-    def cmp(dt: DataType, stat: String, l: Literal): Option[Int] =
-      cmpStatLit(dt, stat, l, zone)
-    // all-rows proof for a comparison: no nulls, and the WHOLE [min,max]
-    // range sits on the satisfying side of the bound
-    def prove(a: Expression, l: Literal)(
-        p: (DataType, ColStats) => Option[Boolean]): Boolean =
-      colInfo(a) match {
-        case Some((dt, st)) if st.nulls == 0L && st.min.isDefined =>
-          p(dt, st).getOrElse(false)
-        case _ => false
-      }
-    e match {
-      case EqualTo(a, FoldedLit(l)) => prove(a, l)((dt, st) =>
-        for (cl <- st.min.flatMap(cmp(dt, _, l));
-             ch <- st.max.flatMap(cmp(dt, _, l))) yield cl == 0 && ch == 0)
-      case EqualTo(FoldedLit(l), a) => prove(a, l)((dt, st) =>
-        for (cl <- st.min.flatMap(cmp(dt, _, l));
-             ch <- st.max.flatMap(cmp(dt, _, l))) yield cl == 0 && ch == 0)
-      case GreaterThan(a, FoldedLit(l)) => // every row > l: min > l
-        prove(a, l)((dt, st) => st.min.flatMap(cmp(dt, _, l)).map(_ > 0))
-      case GreaterThan(FoldedLit(l), a) => // every row < l: max < l
-        prove(a, l)((dt, st) => st.max.flatMap(cmp(dt, _, l)).map(_ < 0))
-      case GreaterThanOrEqual(a, FoldedLit(l)) =>
-        prove(a, l)((dt, st) => st.min.flatMap(cmp(dt, _, l)).map(_ >= 0))
-      case GreaterThanOrEqual(FoldedLit(l), a) =>
-        prove(a, l)((dt, st) => st.max.flatMap(cmp(dt, _, l)).map(_ <= 0))
-      case LessThan(a, FoldedLit(l)) =>
-        prove(a, l)((dt, st) => st.max.flatMap(cmp(dt, _, l)).map(_ < 0))
-      case LessThan(FoldedLit(l), a) =>
-        prove(a, l)((dt, st) => st.min.flatMap(cmp(dt, _, l)).map(_ > 0))
-      case LessThanOrEqual(a, FoldedLit(l)) =>
-        prove(a, l)((dt, st) => st.max.flatMap(cmp(dt, _, l)).map(_ <= 0))
-      case LessThanOrEqual(FoldedLit(l), a) =>
-        prove(a, l)((dt, st) => st.min.flatMap(cmp(dt, _, l)).map(_ >= 0))
-      case In(a, vs) if vs.nonEmpty &&
-          vs.forall(FoldedLit.unapply(_).isDefined) =>
-        // provable when the file holds ONE value and it is in the list
-        vs.exists { v =>
-          val l = FoldedLit.unapply(v).get
-          prove(a, l)((dt, st) =>
-            for (cl <- st.min.flatMap(cmp(dt, _, l));
-                 ch <- st.max.flatMap(cmp(dt, _, l))) yield cl == 0 && ch == 0)
-        }
-      case IsNotNull(a) =>
-        colInfo(a).exists { case (_, st) => st.nulls == 0L }
-      case IsNull(a) =>
-        colInfo(a).exists { case (_, st) =>
-          st.nulls == f.rows && st.min.isEmpty }
-      case _ => false
-    }
   }
 
   /** The log table as a FIRST-CLASS Spark DataFrame: a parquet
@@ -6330,52 +6246,59 @@ object LogTable {
     snap.files.filter { f =>
       touched.exists { tuple =>
         types.zip(tuple).forall { case ((c, dt), v) =>
-          if (v == null) {
-            // NULL tuple value: the file may hold it unless its stats
-            // PROVE zero NULLs in the column; no entry (legacy) ⇒ keep
-            val pc = snap.physicalOfPath(c)
-            f.stats.collectFirst {
-              case (k, st) if k.equalsIgnoreCase(pc) => st.nulls
-            }.forall(_ > 0L)
-          } else statsRange(snap, f, c) match {
-            case Some((lo, hi)) => rangeMayContain(dt, lo, hi, v)
-            case None =>
-              // absent range: either UNKNOWN (legacy file, no entry —
-              // keep) or an all-NULL file, which cannot hold a non-null
-              // touched value — skip it
-              !f.stats.keys.exists(_.equalsIgnoreCase(snap.physicalOfPath(c)))
+          // NULL tuple value: the file may hold it unless a real stats
+          // entry PROVES zero NULLs in the column; no entry (legacy) ⇒ keep
+          if (v == null) statEntry(snap, f, c).forall(_.nulls > 0L)
+          else statsOf(snap, f, c) match {
+            case Some(ColStats(Some(lo), Some(hi), _, _, _)) =>
+              rangeMayContain(dt, lo, hi, v)
+            // an entry without a range: an all-NULL file, which cannot
+            // hold a non-null touched value
+            case Some(_) => false
+            case None => true // unknown (legacy file, no entry) ⇒ keep
           }
         }
       }
     }
   }
 
-  /** A file's (min, max) for `c`: the stats entry when present, falling
-    * back to (pmin, pmax) for the leading partition column on files
-    * committed before per-column stats existed. None ⇒ unknown.
+  /** The stats entry `f` really carries for column `c` — stats are keyed
+    * by the column's PHYSICAL name (a dotted path for nested
+    * statsCols); `c` may arrive logical (DML predicates) or already
+    * physical (FileIndex filters) — physicalOfPath is identity per
+    * segment on anything that is not a mapped logical.
+    */
+  private def statEntry(snap: Snapshot, f: LogFile,
+                        c: String): Option[ColStats] = {
+    val pc = snap.physicalOfPath(c)
+    f.stats.collectFirst { case (k, s) if k.equalsIgnoreCase(pc) => s }
+  }
+
+  /** THE stats resolver every file-skipping decision reads: the real
+    * entry for `c`, else — for the leading partition column of a file
+    * committed before per-column stats existed — its (pmin, pmax) with
+    * zero NULLs (legacy files predate NULL partition support). The
+    * fallback applies only while [[leadFallbackSound]]: pmin/pmax
+    * describe the leading column AT WRITE TIME, and once it has evolved
+    * away from the create-time one they would bound a different
+    * column's values. An EXISTING entry with absent bounds means the
+    * file's values are all NULL — its "" pmin/pmax sentinels never
+    * masquerade as a range. None ⇒ unknown.
+    */
+  private[sources] def statsOf(snap: Snapshot, f: LogFile,
+                               c: String): Option[ColStats] =
+    statEntry(snap, f, c).orElse(
+      if (snap.physicalOfPath(c).equalsIgnoreCase(snap.partitionCol) &&
+          leadFallbackSound(snap))
+        Some(ColStats(Some(f.pmin), Some(f.pmax), 0L))
+      else None)
+
+  /** A file's (min, max) for `c` per [[statsOf]]. None ⇒ unknown, or an
+    * all-NULL file.
     */
   private def statsRange(snap: Snapshot, f: LogFile,
-                         c: String): Option[(String, String)] = {
-    // stats are keyed by the column's PHYSICAL name (a dotted path for
-    // nested statsCols); `c` may arrive logical (DML predicates) or
-    // already physical (FileIndex filters) — physicalOfPath is identity
-    // per segment on anything that is not a mapped logical
-    val pc = snap.physicalOfPath(c)
-    f.stats.collectFirst {
-      case (k, ColStats(Some(lo), Some(hi), _, _, _)) if k.equalsIgnoreCase(pc) =>
-        (lo, hi)
-    }.orElse(
-      // pmin/pmax describe the leading column AT WRITE TIME — once the
-      // leading column has evolved away from the create-time one, the
-      // fallback would compare against a different column's values. An
-      // EXISTING entry with absent bounds means the file's values are
-      // all NULL (NULL partition tuples) — its "" pmin/pmax sentinels
-      // must never masquerade as a real range
-      if (f.stats.keys.exists(_.equalsIgnoreCase(pc))) None
-      else if (pc.equalsIgnoreCase(snap.partitionCol) && leadFallbackSound(snap))
-        Some((f.pmin, f.pmax))
-      else None)
-  }
+                         c: String): Option[(String, String)] =
+    statsOf(snap, f, c).flatMap(st => st.min.zip(st.max))
 
   private[sources] def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -6417,93 +6340,105 @@ object LogTable {
     }
   }
 
-  /** Can `f` possibly hold a row satisfying conjunct `e`? TRUE on
-    * anything the analyzer does not understand — the residual filter
-    * catches those rows; skipping only ever REMOVES provably
-    * non-matching files.
+  /** What a file's stats prove about a predicate: no row can satisfy it
+    * (`Cannot`), some row might (`May`), or every row does (`Must`).
+    * `&&` keeps the weaker answer (a conjunction: `Cannot` wins), `||`
+    * the stronger (a disjunction: `Must` wins).
     */
-  private[sources] def mayMatch(snap: Snapshot, f: LogFile, e: Expression,
-                                zone: String): Boolean = {
-    def colInfo(a: Expression): Option[(DataType, Option[ColStats])] =
+  private[sources] sealed abstract class Verdict(private val rank: Int) {
+    def &&(o: Verdict): Verdict = if (rank <= o.rank) this else o
+    def ||(o: Verdict): Verdict = if (rank >= o.rank) this else o
+  }
+  private[sources] object Verdict {
+    case object Cannot extends Verdict(0)
+    case object May extends Verdict(1)
+    case object Must extends Verdict(2)
+  }
+
+  /** The file-skipping evaluator: what `f`'s stats prove about the
+    * conjunction `cj` (analyzed conjuncts naming logical or physical
+    * columns, possibly dotted struct paths). Every answer but `May` is a
+    * proof: `Cannot` when some conjunct provably matches no row, `Must`
+    * when every conjunct provably matches every row. Anything the
+    * evaluator does not understand answers `May` — the residual filter
+    * or a scan decides those rows. `f`'s stats are PHYSICAL: a caller
+    * counting rows from `Must` must also require that the file carries
+    * no DV.
+    */
+  private[sources] def verdict(snap: Snapshot, f: LogFile,
+                               cj: Seq[Expression], zone: String): Verdict = {
+    var v: Verdict = Verdict.Must
+    val it = cj.iterator
+    while (v != Verdict.Cannot && it.hasNext)
+      v = v && conjunctVerdict(snap, f, it.next(), zone)
+    v
+  }
+
+  /** The files that may hold a row satisfying `cj` — the read, rewrite
+    * and compaction set.
+    */
+  private[sources] def possibleFiles(snap: Snapshot, cj: Seq[Expression],
+                                     zone: String): Seq[LogFile] =
+    snap.files.filter(f => verdict(snap, f, cj, zone) != Verdict.Cannot)
+
+  private def conjunctVerdict(snap: Snapshot, f: LogFile, e: Expression,
+                              zone: String): Verdict = {
+    import Verdict._
+    def of(may: Boolean, must: Boolean): Verdict =
+      if (!may) Cannot else if (must) Must else May
+    // the operand's leaf type (off the physical schema) and its stats;
+    // None ⇒ not a column, or no stats for it ⇒ unknown
+    def colStats(a: Expression): Option[(DataType, ColStats)] =
       attrName(a).flatMap { n =>
-        // logical OR physical name (DML vs FileIndex), possibly a dotted
-        // struct path — resolve to the at-rest physical path, then the
-        // leaf type off the physical schema
-        val pn = snap.physicalOfPath(n)
-        resolvePathIn(snap.physicalSchema, pn)
-          .map { case (_, dt) => (dt,
-            f.stats.collectFirst { case (k, s) if k.equalsIgnoreCase(pn) => s }
-              .orElse(
-                // leading partition column: legacy pmin/pmax double as
-                // stats (null count unknown ⇒ 0 is safe: legacy files
-                // predate NULL partition support, so they hold none).
-                // Disabled once the leading column has EVOLVED away from
-                // the create-time one — the range would describe a
-                // different column.
-                if (pn.equalsIgnoreCase(snap.partitionCol) &&
-                    leadFallbackSound(snap))
-                  Some(ColStats(Some(f.pmin), Some(f.pmax), 0L))
-                else None))
-          }
+        resolvePathIn(snap.physicalSchema, snap.physicalOfPath(n))
+          .flatMap { case (_, dt) => statsOf(snap, f, n).map((dt, _)) }
       }
-    // sign of (stat − literal), None ⇒ unknown ⇒ keep
-    def cmp(dt: DataType, stat: String, l: Literal): Option[Int] =
-      cmpStatLit(dt, stat, l, zone)
-    // each bound test answers Some(false) only when provably impossible
-    def test(a: Expression, l: Literal)(
-        p: (DataType, ColStats) => Option[Boolean]): Boolean =
-      colInfo(a) match {
-        case Some((dt, Some(st))) =>
-          st match {
-            // all-NULL file: no non-null value can satisfy a comparison
-            case ColStats(None, None, _, _, _) => false
-            case _ => p(dt, st).getOrElse(true)
-          }
-        case _ => true // untracked column / no stats ⇒ keep
+    // one comparison against the file's [min, max]: `judge` gets the
+    // signs of (min − l) and (max − l) (None ⇒ incomparable) and says
+    // whether some row may and every row must satisfy it; every row
+    // additionally needs zero NULLs (a NULL row satisfies no comparison)
+    def range(a: Expression, l: Literal)(
+        judge: (Option[Int], Option[Int]) => (Boolean, Boolean)): Verdict =
+      colStats(a) match {
+        case None => May
+        // all-NULL file: no non-null value can satisfy a comparison
+        case Some((_, ColStats(None, None, _, _, _))) => Cannot
+        case Some((dt, st)) =>
+          val (may, must) = judge(st.min.flatMap(cmpStatLit(dt, _, l, zone)),
+            st.max.flatMap(cmpStatLit(dt, _, l, zone)))
+          of(may, must && st.nulls == 0L && st.min.isDefined)
       }
-    def containsLit(dt: DataType, st: ColStats, l: Literal): Option[Boolean] =
-      for {
-        lo <- st.min; hi <- st.max
-        cl <- cmp(dt, lo, l); ch <- cmp(dt, hi, l)
-      } yield cl <= 0 && ch >= 0
+    // a bound met by large values (a > l, a >= l): MAX decides whether
+    // any row may meet it, MIN whether every row does; mirrored for a
+    // bound met by small values
+    def above(a: Expression, l: Literal, ok: Int => Boolean) =
+      range(a, l)((lo, hi) => (hi.forall(ok), lo.exists(ok)))
+    def below(a: Expression, l: Literal, ok: Int => Boolean) =
+      range(a, l)((lo, hi) => (lo.forall(ok), hi.exists(ok)))
+    def equal(a: Expression, l: Literal) = range(a, l) { (lo, hi) =>
+      val ends = lo.zip(hi)
+      (ends.forall { case (x, y) => x <= 0 && y >= 0 },
+        ends.exists { case (x, y) => x == 0 && y == 0 })
+    }
     e match {
-      case EqualTo(a, FoldedLit(l)) if attrName(a).isDefined =>
-        test(a, l)(containsLit(_, _, l))
-      case EqualTo(FoldedLit(l), a) if attrName(a).isDefined =>
-        test(a, l)(containsLit(_, _, l))
-      case GreaterThan(a, FoldedLit(l)) if attrName(a).isDefined => // a > l
-        test(a, l)((dt, st) => st.max.flatMap(cmp(dt, _, l)).map(_ > 0))
-      case GreaterThan(FoldedLit(l), a) if attrName(a).isDefined => // a < l
-        test(a, l)((dt, st) => st.min.flatMap(cmp(dt, _, l)).map(_ < 0))
-      case GreaterThanOrEqual(a, FoldedLit(l)) if attrName(a).isDefined =>
-        test(a, l)((dt, st) => st.max.flatMap(cmp(dt, _, l)).map(_ >= 0))
-      case GreaterThanOrEqual(FoldedLit(l), a) if attrName(a).isDefined =>
-        test(a, l)((dt, st) => st.min.flatMap(cmp(dt, _, l)).map(_ <= 0))
-      case LessThan(a, FoldedLit(l)) if attrName(a).isDefined =>
-        test(a, l)((dt, st) => st.min.flatMap(cmp(dt, _, l)).map(_ < 0))
-      case LessThan(FoldedLit(l), a) if attrName(a).isDefined =>
-        test(a, l)((dt, st) => st.max.flatMap(cmp(dt, _, l)).map(_ > 0))
-      case LessThanOrEqual(a, FoldedLit(l)) if attrName(a).isDefined =>
-        test(a, l)((dt, st) => st.min.flatMap(cmp(dt, _, l)).map(_ <= 0))
-      case LessThanOrEqual(FoldedLit(l), a) if attrName(a).isDefined =>
-        test(a, l)((dt, st) => st.max.flatMap(cmp(dt, _, l)).map(_ >= 0))
-      case In(a, vs) if attrName(a).isDefined && vs.nonEmpty &&
+      case EqualTo(a, FoldedLit(l)) => equal(a, l)
+      case EqualTo(FoldedLit(l), a) => equal(a, l)
+      case GreaterThan(a, FoldedLit(l)) => above(a, l, _ > 0)
+      case GreaterThan(FoldedLit(l), a) => below(a, l, _ < 0)
+      case GreaterThanOrEqual(a, FoldedLit(l)) => above(a, l, _ >= 0)
+      case GreaterThanOrEqual(FoldedLit(l), a) => below(a, l, _ <= 0)
+      case LessThan(a, FoldedLit(l)) => below(a, l, _ < 0)
+      case LessThan(FoldedLit(l), a) => above(a, l, _ > 0)
+      case LessThanOrEqual(a, FoldedLit(l)) => below(a, l, _ <= 0)
+      case LessThanOrEqual(FoldedLit(l), a) => above(a, l, _ >= 0)
+      case In(a, vs) if vs.nonEmpty &&
           vs.forall(FoldedLit.unapply(_).isDefined) =>
-        vs.exists { v =>
-          val l = FoldedLit.unapply(v).get
-          test(a, l)(containsLit(_, _, l))
-        }
-      case IsNull(a) =>
-        colInfo(a) match {
-          case Some((_, Some(st))) => st.nulls > 0
-          case _ => true
-        }
-      case IsNotNull(a) =>
-        colInfo(a) match {
-          case Some((_, Some(st))) => st.min.isDefined
-          case _ => true
-        }
-      case _ => true
+        vs.iterator.map(v => equal(a, FoldedLit.unapply(v).get)).reduce(_ || _)
+      case IsNull(a) => colStats(a).fold[Verdict](May) { case (_, st) =>
+        of(st.nulls > 0, st.nulls == f.rows && st.min.isEmpty) }
+      case IsNotNull(a) => colStats(a).fold[Verdict](May) { case (_, st) =>
+        of(st.min.isDefined, st.nulls == 0L) }
+      case _ => May
     }
   }
 
@@ -6921,8 +6856,9 @@ object LogTable {
         // NULL partition values are FIRST-CLASS (the Delta/Iceberg null
         // partition shape): the file records the column's null count,
         // victim matching and IS NULL skipping consult it, and non-NULL
-        // predicates prune all-NULL files through mayMatch's absent-range
-        // arm — nothing desynchronizes because nothing pretends a range
+        // predicates prune all-NULL files through the evaluator's
+        // absent-range arm ([[verdict]]) — nothing desynchronizes because
+        // nothing pretends a range
         c -> ColStats(mn, mx, nulls,
           ndv = ndvB64.collectFirst {
             case (nc, b) if nc.equalsIgnoreCase(c) => b
@@ -6937,7 +6873,7 @@ object LogTable {
         if (!partitioned) ("", "")
         else {
           // an all-NULL leading column has no range — "" sentinels are
-          // never consulted (statsRange declines the pmin/pmax fallback
+          // never consulted (statsOf declines the pmin/pmax fallback
           // whenever a stats entry exists for the column)
           val lead = tracked.head
           (colStats(lead).min.getOrElse(""), colStats(lead).max.getOrElse(""))

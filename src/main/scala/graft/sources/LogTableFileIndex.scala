@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.StructType
   * with only the files whose typed min/max ranges can match. Data
   * skipping becomes a property of ordinary `df.filter(...)` calls instead
   * of a bespoke `readWhere` entry point (which remains as the
-  * metadata-level API; both share `LogTable.mayMatch`, so they can never
-  * disagree).
+  * metadata-level API; both ask the same `LogTable.verdict`, so they can
+  * never disagree).
   *
   * The listing is METADATA-ONLY: `FileStatus` rows are synthesized from
   * the snapshot's (name, bytes) — the log already knows them — so
@@ -62,8 +62,7 @@ final class LogTableFileIndex(spark: SparkSession, path: String,
     // generated-column implications: a pushed bound on a source column
     // prunes by the derived partition column the query never mentioned
     val cj = pushed ++ LogTable.impliedConjuncts(spark, snap, pushed)
-    val keep = snap.files.filter(f =>
-      cj.forall(c => LogTable.mayMatch(snap, f, c, zone)))
+    val keep = LogTable.possibleFiles(snap, cj, zone)
     Seq(PartitionDirectory(InternalRow.empty,
       keep.map(f => new FileStatus(f.bytes, false, 1, 128L << 20, 0L,
         LogTable.dataPath(path, f.name))).toArray))

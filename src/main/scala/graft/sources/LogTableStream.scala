@@ -130,9 +130,10 @@ final class LogTableStreamSource(spark: SparkSession, path: String,
     // the null slot as garbage (see LogTable.scanFiles)
     val sch = LogTable.nullableSchema(Option(schema).getOrElse(pinnedPhysical))
     // pinned-schema snapshot shell — the TRUE partition columns matter:
-    // mayMatch falls back to (pmin, pmax) for the leading partition
-    // column, so a wrong name here would prune pushed filters on an
-    // unrelated column against the partition bounds. CDC-file shells
+    // the stats resolver (`LogTable.statsOf`) falls back to (pmin, pmax)
+    // for the leading partition column, so a wrong name here would prune
+    // pushed filters on an unrelated column against the partition
+    // bounds. CDC-file shells
     // pass pcols = Nil: their entries carry NO partition bounds (pmin =
     // pmax = ""), and the fallback would read those empties as real
     // bounds and wrongly prune a filtered change feed.
