@@ -40,9 +40,8 @@ object CkptMillionProbe {
           "k" -> LogTable.ColStats(
             Some(lo.toString), Some((lo + 99L).toString), 0L)))
     }
-    LogTable.commit(spark, dir, 2L, snap0.schemaDdl, snap0.partitionCols,
-      snap0.statsCols, adds, Nil, operation = "FABRICATE",
-      properties = snap0.properties)
+    LogTable.commit(spark, dir, 2L,
+      LogTable.Commit.of(snap0, "FABRICATE").copy(adds = adds))
 
     def coldLoad(): Double = {
       var best = Double.MaxValue

@@ -95,7 +95,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * current version and must out-wait in-flight readers/writers
   * (`olderThanMs`).
   */
-object LogTable {
+object LogTable extends org.apache.spark.internal.Logging {
 
   /** Per-column file statistics: min/max rendered as strings (compared
     * TYPED against the schema — see [[Snapshot.schema]]), and the
@@ -1232,12 +1232,12 @@ object LogTable {
         case (k, st) if k.equalsIgnoreCase(RowIdCol) => st.max
       }.flatten.flatMap(v => scala.util.Try(v.toLong).toOption))
         .foldLeft(0L)((a, b) => math.max(a, b + 1L))).toString)
-    commit(spark, path, 1L, df.schema.toDDL, partitionCols, statsCols1, adds,
-      Nil, bloomCols = bloomFilterCols, operation = "CREATE",
+    commit(spark, path, 1L, Commit("CREATE", df.schema.toDDL, partitionCols,
+      statsCols1, bloomFilterCols, adds = adds,
       properties = tableProperties ++ idSeed ++ rtSeed ++
         generatedColumns.map {
           case (c, g) => (GenPropPrefix + c) -> g
-        })
+        }))
     1L
   }
 
@@ -1475,8 +1475,8 @@ object LogTable {
     val props = tableProperties ++
       (if (hiveCols.nonEmpty)
         Map(ConvertHiveProp -> partitionCols.mkString(",")) else Map.empty)
-    commit(spark, path, 1L, schema.toDDL, partitionCols,
-      statsCols, byPath, Nil, operation = "CONVERT", properties = props)
+    commit(spark, path, 1L, Commit("CONVERT", schema.toDDL, partitionCols,
+      statsCols, adds = byPath, properties = props))
     1L
   }
 
@@ -1807,7 +1807,7 @@ object LogTable {
     snapshot(spark, path).txns.get(appId)
 
   /** SNAPSHOT CACHE — the driver-side cost that actually compounds at
-    * scale: every operation (reads, victim planning, every retry loop)
+    * scale: every operation (reads, victim planning, every transaction attempt)
     * re-derives the snapshot, and a naive derivation re-parses every
     * commit since the newest checkpoint — O(commits²) small-file reads
     * across a write sequence, and at a million-file table a full replay
@@ -2106,86 +2106,78 @@ object LogTable {
     require(maxFilesPerPartition > 0, "need a positive file budget")
     require(zorderBy.isEmpty || (zorderBy.size >= 2 && zorderBy.size <= 4),
       s"log table $path: zorderBy interleaves 2 to 4 dimensions")
-    val snap = snapshot(spark, path)
-    (clusterBy ++ zorderBy).foreach { c0 =>
-      val c = snap.physicalOf(c0) // at-rest lists carry physical names
-      require((snap.partitionCols ++ snap.statsCols).exists(_.equalsIgnoreCase(c)),
-        s"log table $path: cluster/z-order column `$c` must be " +
-          "stats-declared (create-time statsCols) — the layout exists to " +
-          "make ITS min/max ranges prune")
-    }
-    // `OPTIMIZE ... WHERE` scopes maintenance to the files that MAY hold
-    // matching rows (inclusion is conservative — compacting a
-    // boundary file that turns out not to match is harmless; at 100 TB
-    // the point is compacting yesterday's partition without listing,
-    // judging, or rewriting the other 3,000 days)
-    val zoneW = spark.sessionState.conf.sessionLocalTimeZone
-    val candidates = where match {
-      case None => snap.files
-      case Some(p) =>
-        possibleFiles(snap, analyzedConjuncts(spark, snap, p), zoneW)
-    }
-    val countByValue = scala.collection.mutable.Map.empty[String, Int]
-    candidates.foreach { f =>
-      // a range file adds debt to both endpoints (values between the
-      // endpoints are unknown without reading — endpoints are the
-      // honest lower bound)
-      (Set(f.pmin) ++ Set(f.pmax)).foreach { v =>
-        countByValue(v) = countByValue.getOrElse(v, 0) + 1
+    // maintenance, so no retry: a lost race drops the staged files and
+    // rethrows — the next scheduled run re-decides from the winner's
+    // snapshot
+    transact(spark, path, maxRetries = 0) { tx =>
+      val snap = tx.snap
+      (clusterBy ++ zorderBy).foreach { c0 =>
+        val c = snap.physicalOf(c0) // at-rest lists carry physical names
+        require((snap.partitionCols ++ snap.statsCols).exists(_.equalsIgnoreCase(c)),
+          s"log table $path: cluster/z-order column `$c` must be " +
+            "stats-declared (create-time statsCols) — the layout exists to " +
+            "make ITS min/max ranges prune")
+      }
+      // `OPTIMIZE ... WHERE` scopes maintenance to the files that MAY hold
+      // matching rows (inclusion is conservative — compacting a
+      // boundary file that turns out not to match is harmless; at 100 TB
+      // the point is compacting yesterday's partition without listing,
+      // judging, or rewriting the other 3,000 days)
+      val zoneW = spark.sessionState.conf.sessionLocalTimeZone
+      val candidates = where match {
+        case None => snap.files
+        case Some(p) =>
+          possibleFiles(snap, analyzedConjuncts(spark, snap, p), zoneW)
+      }
+      val countByValue = scala.collection.mutable.Map.empty[String, Int]
+      candidates.foreach { f =>
+        // a range file adds debt to both endpoints (values between the
+        // endpoints are unknown without reading — endpoints are the
+        // honest lower bound)
+        (Set(f.pmin) ++ Set(f.pmax)).foreach { v =>
+          countByValue(v) = countByValue.getOrElse(v, 0) + 1
+        }
+      }
+      val over = countByValue.filter(_._2 > maxFilesPerPartition).keySet
+      // SPEC DEBT: a file written under an OLDER partition spec carries no
+      // stats for the current leading column — it prunes worse than its
+      // neighbors on the new spec, so OPTIMIZE rewrites it into the
+      // current layout (this is how a partition evolution migrates data:
+      // incrementally, at the operator's leisure, never inside the
+      // evolution commit itself)
+      // (an EXISTING entry with absent bounds is an all-NULL-lead file
+      // under the CURRENT spec, not debt — rewriting it would produce
+      // another all-NULL file, forever: non-convergent)
+      val stale =
+        if (snap.partitionCols.isEmpty) Nil
+        else candidates.filter(f => statsOf(snap, f, snap.partitionCol).isEmpty)
+      if (over.isEmpty && stale.isEmpty) Done(-1L) else {
+        val victims = (candidates.filter(f =>
+          over.contains(f.pmin) || over.contains(f.pmax)) ++ stale).distinct
+        // EXPLICIT output count, or the default shuffle-partition fan-out
+        // would re-fragment exactly what we are defragmenting: half the
+        // budget per value involved, so the rewritten partitions land well
+        // under budget and the next call is a metadata no-op (convergence)
+        val valuesInvolved = victims.iterator
+          .flatMap(f => Iterator(f.pmin, f.pmax)).toSet
+        val target = math.max(1,
+          valuesInvolved.size * math.max(1, maxFilesPerPartition / 2))
+        val rows = readFiles(spark, path, snap, victims)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val adds =
+          try tx.stageFiles(writeDataFiles(spark, path, rows, snap.partitionCols,
+            snap.statsCols, Some(target), clusterBy.map(snap.physicalOf),
+            bloomCols = snap.bloomCols,
+            zorderBy = zorderBy.map(snap.physicalOf), colMap = snap.colMap, nestMaps = snap.nestMaps,
+            ndvCols = ndvColsOf(snap.properties),
+            histCols = histColsOf(snap.properties)))
+          finally { rows.unpersist(): Unit }
+        // dataChange = false: rows were REARRANGED, not changed — streaming
+        // consumers of the change feed skip this commit entirely
+        tx.publish(Commit.of(snap, "COMPACT").copy(adds = adds,
+          removes = victims.map(_.name), dataChange = false))
       }
     }
-    val over = countByValue.filter(_._2 > maxFilesPerPartition).keySet
-    // SPEC DEBT: a file written under an OLDER partition spec carries no
-    // stats for the current leading column — it prunes worse than its
-    // neighbors on the new spec, so OPTIMIZE rewrites it into the
-    // current layout (this is how a partition evolution migrates data:
-    // incrementally, at the operator's leisure, never inside the
-    // evolution commit itself)
-    // (an EXISTING entry with absent bounds is an all-NULL-lead file
-    // under the CURRENT spec, not debt — rewriting it would produce
-    // another all-NULL file, forever: non-convergent)
-    val stale =
-      if (snap.partitionCols.isEmpty) Nil
-      else candidates.filter(f => statsOf(snap, f, snap.partitionCol).isEmpty)
-    if (over.isEmpty && stale.isEmpty) return -1L
-    val victims = (candidates.filter(f =>
-      over.contains(f.pmin) || over.contains(f.pmax)) ++ stale).distinct
-    // EXPLICIT output count, or the default shuffle-partition fan-out
-    // would re-fragment exactly what we are defragmenting: half the
-    // budget per value involved, so the rewritten partitions land well
-    // under budget and the next call is a metadata no-op (convergence)
-    val valuesInvolved = victims.iterator
-      .flatMap(f => Iterator(f.pmin, f.pmax)).toSet
-    val target = math.max(1,
-      valuesInvolved.size * math.max(1, maxFilesPerPartition / 2))
-    val rows = readFiles(spark, path, snap, victims)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val adds =
-      try writeDataFiles(spark, path, rows, snap.partitionCols,
-        snap.statsCols, Some(target), clusterBy.map(snap.physicalOf),
-        bloomCols = snap.bloomCols,
-        zorderBy = zorderBy.map(snap.physicalOf), colMap = snap.colMap, nestMaps = snap.nestMaps,
-        ndvCols = ndvColsOf(snap.properties),
-        histCols = histColsOf(snap.properties))
-      finally { rows.unpersist(): Unit }
-    try {
-      // dataChange = false: rows were REARRANGED, not changed — streaming
-      // consumers of the change feed skip this commit entirely
-      commit(spark, path, snap.version + 1, snap.schemaDdl, snap.partitionCols,
-        snap.statsCols, adds, victims.map(_.name), dataChange = false,
-        bloomCols = snap.bloomCols, operation = "COMPACT",
-        constraints = snap.constraints,
-          properties = snap.properties)
-    } catch {
-      case e: CommitConflictException =>
-        // same discipline as upsert's losing race: our files are invisible,
-        // drop them eagerly; compaction is maintenance, so no retry — the
-        // next scheduled run re-decides from the winner's snapshot
-        val fs = fsOf(spark, path)
-        adds.foreach(a => fs.delete(new Path(path, a.name), false): Unit)
-        throw e
-    }
-    snap.version + 1
   }
 
   /** Delete the commits the newest checkpoint made redundant. Time travel
@@ -2495,8 +2487,8 @@ object LogTable {
     * whose per-file ranges MAY hold a matching row are rewritten, their
     * non-matching rider rows carry through, every other file is
     * untouched metadata), no-op without committing when the stats prove
-    * nothing matches, and on a losing commit race drop the invisible
-    * files and retry the whole rewrite against the winner's snapshot.
+    * nothing matches, and on a losing commit race retry the whole
+    * rewrite against the winner's snapshot ([[transact]]).
     * `transform` turns the victim rows into their replacement and names
     * the schema DDL the commit carries.
     */
@@ -2505,61 +2497,32 @@ object LogTable {
                           (transform: (Snapshot, DataFrame) => (DataFrame, String))
                           (cdcOf: (Snapshot, DataFrame) => DataFrame)
       : Long = {
-    val fs = fsOf(spark, path)
     val zone = spark.sessionState.conf.sessionLocalTimeZone
-    var attempt = 0
-    while (true) {
-      val snap = snapshot(spark, path)
+    transact(spark, path, maxRetries) { tx =>
+      val snap = tx.snap
       val cj = analyzedConjuncts(spark, snap, predicate)
       val victims = possibleFiles(snap, cj, zone)
-      if (victims.isEmpty) return -1L
-      val (rewritten, ddl) = transform(snap, readFiles(spark, path, snap, victims))
-      // an UPDATE can manufacture violating rows; a DELETE only drops
-      if (op == "UPDATE") enforceConstraints(path, snap, rewritten)
-      // row-level CDC (cdc.enabled): one extra pass over the victims,
-      // filtered to the rows that actually change — feed volume at read
-      // time becomes O(changed rows), not O(rewritten bytes). The CDC
-      // write and the data rewrite are independent jobs into disjoint
-      // tmp dirs — overlapped (guide §2.6), like the upsert path.
-      val cdcF: Option[java.util.concurrent.Future[Seq[CdcFile]]] =
-        if (!cdcEnabled(snap.properties)) None
-        else Some(submitOverlapped(spark) {
-          writeCdcFiles(spark, path,
-            cdcOf(snap, readFiles(spark, path, snap, victims)), snap)
-        })
-      val adds =
-        try writeDataFiles(spark, path, rewritten, snap.partitionCols,
-          snap.statsCols, bloomCols = snap.bloomCols, colMap = snap.colMap, nestMaps = snap.nestMaps,
-          ndvCols = ndvColsOf(snap.properties),
-          histCols = histColsOf(snap.properties),
-          sizeHintBytes = Some(victims.iterator.map(_.bytes).sum))
-        catch { case t: Throwable =>
-          cdcF.foreach(f => try f.get() catch { case _: Throwable => () })
-          throw t
+      if (victims.isEmpty) Done(-1L) else {
+        val (rewritten, ddl) =
+          transform(snap, readFiles(spark, path, snap, victims))
+        // an UPDATE can manufacture violating rows; a DELETE only drops
+        if (op == "UPDATE") enforceConstraints(path, snap, rewritten)
+        // row-level CDC (cdc.enabled): one extra pass over the victims,
+        // filtered to the rows that actually change — feed volume at read
+        // time becomes O(changed rows), not O(rewritten bytes)
+        val cdcRows = Option.when(cdcEnabled(snap.properties))(() =>
+          cdcOf(snap, readFiles(spark, path, snap, victims)))
+        val (adds, cdcFiles) = writeWithCdc(tx, snap, cdcRows) {
+          writeDataFiles(spark, path, rewritten, snap.partitionCols,
+            snap.statsCols, bloomCols = snap.bloomCols, colMap = snap.colMap, nestMaps = snap.nestMaps,
+            ndvCols = ndvColsOf(snap.properties),
+            histCols = histColsOf(snap.properties),
+            sizeHintBytes = Some(victims.iterator.map(_.bytes).sum))
         }
-      val cdcFiles =
-        try cdcF.map(_.get()).getOrElse(Nil)
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
-      try {
-        commit(spark, path, snap.version + 1, ddl,
-          snap.partitionCols, snap.statsCols, adds, victims.map(_.name),
-          bloomCols = snap.bloomCols, operation = op,
-          constraints = snap.constraints,
-          properties = snap.properties, cdc = cdcFiles)
-        return snap.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          adds.foreach(a => fs.delete(new Path(path, a.name), false): Unit)
-          cdcFiles.foreach(c =>
-            fs.delete(dataPath(path, c.name), false): Unit)
-          attempt += 1
-          if (attempt > maxRetries) throw e
+        tx.publish(Commit.of(snap, op).copy(schemaDdl = ddl, adds = adds,
+          removes = victims.map(_.name), cdc = cdcFiles))
       }
     }
-    -1L // unreachable
   }
 
   /** Predicate DELETE as one log transaction — the GDPR-class operation
@@ -2780,11 +2743,9 @@ object LogTable {
   private def dvMarkWhere(spark: SparkSession, path: String,
                           predicate: Column, maxRetries: Int,
                           set: Option[Map[String, Column]]): Long = {
-    val fs = fsOf(spark, path)
     val zone = spark.sessionState.conf.sessionLocalTimeZone
-    var attempt = 0
-    while (true) {
-      val snap = snapshot(spark, path)
+    transact(spark, path, maxRetries) { tx =>
+      val snap = tx.snap
       require(convertHiveColsOf(snap.properties).isEmpty,
         s"log table $path: deletion vectors are unsupported while " +
           "convert.hive directory-valued partitions exist — run " +
@@ -2796,107 +2757,91 @@ object LogTable {
           .map(f => assignedCol(s, f, None)): _*)
       val cj = analyzedConjuncts(spark, snap, predicate)
       val victims = possibleFiles(snap, cj, zone)
-      if (victims.isEmpty) return -1L
-      // the victims' LIVE rows with their physical positions attached
-      // (scan under PHYSICAL names, alias logical — predicate and SET
-      // expressions below speak logical)
-      val raw = toLogical(snap,
-        withDvHelpers(scanFiles(spark, path, snap.physicalSchema, victims,
-          snap.partitionCols, snap.statsCols, Some(snap.properties))),
-        extras = Seq("__gdv_file", "__gdv_idx"))
-      val live = antiJoinDv(raw, dvPairs(spark, path, victims),
-        victims.iterator.flatMap(_.dv).map(_.deleted).sum,
-        dropHelpers = false)
-      val hit = live.filter(coalesce(predicate, lit(false)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      if (victims.isEmpty) Done(-1L) else {
+        // the victims' LIVE rows with their physical positions attached
+        // (scan under PHYSICAL names, alias logical — predicate and SET
+        // expressions below speak logical)
+        val raw = toLogical(snap,
+          withDvHelpers(scanFiles(spark, path, snap.physicalSchema, victims,
+            snap.partitionCols, snap.statsCols, Some(snap.properties))),
+          extras = Seq("__gdv_file", "__gdv_idx"))
+        val live = antiJoinDv(raw, dvPairs(spark, path, victims),
+          victims.iterator.flatMap(_.dv).map(_.deleted).sum,
+          dropHelpers = false)
+        val hit = tx.persist(live.filter(coalesce(predicate, lit(false))))
         val marked = hit.select(col("__gdv_file").as("file"),
           col("__gdv_idx").as("row_index"))
         val perFile = marked.groupBy(col("file")).count()
           .collect() // bounded: one row per victim file
           .map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (perFile.isEmpty) return -1L
-        // __gdv_file carries BASE names; a clone's log names are
-        // absolute URIs — normalize like dvPairs does, or a DV DELETE
-        // on a clone matches rows yet commits a no-op (and a DV UPDATE
-        // adds transformed rows without killing the old positions)
-        def base(n: String): String = new Path(n).getName
-        val affected = victims.filter(f => perFile.contains(base(f.name)))
-        def newDeleted(f: LogFile): Long =
-          perFile(base(f.name)) + f.dv.map(_.deleted).getOrElse(0L)
-        val (fully, partial) = affected.partition(f => newDeleted(f) == f.rows)
-        val _ = fully // removed without replacement — no vector to carry
-        // ONE new sidecar holds every partial file's COMPLETE new vector
-        // (old rows copied forward + this transaction's marks)
-        val sidecar: Option[String] =
-          if (partial.isEmpty) None
-          else {
-            val names = partial.map(f => base(f.name))
-            Some(writeDvFile(spark, path,
-              dvPairs(spark, path, partial)
-                .unionByName(marked.filter(col("file").isin(names: _*)))
-                .distinct()))
-          }
-        // UPDATE mode: matched rows, transformed, land in fresh files
-        val newFiles: Seq[LogFile] = set match {
-          case Some(s) =>
-            val assigned = applySet(s)(hit.drop("__gdv_file", "__gdv_idx"))
-            enforceConstraints(path, snap, assigned)
-            writeDataFiles(spark, path, assigned,
-              snap.partitionCols, snap.statsCols,
-              bloomCols = snap.bloomCols, colMap = snap.colMap, nestMaps = snap.nestMaps,
-              ndvCols = ndvColsOf(snap.properties),
-        histCols = histColsOf(snap.properties))
-          case None => Nil
-        }
-        val ddl = set match {
-          // unconditional probe: every rewritten row applies the expr
-          case Some(s) => widenedDdl(spark, snap, s, applySet(s))
-          case None => snap.schemaDdl
-        }
-        val adds = newFiles ++ partial.map(f =>
-          f.copy(dv = Some(DvDescriptor(sidecar.get, newDeleted(f)))))
-        // row-level CDC off the already-persisted hit set: the marked
-        // rows ARE the change — a DV delete's feed then costs the
-        // deleted rows, never the whole file's delete+insert pair
-        val cdcFiles =
-          if (!cdcEnabled(snap.properties)) Nil
-          else {
-            val preRows = hit.drop("__gdv_file", "__gdv_idx")
-            val cdcDf = set match {
-              case Some(s) =>
-                preRows.withColumn("_change_type", lit("update_preimage"))
-                  .unionByName(applySet(s)(preRows)
-                    .withColumn("_change_type", lit("update_postimage")))
-              case None =>
-                preRows.withColumn("_change_type", lit("delete"))
+        if (perFile.isEmpty) Done(-1L) else {
+          // __gdv_file carries BASE names; a clone's log names are
+          // absolute URIs — normalize like dvPairs does, or a DV DELETE
+          // on a clone matches rows yet commits a no-op (and a DV UPDATE
+          // adds transformed rows without killing the old positions)
+          def base(n: String): String = new Path(n).getName
+          val affected = victims.filter(f => perFile.contains(base(f.name)))
+          def newDeleted(f: LogFile): Long =
+            perFile(base(f.name)) + f.dv.map(_.deleted).getOrElse(0L)
+          // fully-deleted files are removed without replacement — no
+          // vector to carry
+          val partial = affected.filterNot(f => newDeleted(f) == f.rows)
+          // ONE new sidecar holds every partial file's COMPLETE new vector
+          // (old rows copied forward + this transaction's marks)
+          val sidecar: Option[String] =
+            if (partial.isEmpty) None
+            else {
+              val names = partial.map(f => base(f.name))
+              Some(tx.stageSidecar(writeDvFile(spark, path,
+                dvPairs(spark, path, partial)
+                  .unionByName(marked.filter(col("file").isin(names: _*)))
+                  .distinct())))
             }
-            writeCdcFiles(spark, path, cdcDf, snap)
+          // UPDATE mode: matched rows, transformed, land in fresh files
+          val newFiles: Seq[LogFile] = set match {
+            case Some(s) =>
+              val assigned = applySet(s)(hit.drop("__gdv_file", "__gdv_idx"))
+              enforceConstraints(path, snap, assigned)
+              tx.stageFiles(writeDataFiles(spark, path, assigned,
+                snap.partitionCols, snap.statsCols,
+                bloomCols = snap.bloomCols, colMap = snap.colMap, nestMaps = snap.nestMaps,
+                ndvCols = ndvColsOf(snap.properties),
+                histCols = histColsOf(snap.properties)))
+            case None => Nil
           }
-        try {
-          commit(spark, path, snap.version + 1, ddl, snap.partitionCols,
-            snap.statsCols, adds, affected.map(_.name),
-            bloomCols = snap.bloomCols,
-            operation = if (set.isDefined) "UPDATE" else "DELETE",
-            constraints = snap.constraints,
-            // deletion vectors are a reader-level-2 feature: an older
-            // reader would surface the marked rows as live
-            properties = ensureProtocol(snap.properties, 2),
-            cdc = cdcFiles)
-          return snap.version + 1
-        } catch {
-          case e: CommitConflictException =>
-            sidecar.foreach(n => fs.delete(new Path(path, n), false): Unit)
-            newFiles.foreach(a =>
-              fs.delete(new Path(path, a.name), false): Unit)
-            cdcFiles.foreach(c =>
-              fs.delete(dataPath(path, c.name), false): Unit)
-            attempt += 1
-            if (attempt > maxRetries) throw e
+          val ddl = set match {
+            // unconditional probe: every rewritten row applies the expr
+            case Some(s) => widenedDdl(spark, snap, s, applySet(s))
+            case None => snap.schemaDdl
+          }
+          val adds = newFiles ++ partial.map(f =>
+            f.copy(dv = Some(DvDescriptor(sidecar.get, newDeleted(f)))))
+          // row-level CDC off the already-persisted hit set: the marked
+          // rows ARE the change — a DV delete's feed then costs the
+          // deleted rows, never the whole file's delete+insert pair
+          val cdcFiles =
+            if (!cdcEnabled(snap.properties)) Nil
+            else {
+              val preRows = hit.drop("__gdv_file", "__gdv_idx")
+              val cdcDf = set match {
+                case Some(s) =>
+                  preRows.withColumn("_change_type", lit("update_preimage"))
+                    .unionByName(applySet(s)(preRows)
+                      .withColumn("_change_type", lit("update_postimage")))
+                case None =>
+                  preRows.withColumn("_change_type", lit("delete"))
+              }
+              tx.stageCdc(writeCdcFiles(spark, path, cdcDf, snap))
+            }
+          tx.publish(Commit.of(snap, if (set.isDefined) "UPDATE" else "DELETE")
+            .copy(schemaDdl = ddl, adds = adds, removes = affected.map(_.name),
+              // deletion vectors are a reader-level-2 feature: an older
+              // reader would surface the marked rows as live
+              properties = ensureProtocol(snap.properties, 2),
+              cdc = cdcFiles))
         }
-      } finally { hit.unpersist(): Unit }
+      }
     }
-    -1L // unreachable
   }
 
   /** Persist one transaction's deletion-vector rows as a single sidecar
@@ -2938,15 +2883,16 @@ object LogTable {
     val fs = fsOf(spark, path)
     val tmp = new Path(path,
       "_tmp_" + java.util.UUID.randomUUID().toString.take(8))
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp).iterator.map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new java.io.IOException(s"no parquet output under $tmp"))
-    val name = prefix + java.util.UUID.randomUUID().toString.take(12) + ".parquet"
-    if (!fs.rename(part, new Path(path, name)))
-      throw new java.io.IOException(s"rename $part -> $name failed")
-    fs.delete(tmp, true): Unit
-    name
+    try {
+      df.write.mode("overwrite").parquet(tmp.toString)
+      val part = fs.listStatus(tmp).iterator.map(_.getPath)
+        .find(_.getName.endsWith(".parquet"))
+        .getOrElse(throw new java.io.IOException(s"no parquet output under $tmp"))
+      val name = prefix + java.util.UUID.randomUUID().toString.take(12) + ".parquet"
+      if (!fs.rename(part, new Path(path, name)))
+        throw new java.io.IOException(s"rename $part -> $name failed")
+      name
+    } finally { fs.delete(tmp, true): Unit }
   }
 
   /** Materialize every deletion vector: rewrite each DV'd file's LIVE
@@ -2957,36 +2903,22 @@ object LogTable {
     * version, or -1 when no live file carries a vector.
     */
   def purgeDeletes(spark: SparkSession, path: String,
-                   maxRetries: Int = 3): Long = {
-    val fs = fsOf(spark, path)
-    var attempt = 0
-    while (true) {
-      val snap = snapshot(spark, path)
+                   maxRetries: Int = 3): Long =
+    transact(spark, path, maxRetries) { tx =>
+      val snap = tx.snap
       val victims = snap.files.filter(_.dv.isDefined)
-      if (victims.isEmpty) return -1L
-      val adds = writeDataFiles(spark, path,
-        readFiles(spark, path, snap, victims),
-        snap.partitionCols, snap.statsCols, bloomCols = snap.bloomCols,
-        colMap = snap.colMap, nestMaps = snap.nestMaps,
-            ndvCols = ndvColsOf(snap.properties),
-        histCols = histColsOf(snap.properties),
-        sizeHintBytes = Some(victims.iterator.map(_.bytes).sum))
-      try {
-        commit(spark, path, snap.version + 1, snap.schemaDdl,
-          snap.partitionCols, snap.statsCols, adds, victims.map(_.name),
-          dataChange = false, bloomCols = snap.bloomCols,
-          operation = "PURGE", constraints = snap.constraints,
-          properties = snap.properties)
-        return snap.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          adds.foreach(a => fs.delete(new Path(path, a.name), false): Unit)
-          attempt += 1
-          if (attempt > maxRetries) throw e
+      if (victims.isEmpty) Done(-1L) else {
+        val adds = tx.stageFiles(writeDataFiles(spark, path,
+          readFiles(spark, path, snap, victims),
+          snap.partitionCols, snap.statsCols, bloomCols = snap.bloomCols,
+          colMap = snap.colMap, nestMaps = snap.nestMaps,
+          ndvCols = ndvColsOf(snap.properties),
+          histCols = histColsOf(snap.properties),
+          sizeHintBytes = Some(victims.iterator.map(_.bytes).sum)))
+        tx.publish(Commit.of(snap, "PURGE").copy(adds = adds,
+          removes = victims.map(_.name), dataChange = false))
       }
     }
-    -1L // unreachable
-  }
 
   /** RESTORE the table to an earlier version AS A NEW COMMIT — the
     * operational undo for a bad merge/delete: metadata-only (no data
@@ -3002,14 +2934,14 @@ object LogTable {
   def restore(spark: SparkSession, path: String, toVersion: Long,
               maxRetries: Int = 3): Long = {
     val fs = fsOf(spark, path)
-    var attempt = 0
-    while (true) {
-      val cur = snapshot(spark, path)
+    transact(spark, path, maxRetries) { tx =>
+      val cur = tx.snap
       require(toVersion >= 1 && toVersion <= cur.version,
         s"log table $path: cannot restore to $toVersion " +
           s"(current version ${cur.version})")
-      if (toVersion == cur.version) return -1L
-      val target = snapshot(spark, path, Some(toVersion))
+      val target =
+        if (toVersion == cur.version) cur
+        else snapshot(spark, path, Some(toVersion))
       def ident(f: LogFile) = (f.name, f.dv.map(_.name))
       val curIds = cur.files.map(ident).toSet
       val targetIds = target.files.map(ident).toSet
@@ -3025,27 +2957,20 @@ object LogTable {
           // registry, generators) — a property-only difference is a
           // real restore, not a no-op
           target.properties == cur.properties &&
-          target.constraints == cur.constraints) return -1L
-      val missing = adds.flatMap(f => f.name +: f.dv.map(_.name).toList)
-        .distinct.filterNot(n => fs.exists(dataPath(path, n)))
-      require(missing.isEmpty,
-        s"log table $path: cannot restore to $toVersion — ${missing.size} " +
-          s"file(s) already reclaimed by vacuum " +
-          s"(e.g. ${missing.take(3).mkString(", ")})")
-      try {
-        commit(spark, path, cur.version + 1, target.schemaDdl,
-          target.partitionCols, target.statsCols, adds, removes,
-          bloomCols = target.bloomCols, operation = "RESTORE",
-          constraints = target.constraints,
-          properties = target.properties)
-        return cur.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
+          target.constraints == cur.constraints) Done(-1L)
+      else {
+        val missing = adds.flatMap(f => f.name +: f.dv.map(_.name).toList)
+          .distinct.filterNot(n => fs.exists(dataPath(path, n)))
+        require(missing.isEmpty,
+          s"log table $path: cannot restore to $toVersion — ${missing.size} " +
+            s"file(s) already reclaimed by vacuum " +
+            s"(e.g. ${missing.take(3).mkString(", ")})")
+        // the re-added files are the target's own, never staged: a lost
+        // race leaves them alone
+        tx.publish(Commit.of(target, "RESTORE").copy(adds = adds,
+          removes = removes))
       }
     }
-    -1L // unreachable
   }
 
   /** SHALLOW CLONE — a new log table at `dst` whose version 1 REFERENCES
@@ -3095,13 +3020,11 @@ object LogTable {
       val adds = snap.files.map(f => f.copy(name = abs(f.name),
         dv = f.dv.map(d => d.copy(name = abs(d.name)))))
       dfs.mkdirs(logDir(dst)): Unit
-      commit(spark, dst, 1L, snap.schemaDdl, snap.partitionCols,
-        snap.statsCols, adds, Nil, bloomCols = snap.bloomCols,
-        operation = "CLONE", constraints = snap.constraints,
+      commit(spark, dst, 1L, Commit.of(snap, "CLONE").copy(adds = adds,
         properties = (snap.properties - MvAutoRefreshProp) +
           ("clone.source" ->
             sfs.makeQualified(new Path(src)).toUri.toString) ++
-          extraPropsOf(snap))
+          extraPropsOf(snap)))
     } catch {
       case scala.util.control.NonFatal(e) =>
         sfs.delete(marker, false): Unit // failed clone frees vacuum now
@@ -3165,7 +3088,6 @@ object LogTable {
     val base = bSnap.properties.get(BranchBaseProp).map(_.toLong)
       .getOrElse(throw new IllegalArgumentException(
         s"$bp is not a branch of $path (no ${BranchBaseProp})"))
-    val mSnap = snapshot(spark, path)
     // translate the branch's entries into main's namespace: inherited
     // source files (absolute URIs under main) back to their RELATIVE
     // names (so removes/adds line up with main's own entries); branch-
@@ -3183,32 +3105,29 @@ object LogTable {
     val translated = bSnap.files.map(f => f.copy(name = toMain(f.name),
       dv = f.dv.map(d => d.copy(name = toMain(d.name)))))
     def ident(f: LogFile) = (f.name, f.dv.map(_.name))
-    if (mSnap.version != base)
-      return publishRebase(spark, path, name, bp, bSnap, base, mSnap,
-        translated)
-    val mIds = mSnap.files.map(ident).toSet
-    val tIds = translated.map(ident).toSet
-    val adds = translated.filterNot(f => mIds.contains(ident(f)))
-    val removes = mSnap.files.filterNot(f => tIds.contains(ident(f)))
-      .map(_.name)
-    try commit(spark, path, mSnap.version + 1, bSnap.schemaDdl,
-      bSnap.partitionCols, bSnap.statsCols, adds, removes,
-      bloomCols = bSnap.bloomCols, operation = "PUBLISH_BRANCH",
-      constraints = bSnap.constraints,
-      // the branch's clone.source points at MAIN (the clone machinery
-      // wrote it) — drop it, but RESTORE main's own provenance if main
-      // is itself a clone (renameTable's marker repointing reads it)
-      properties = bSnap.properties - BranchBaseProp - "clone.source" ++
-        mSnap.properties.get("clone.source").map("clone.source" -> _))
-    catch {
-      // a writer that beat the publish is a MAIN ADVANCE — retry through
-      // the rebase path exactly like a pre-checked advance (disjoint
-      // work lands, overlapping work refuses loud)
-      case _: CommitConflictException =>
-        return publishRebase(spark, path, name, bp, bSnap, base,
-          snapshot(spark, path), translated)
+    def rebase(): Long =
+      publishRebase(spark, path, name, bSnap, base, translated)
+    transact(spark, path, maxRetries = 0) { tx =>
+      val mSnap = tx.snap
+      if (mSnap.version != base) Done(rebase())
+      else {
+        val mIds = mSnap.files.map(ident).toSet
+        val tIds = translated.map(ident).toSet
+        // a writer that beats the publish is a MAIN ADVANCE — the lost
+        // race hands off to the rebase path exactly like a pre-checked
+        // advance (disjoint work lands, overlapping work refuses loud)
+        tx.publish(Commit.of(bSnap, "PUBLISH_BRANCH").copy(
+          adds = translated.filterNot(f => mIds.contains(ident(f))),
+          removes = mSnap.files.filterNot(f => tIds.contains(ident(f)))
+            .map(_.name),
+          // the branch's clone.source points at MAIN (the clone machinery
+          // wrote it) — drop it, but RESTORE main's own provenance if main
+          // is itself a clone (renameTable's marker repointing reads it)
+          properties = bSnap.properties - BranchBaseProp - "clone.source" ++
+            mSnap.properties.get("clone.source").map("clone.source" -> _)),
+          recover = Some(rebase()))
+      }
     }
-    mSnap.version + 1
   }
 
   /** Publish a branch whose base main has moved past — the Iceberg
@@ -3227,8 +3146,7 @@ object LogTable {
     * value spaces may collide).
     */
   private def publishRebase(spark: SparkSession, path: String, name: String,
-                            bp: String, bSnap: Snapshot, base: Long,
-                            mSnap0: Snapshot,
+                            bSnap: Snapshot, base: Long,
                             translated: Seq[LogFile]): Long = {
     def refuse(why: String): Nothing =
       throw new IllegalArgumentException(
@@ -3247,9 +3165,13 @@ object LogTable {
     val bRemoves = baseSnap.files.filterNot(f => bIds.contains(ident(f)))
     val branchTouched = (bAdds ++ bRemoves).map(_.name).toSet
     val volatileProps = Set(IdentityNextProp, BranchBaseProp, "clone.source")
-    var attempt = 0
-    var mSnap = mSnap0
-    while (true) {
+    // a racing writer that moves main again is re-judged on the next
+    // attempt — the new commits may still be disjoint
+    transact(spark, path, maxRetries = 3, giveUp = e =>
+      new IllegalArgumentException(
+        s"log table $path: cannot fast-forward branch `$name` — " +
+          "writers keep advancing main; re-stage on the new head", e)) { tx =>
+      val mSnap = tx.snap
       // metadata drift on main refuses — the branch carries base's
       // metadata and a rebase must not silently roll main's back
       if (mSnap.schemaDdl != baseSnap.schemaDdl) refuse("main's schema changed")
@@ -3279,29 +3201,13 @@ object LogTable {
           refuse("identity values were generated on both sides")
         case (b, m, o) => if (m != o) m else b
       }
-      try {
-        commit(spark, path, mSnap.version + 1, bSnap.schemaDdl,
-          bSnap.partitionCols, bSnap.statsCols, bAdds,
-          bRemoves.map(_.name), bloomCols = bSnap.bloomCols,
-          operation = "PUBLISH_BRANCH", constraints = bSnap.constraints,
-          properties = bSnap.properties - BranchBaseProp - "clone.source" -
-            IdentityNextProp ++
-            idNext.map(IdentityNextProp -> _) ++
-            mSnap.properties.get("clone.source").map("clone.source" -> _))
-        return mSnap.version + 1
-      } catch {
-        // a racing writer moved main again: re-read and re-judge — the
-        // new commits may still be disjoint
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > 3)
-            throw new IllegalArgumentException(
-              s"log table $path: cannot fast-forward branch `$name` — " +
-                "writers keep advancing main; re-stage on the new head", e)
-          mSnap = snapshot(spark, path)
-      }
+      tx.publish(Commit.of(bSnap, "PUBLISH_BRANCH").copy(adds = bAdds,
+        removes = bRemoves.map(_.name),
+        properties = bSnap.properties - BranchBaseProp - "clone.source" -
+          IdentityNextProp ++
+          idNext.map(IdentityNextProp -> _) ++
+          mSnap.properties.get("clone.source").map("clone.source" -> _)))
     }
-    -1L // unreachable
   }
 
   /** Drop a branch: its log always goes (releasing the clone's vacuum
@@ -3416,46 +3322,32 @@ object LogTable {
     * Returns the committed version, or -1 when there was no debt.
     */
   def migrateConverted(spark: SparkSession, path: String,
-                       maxRetries: Int = 3): Long = {
-    val fs = fsOf(spark, path)
-    var attempt = 0
-    while (true) {
-      val snap = snapshot(spark, path)
-      if (convertHiveColsOf(snap.properties).isEmpty) return -1L
-      // converted files are the ones named THROUGH directories —
-      // post-convert writes land flat at the root (clone-absolute
-      // entries stay where they are; their values are in the data)
-      def isHive(n: String): Boolean = {
-        val p = new Path(n)
-        n.contains("/") && !p.isAbsolute && p.toUri.getScheme == null
-      }
-      val victims = snap.files.filter(f => isHive(f.name))
-      val adds =
-        if (victims.isEmpty) Nil
-        else writeDataFiles(spark, path,
-          readFiles(spark, path, snap, victims), snap.partitionCols,
-          snap.statsCols, bloomCols = snap.bloomCols,
-          colMap = snap.colMap, nestMaps = snap.nestMaps,
-          ndvCols = ndvColsOf(snap.properties),
-          histCols = histColsOf(snap.properties),
-          sizeHintBytes = Some(victims.iterator.map(_.bytes).sum))
-      try {
-        commit(spark, path, snap.version + 1, snap.schemaDdl,
-          snap.partitionCols, snap.statsCols, adds,
-          victims.map(_.name), dataChange = false,
-          bloomCols = snap.bloomCols, operation = "MIGRATE_CONVERT",
-          constraints = snap.constraints,
-          properties = snap.properties - ConvertHiveProp)
-        return snap.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          adds.foreach(a => fs.delete(new Path(path, a.name), false): Unit)
-          attempt += 1
-          if (attempt > maxRetries) throw e
+                       maxRetries: Int = 3): Long =
+    transact(spark, path, maxRetries) { tx =>
+      val snap = tx.snap
+      if (convertHiveColsOf(snap.properties).isEmpty) Done(-1L) else {
+        // converted files are the ones named THROUGH directories —
+        // post-convert writes land flat at the root (clone-absolute
+        // entries stay where they are; their values are in the data)
+        def isHive(n: String): Boolean = {
+          val p = new Path(n)
+          n.contains("/") && !p.isAbsolute && p.toUri.getScheme == null
+        }
+        val victims = snap.files.filter(f => isHive(f.name))
+        val adds =
+          if (victims.isEmpty) Nil
+          else tx.stageFiles(writeDataFiles(spark, path,
+            readFiles(spark, path, snap, victims), snap.partitionCols,
+            snap.statsCols, bloomCols = snap.bloomCols,
+            colMap = snap.colMap, nestMaps = snap.nestMaps,
+            ndvCols = ndvColsOf(snap.properties),
+            histCols = histColsOf(snap.properties),
+            sizeHintBytes = Some(victims.iterator.map(_.bytes).sum)))
+        tx.publish(Commit.of(snap, "MIGRATE_CONVERT").copy(adds = adds,
+          removes = victims.map(_.name), dataChange = false,
+          properties = snap.properties - ConvertHiveProp))
       }
     }
-    -1L // unreachable
-  }
 
   /** How long a clone marker with no materialized destination is
     * treated as an IN-FLIGHT clone (vacuum skips data reclaim) before
@@ -3988,22 +3880,22 @@ object LogTable {
     val fs = fsOf(spark, path)
     val tmp = new Path(path,
       "_tmp_" + java.util.UUID.randomUUID().toString.take(8))
-    withDesc(spark, s"write-cdc-files($path)") {
-      df.write.mode("overwrite").parquet(tmp.toString)
-    }
-    val dir = new Path(path, CdcDir)
-    if (!fs.exists(dir)) fs.mkdirs(dir): Unit
-    val out = fs.listStatus(tmp).iterator
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val name = CdcDir + "/" + st.getPath.getName
-        val dst = new Path(path, name)
-        if (!fs.rename(st.getPath, dst))
-          throw new java.io.IOException(s"rename ${st.getPath} -> $dst failed")
-        CdcFile(name, st.getLen)
-      }.toIndexedSeq
-    fs.delete(tmp, true): Unit
-    out
+    try {
+      withDesc(spark, s"write-cdc-files($path)") {
+        df.write.mode("overwrite").parquet(tmp.toString)
+      }
+      val dir = new Path(path, CdcDir)
+      if (!fs.exists(dir)) fs.mkdirs(dir): Unit
+      fs.listStatus(tmp).iterator
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .map { st =>
+          val name = CdcDir + "/" + st.getPath.getName
+          val dst = new Path(path, name)
+          if (!fs.rename(st.getPath, dst))
+            throw new java.io.IOException(s"rename ${st.getPath} -> $dst failed")
+          CdcFile(name, st.getLen)
+        }.toIndexedSeq
+    } finally { fs.delete(tmp, true): Unit }
   }
 
   /** The rows of one commit's CDC files, read under `snap`'s schema
@@ -4220,26 +4112,6 @@ object LogTable {
     })
   }
 
-  /** Disjoint-writer conflict resolution (the Delta/Iceberg conflict-
-    * checker move): a losing [[upsert]]'s merge result is STILL correct
-    * if every commit that beat it (a) carried the same schema and
-    * partition/stats layout, (b) removed none of the loser's victim
-    * files, and (c) added no file whose partition-range may contain any
-    * of the loser's touched partition tuples — then the winners read and
-    * wrote only OTHER partitions, so the loser's already-written files
-    * can be re-committed as-is at the next version. Serializability
-    * argument: commuting the loser after the winners changes no file
-    * either one reads or replaces — (b) says the loser's removes are
-    * still live, (c) says no winner row belongs to a partition the
-    * loser rewrote (rangeMayContain is conservative, so an
-    * uninterpretable bound CONFLICTS rather than commutes). Without this
-    * path, N writers to N disjoint partitions serialize through full
-    * re-merges — O(N²) reads under contention; with it, each loser pays
-    * one metadata check per winner. Falls back to the re-merge retry on
-    * any doubt (expired winner commits, schema drift, overlap). Bounded
-    * to `maxRetries` re-commit attempts. Increments
-    * [[disjointRecommits]] on success.
-    */
   /** MIN/MAX of the batch's key columns, rendered exactly as file stats
     * are (timestamps as UTC micros) — what [[recommitDisjoint]] compares
     * against a winner's file stats to admit KEY-disjoint writes into the
@@ -4366,19 +4238,36 @@ object LogTable {
       }
     }
 
+  /** Disjoint-writer conflict resolution (the Delta/Iceberg conflict-
+    * checker move): a losing [[upsert]]'s merge result is STILL correct
+    * if every commit that beat it (a) carried the same schema and
+    * partition/stats layout, (b) removed none of the loser's victim
+    * files, and (c) added no file whose partition-range may contain any
+    * of the loser's touched partition tuples — then the winners read and
+    * wrote only OTHER partitions, so the loser's already-written files
+    * can be re-committed as-is at the next version. Serializability
+    * argument: commuting the loser after the winners changes no file
+    * either one reads or replaces — (b) says the loser's removes are
+    * still live, (c) says no winner row belongs to a partition the
+    * loser rewrote (rangeMayContain is conservative, so an
+    * uninterpretable bound CONFLICTS rather than commutes). Without this
+    * path, N writers to N disjoint partitions serialize through full
+    * re-merges — O(N²) reads under contention; with it, each loser pays
+    * one metadata check per winner. Falls back to the re-merge retry on
+    * any doubt (expired winner commits, schema drift, overlap). Bounded
+    * to `maxRetries` re-commit attempts of `c` (the loser's commit; its
+    * removes are the victims). Increments [[disjointRecommits]] on
+    * success.
+    */
   private[sources] def recommitDisjoint(spark: SparkSession, path: String,
-                               base: Snapshot, schemaDdl: String,
-                               touched: Seq[Seq[String]], adds: Seq[LogFile],
-                               victims: Set[String],
-                               maxRetries: Int,
-                               operation: String = "MERGE",
-                               txns: Map[String, Long] = Map.empty,
+                               base: Snapshot, c: Commit,
+                               touched: Seq[Seq[String]], maxRetries: Int,
                                keyRanges: () => Map[String, (String, String)] =
-                                 () => Map.empty,
-                               cdc: Seq[CdcFile] = Nil)
+                                 () => Map.empty)
       : Option[Long] = {
     val zone = spark.sessionState.conf.sessionLocalTimeZone
     lazy val kr = keyRanges() // one batch aggregate, only if ever needed
+    val victims = c.removes.toSet
     var known = base.version
     var attempts = 0
     while (attempts <= maxRetries) {
@@ -4388,17 +4277,17 @@ object LogTable {
         try (known + 1 to latest.version).map(v => commitAt(spark, path, v))
         catch { case _: java.io.IOException => return None }
       val commutes = winners.forall { w =>
-        w.schemaDdl == schemaDdl &&
-          w.partitionCols == base.partitionCols &&
-          w.statsCols == base.statsCols &&
-          w.bloomCols == base.bloomCols &&
-          w.constraints == base.constraints &&
+        w.schemaDdl == c.schemaDdl &&
+          w.partitionCols == c.partitionCols &&
+          w.statsCols == c.statsCols &&
+          w.bloomCols == c.bloomCols &&
+          w.constraints == c.constraints &&
           // properties ride every commit last-writer-wins: re-committing
-          // base.properties over a winner that changed them (REGISTER_MV,
+          // c.properties over a winner that changed them (REGISTER_MV,
           // SET TBLPROPERTIES, a gen.* vocabulary change) would silently
           // revert the winner — and gen.* changes even invalidate our
           // already-written adds. Decline; the full retry re-reads them.
-          w.properties == base.properties &&
+          w.properties == c.properties &&
           // the idempotent-writer watermark must survive contention: a
           // winner that already committed this (appId, batchId) — the
           // zombie-driver replay racing itself — means OUR batch is a
@@ -4407,7 +4296,7 @@ object LogTable {
           // winner would otherwise trivially "commute" and the batch
           // would land twice). Decline; the full retry's snapshot
           // watermark check then returns -1 instead of re-applying.
-          !txns.exists { case (app, id) =>
+          !c.txns.exists { case (app, id) =>
             w.txns.get(app).exists(_ >= id)
           } &&
           !w.removes.exists(victims.contains) && {
@@ -4428,11 +4317,7 @@ object LogTable {
       if (!commutes) return None
       known = latest.version
       try {
-        commit(spark, path, latest.version + 1, schemaDdl,
-          base.partitionCols, base.statsCols, adds, victims.toSeq,
-          bloomCols = base.bloomCols, operation = operation, txns = txns,
-          constraints = base.constraints,
-          properties = base.properties, cdc = cdc)
+        commit(spark, path, latest.version + 1, c)
         disjointRecommits.incrementAndGet(): Unit
         return Some(latest.version + 1)
       } catch {
@@ -4461,270 +4346,226 @@ object LogTable {
              deleteOp: String = "D", maxRetries: Int = 3,
              mergeSchema: Boolean = false,
              txn: Option[(String, Long)] = None): Long = {
-    val fs = fsOf(spark, path)
-    var attempt = 0
-    while (true) {
-      val snap = snapshot(spark, path)
+    transact(spark, path, maxRetries) { tx =>
+      val snap = tx.snap
       // idempotent-writer watermark (the Delta `txn` action): a batch the
       // snapshot proves already committed for this (appId, batchId) is a
       // REPLAY — exactly-once for at-least-once callers (the streaming
-      // sink's restart/retry path). Checked inside the retry loop: a
-      // race loser re-checks against the winner's snapshot, so the same
+      // sink's restart/retry path). Checked on every attempt: a race
+      // loser re-checks against the winner's snapshot, so the same
       // batch can never land twice even under contention.
-      txn.foreach { case (app, id) =>
-        if (snap.txns.get(app).exists(_ >= id)) return -1L
-      }
-      // generated columns recompute from their sources — a batch may
-      // omit them (they are merge-critical partition columns, so this
-      // must happen before the physical-presence check below)
-      val changes = materializeGenerated(generatorsOf(snap), changes0)
-      // The columns the MERGE ITSELF consumes must be physically present
-      // in the batch regardless of evolution mode — NULL-filling the op
-      // column would turn `op =!= deleteOp` three-valued and silently
-      // DELETE every updated key; a NULL-filled key/order column
-      // corrupts the argmax. Loud, always.
-      val batchCols = changes.schema.fieldNames.map(_.toLowerCase).toSet
-      ((keyCols ++ orderCols) :+ opCol).++(snap.partitionCols).foreach { c =>
-        require(batchCols.contains(c.toLowerCase),
-          s"log table $path: batch is missing merge-critical column `$c`")
-      }
-      // ADD-COLUMN schema evolution — OPT-IN via mergeSchema (a typo'd
-      // column name is indistinguishable from an intentional new column,
-      // so silent widening must never be the default): batch columns
-      // absent from the table widen the schema (appended, nullable);
-      // untouched files are NEVER rewritten — parquet schema-on-read
-      // fills the new column with NULLs on old files, and the commit
-      // carries the widened DDL so every later snapshot resolves it.
-      // Table columns the batch omits NULL-fill on the batch's own rows
-      // (also gated by mergeSchema), and the committed field becomes
-      // nullable — the data now contains NULLs and the DDL must say so.
-      // TYPE-WIDENING evolution (also gated): a batch column STRICTLY
-      // WIDER than the table's (int under a long batch, float under
-      // double) widens the committed type — metadata-only, because the
-      // vectorized parquet reader serves physically-narrow files under
-      // the widened read schema (pinned by WideningProbeSpec) and the
-      // string-rendered file stats re-parse under the wider type
-      // unchanged. A batch NARROWER than the table is not evolution at
-      // all — it upcasts losslessly into the table's type, always.
-      // Everything else is not evolution and fails loud below.
-      val known = snap.schema.fieldNames.map(_.toLowerCase).toSet
-      val added = changes.schema.fields.toIndexedSeq
-        .filterNot(f => known.contains(f.name.toLowerCase))
-        .map(_.copy(nullable = true))
-      // column-mapping safety: a merge-evolved NEW column writes
-      // physically under its own name — if that name was ever another
-      // column's at-rest physical name (dropped, or renamed-away), old
-      // files would resurrect the retired values under the new column.
-      // Such adds must go through ALTER TABLE ADD COLUMNS, which maps a
-      // fresh physical name.
-      added.foreach { f =>
-        val clash =
-          snap.droppedPhysicals.exists(_.equalsIgnoreCase(f.name)) ||
-            snap.schema.fields.exists(g =>
-              !g.name.equalsIgnoreCase(f.name) &&
-                snap.physicalOf(g.name).equalsIgnoreCase(f.name))
-        require(!clash,
-          s"log table $path: evolved column `${f.name}` collides with a " +
-            "retired or renamed column's at-rest physical name — add it " +
-            "via ALTER TABLE ... ADD COLUMNS instead")
-      }
-      val widened: Map[String, DataType] =
-        snap.schema.fields.toIndexedSeq.flatMap { f =>
-          changes.schema.fields
-            .find(g => g.name.equalsIgnoreCase(f.name) &&
-              typeWidens(f.dataType, g.dataType))
-            .map(g => f.name.toLowerCase -> g.dataType)
-        }.toMap
-      require(mergeSchema || widened.isEmpty,
-        s"log table $path: batch widens column type(s) " +
-          s"${widened.keys.mkString(", ")} — pass mergeSchema=true to " +
-          "evolve, or cast the batch down")
-      // IDENTITY rides the merge path too: a batch OMITTING the declared
-      // column is the NORMAL insert shape (no mergeSchema flag, no
-      // nullable demotion — the NULL-fill below would silently break
-      // uniqueness); matched keys inherit the target row's value, new
-      // keys get dense generated values. A batch SUPPLYING the column
-      // refuses under GENERATED ALWAYS.
-      val idOmitted = snap.properties.get(IdentityColProp)
-        .flatMap(c => snap.schema.fields.find(_.name.equalsIgnoreCase(c)))
-        .map(_.name) match {
-        case Some(c) if !batchCols.contains(c.toLowerCase) => Some(c)
-        case Some(c) => identityRefuseAlways(path, snap.properties, c); None
-        case None => None
-      }
-      // row tracking is the same inheritance shape: matched keys keep
-      // their committed `_row_id`, new keys fill dense off the water
-      val rtOmitted =
-        if (rowTrackingEnabled(snap.properties) &&
-            !batchCols.contains(RowIdCol.toLowerCase)) Some(RowIdCol)
-        else None
-      val sysOmitted = idOmitted.toSeq ++ rtOmitted
-      val missing = snap.schema.fields.toIndexedSeq
-        .filterNot(f => batchCols.contains(f.name.toLowerCase) ||
-          sysOmitted.exists(_.equalsIgnoreCase(f.name)))
-      require(mergeSchema || (added.isEmpty && missing.isEmpty),
-        s"log table $path: batch schema differs from the table " +
-          s"(new: ${added.map(_.name).mkString(",")}; " +
-          s"missing: ${missing.map(_.name).mkString(",")}) — pass " +
-          "mergeSchema=true to evolve/NULL-fill, or fix the batch")
-      val missingNames = missing.map(_.name.toLowerCase).toSet
-      val schema = StructType(
-        snap.schema.fields.toIndexedSeq.map { f0 =>
-          val f = widened.get(f0.name.toLowerCase)
-            .map(dt => f0.copy(dataType = dt)).getOrElse(f0)
-          if (missingNames.contains(f.name.toLowerCase)) f.copy(nullable = true)
-          else f
-        } ++ added)
-      val evolved = snap.copy(schemaDdl = schema.toDDL)
-      // victims prune by partition TUPLE, then by the batch's KEY range
-      // against each file's key stats: a file provably holding no batch
-      // key has nothing to merge — its rows survive untouched, unread
-      // and unrewritten (and two key-disjoint merges into the SAME
-      // partition stop conflicting: their victim sets no longer overlap,
-      // so the disjoint fast path admits both). Both probes come out of
-      // ONE batch pass ([[batchProbe]]).
-      val zone = spark.sessionState.conf.sessionLocalTimeZone
-      val (touched, kr) = batchProbe(spark, path, snap, evolved, changes, keyCols)
-      val victims = victimFiles(snap, touched)
-        .filterNot(f => kr.nonEmpty && keyRangeDisjoint(snap, f, kr, zone))
-      val cdcOn = cdcEnabled(snap.properties)
-      // the batch aligned to the (possibly widened) table schema: a
-      // missing nullable column fills with typed NULL; a NARROWER batch
-      // column upcasts losslessly; any other TYPE clash is not evolution
-      // and fails loud
-      val aligned = changes.select(schema.fields.toIndexedSeq.map { f =>
-        // backtick-quoted so a literal dot in a column name is never
-        // parsed as nested-field access
-        def ref(n: String) = col("`" + n.replace("`", "``") + "`")
-        changes.schema.fields.find(_.name.equalsIgnoreCase(f.name)) match {
-          case Some(g) if g.dataType == f.dataType => ref(g.name).as(f.name)
-          case Some(g) if g.dataType == NullType ||
-              typeWidens(g.dataType, f.dataType) =>
-            ref(g.name).cast(f.dataType).as(f.name)
-          case Some(g) => throw new IllegalArgumentException(
-            s"log table $path: column `${f.name}` is ${f.dataType.sql}; a " +
-              s"${g.dataType.sql} batch cannot evolve it — only ADD-column " +
-              "and type-WIDENING evolution are supported")
-          case None => lit(null).cast(f.dataType).as(f.name)
+      if (txn.exists { case (app, id) => snap.txns.get(app).exists(_ >= id) })
+        Done(-1L)
+      else {
+        // generated columns recompute from their sources — a batch may
+        // omit them (they are merge-critical partition columns, so this
+        // must happen before the physical-presence check below)
+        val changes = materializeGenerated(generatorsOf(snap), changes0)
+        // The columns the MERGE ITSELF consumes must be physically present
+        // in the batch regardless of evolution mode — NULL-filling the op
+        // column would turn `op =!= deleteOp` three-valued and silently
+        // DELETE every updated key; a NULL-filled key/order column
+        // corrupts the argmax. Loud, always.
+        val batchCols = changes.schema.fieldNames.map(_.toLowerCase).toSet
+        ((keyCols ++ orderCols) :+ opCol).++(snap.partitionCols).foreach { c =>
+          require(batchCols.contains(c.toLowerCase),
+            s"log table $path: batch is missing merge-critical column `$c`")
         }
-      }: _*)
-      // CDC-enabled merges read `base` twice (the merge itself + the
-      // pre-image side of the CDC pivot) — persist so the victim files
-      // are scanned ONCE, not doubled. Persisted LAST before the
-      // try/finally that unpersists, so a refusal thrown while building
-      // `aligned` can never leak the cache entry.
-      val base0 = readFiles(spark, path, evolved, victims)
-      val base =
-        if (cdcOn)
-          base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else base0
-      // IDENTITY / ROW-ID enrichment of an omitting batch: one
-      // column-pruned pass over the victims recovers each matched key's
-      // committed value (replacing a row never re-keys its identity or
-      // its row id), the rest fill dense off the respective high-water —
-      // the alignment's NULL would otherwise break uniqueness silently
-      val alignedId = sysOmitted.foldLeft(aligned) { (acc, fn0) =>
-        val fn = schema.fields.find(_.name.equalsIgnoreCase(fn0))
-          .map(_.name).getOrElse(fn0)
-        def q(n: String) = col("`" + n.replace("`", "``") + "`")
-        val existing = base.select(
-          keyCols.map(q) :+ q(fn).as("__graft_idv"): _*)
-        val j = acc.drop(fn).join(existing, keyCols, "left")
-        val order = schema.fields.toIndexedSeq.map(f => q(f.name).as(f.name))
-        val kept = j.filter(col("__graft_idv").isNotNull)
-          .withColumn(fn, col("__graft_idv")).select(order: _*)
-        val needFill = j.filter(col("__graft_idv").isNull)
-          .drop("__graft_idv")
-        val fresh = (if (idOmitted.exists(_.equalsIgnoreCase(fn)))
-            identityFill(spark, path, snap, needFill, fn)
-          else denseFill(spark, needFill, fn,
-            snap.properties.get(RowTrackingNextProp).map(_.toLong)
-              .getOrElse(0L), 1L))
-          .select(order: _*)
-        kept.unionByName(fresh)
-      }
-      // persisted across the range-sampling pass and the shuffled write,
-      // so the merge aggregation runs ONCE (bounded by the touched
-      // partitions + batch — the rows being rewritten anyway)
-      val merged = Merge.merge(base, alignedId, keyCols, orderCols, opCol, deleteOp)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (adds, cdcFiles) =
-        try {
-          enforceConstraints(path, snap, merged)
-          // row-level CDC (cdc.enabled): pre/post rows restricted to the
-          // BATCH's keys (riders never enter), pivoted through one keyed
-          // aggregate — a no-op batch row (its version lost the argmax)
-          // emits nothing, exactly like readNetChanges' rider cancel.
-          // The CDC write and the data-file write are INDEPENDENT jobs
-          // over the same persisted frames, into disjoint tmp dirs —
-          // overlap them (guide §2.6: submit independent jobs from
-          // separate threads so one write's task tail back-fills with
-          // the other's tasks) instead of paying two sequential passes.
-          val cdcF: Option[java.util.concurrent.Future[Seq[CdcFile]]] =
-            if (!cdcOn) None
-            else Some(submitOverlapped(spark) {
-              writeCdcFiles(spark, path,
-                upsertCdcRows(evolved, base, merged, aligned, keyCols),
-                evolved)
-            })
-          val a =
-            try writeDataFiles(spark, path, merged, snap.partitionCols,
-              snap.statsCols, bloomCols = snap.bloomCols,
-              colMap = snap.colMap, nestMaps = snap.nestMaps,
-              ndvCols = ndvColsOf(snap.properties),
-              histCols = histColsOf(snap.properties),
-              // victims + the batch's own bytes when knowable: an
-              // insert-heavy merge (victims near-empty) of a huge
-              // scan-backed batch must not fall back to the floor
-              sizeHintBytes = Some(victims.iterator.map(_.bytes).sum +
-                scanBackedBytes(changes).getOrElse(0L)))
-            catch { case t: Throwable =>
-              // the concurrent CDC write must not outlive a failed
-              // transaction — wait it out (its files are invisible until
-              // commit; vacuum reclaims orphans)
-              cdcF.foreach(f => try f.get() catch { case _: Throwable => () })
-              throw t
-            }
-          val c = cdcF.map(_.get()).getOrElse(Nil)
-          (a, c)
-        } catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        } finally {
-          merged.unpersist(): Unit
-          if (cdcOn) base.unpersist(): Unit
-          drainFillCaches()
+        // ADD-COLUMN schema evolution — OPT-IN via mergeSchema (a typo'd
+        // column name is indistinguishable from an intentional new column,
+        // so silent widening must never be the default): batch columns
+        // absent from the table widen the schema (appended, nullable);
+        // untouched files are NEVER rewritten — parquet schema-on-read
+        // fills the new column with NULLs on old files, and the commit
+        // carries the widened DDL so every later snapshot resolves it.
+        // Table columns the batch omits NULL-fill on the batch's own rows
+        // (also gated by mergeSchema), and the committed field becomes
+        // nullable — the data now contains NULLs and the DDL must say so.
+        // TYPE-WIDENING evolution (also gated): a batch column STRICTLY
+        // WIDER than the table's (int under a long batch, float under
+        // double) widens the committed type — metadata-only, because the
+        // vectorized parquet reader serves physically-narrow files under
+        // the widened read schema (pinned by WideningProbeSpec) and the
+        // string-rendered file stats re-parse under the wider type
+        // unchanged. A batch NARROWER than the table is not evolution at
+        // all — it upcasts losslessly into the table's type, always.
+        // Everything else is not evolution and fails loud below.
+        val known = snap.schema.fieldNames.map(_.toLowerCase).toSet
+        val added = changes.schema.fields.toIndexedSeq
+          .filterNot(f => known.contains(f.name.toLowerCase))
+          .map(_.copy(nullable = true))
+        // column-mapping safety: a merge-evolved NEW column writes
+        // physically under its own name — if that name was ever another
+        // column's at-rest physical name (dropped, or renamed-away), old
+        // files would resurrect the retired values under the new column.
+        // Such adds must go through ALTER TABLE ADD COLUMNS, which maps a
+        // fresh physical name.
+        added.foreach { f =>
+          val clash =
+            snap.droppedPhysicals.exists(_.equalsIgnoreCase(f.name)) ||
+              snap.schema.fields.exists(g =>
+                !g.name.equalsIgnoreCase(f.name) &&
+                  snap.physicalOf(g.name).equalsIgnoreCase(f.name))
+          require(!clash,
+            s"log table $path: evolved column `${f.name}` collides with a " +
+              "retired or renamed column's at-rest physical name — add it " +
+              "via ALTER TABLE ... ADD COLUMNS instead")
         }
-      try {
-        commit(spark, path, snap.version + 1, evolved.schemaDdl,
-          snap.partitionCols, snap.statsCols, adds, victims.map(_.name),
-          bloomCols = snap.bloomCols, operation = "MERGE",
-          txns = txn.map { case (a, i) => a -> i }.toMap,
-          constraints = snap.constraints,
-          properties = snap.properties, cdc = cdcFiles)
-        return snap.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          recommitDisjoint(spark, path, snap, evolved.schemaDdl, touched,
-            adds, victims.map(_.name).toSet, maxRetries,
-            txns = txn.map { case (a, i) => a -> i }.toMap, cdc = cdcFiles,
-            keyRanges =
-              () => batchKeyRanges(spark, evolved, changes, keyCols)) match {
-            case Some(v) => return v
-            case None =>
-              // overlapping winner (or unverifiable history): our
-              // uncommitted files are invisible; drop them eagerly rather
-              // than waiting for vacuum, then retry against the new
-              // snapshot
-              adds.foreach(a => fs.delete(new Path(path, a.name), false): Unit)
-              cdcFiles.foreach(c =>
-                fs.delete(dataPath(path, c.name), false): Unit)
-              attempt += 1
-              if (attempt > maxRetries) throw e
+        val widened: Map[String, DataType] =
+          snap.schema.fields.toIndexedSeq.flatMap { f =>
+            changes.schema.fields
+              .find(g => g.name.equalsIgnoreCase(f.name) &&
+                typeWidens(f.dataType, g.dataType))
+              .map(g => f.name.toLowerCase -> g.dataType)
+          }.toMap
+        require(mergeSchema || widened.isEmpty,
+          s"log table $path: batch widens column type(s) " +
+            s"${widened.keys.mkString(", ")} — pass mergeSchema=true to " +
+            "evolve, or cast the batch down")
+        // IDENTITY rides the merge path too: a batch OMITTING the declared
+        // column is the NORMAL insert shape (no mergeSchema flag, no
+        // nullable demotion — the NULL-fill below would silently break
+        // uniqueness); matched keys inherit the target row's value, new
+        // keys get dense generated values. A batch SUPPLYING the column
+        // refuses under GENERATED ALWAYS.
+        val idOmitted = snap.properties.get(IdentityColProp)
+          .flatMap(c => snap.schema.fields.find(_.name.equalsIgnoreCase(c)))
+          .map(_.name) match {
+          case Some(c) if !batchCols.contains(c.toLowerCase) => Some(c)
+          case Some(c) => identityRefuseAlways(path, snap.properties, c); None
+          case None => None
+        }
+        // row tracking is the same inheritance shape: matched keys keep
+        // their committed `_row_id`, new keys fill dense off the water
+        val rtOmitted =
+          if (rowTrackingEnabled(snap.properties) &&
+              !batchCols.contains(RowIdCol.toLowerCase)) Some(RowIdCol)
+          else None
+        val sysOmitted = idOmitted.toSeq ++ rtOmitted
+        val missing = snap.schema.fields.toIndexedSeq
+          .filterNot(f => batchCols.contains(f.name.toLowerCase) ||
+            sysOmitted.exists(_.equalsIgnoreCase(f.name)))
+        require(mergeSchema || (added.isEmpty && missing.isEmpty),
+          s"log table $path: batch schema differs from the table " +
+            s"(new: ${added.map(_.name).mkString(",")}; " +
+            s"missing: ${missing.map(_.name).mkString(",")}) — pass " +
+            "mergeSchema=true to evolve/NULL-fill, or fix the batch")
+        val missingNames = missing.map(_.name.toLowerCase).toSet
+        val schema = StructType(
+          snap.schema.fields.toIndexedSeq.map { f0 =>
+            val f = widened.get(f0.name.toLowerCase)
+              .map(dt => f0.copy(dataType = dt)).getOrElse(f0)
+            if (missingNames.contains(f.name.toLowerCase)) f.copy(nullable = true)
+            else f
+          } ++ added)
+        val evolved = snap.copy(schemaDdl = schema.toDDL)
+        // victims prune by partition TUPLE, then by the batch's KEY range
+        // against each file's key stats: a file provably holding no batch
+        // key has nothing to merge — its rows survive untouched, unread
+        // and unrewritten (and two key-disjoint merges into the SAME
+        // partition stop conflicting: their victim sets no longer overlap,
+        // so the disjoint fast path admits both). Both probes come out of
+        // ONE batch pass ([[batchProbe]]).
+        val zone = spark.sessionState.conf.sessionLocalTimeZone
+        val (touched, kr) = batchProbe(spark, path, snap, evolved, changes, keyCols)
+        val victims = victimFiles(snap, touched)
+          .filterNot(f => kr.nonEmpty && keyRangeDisjoint(snap, f, kr, zone))
+        val cdcOn = cdcEnabled(snap.properties)
+        // the batch aligned to the (possibly widened) table schema: a
+        // missing nullable column fills with typed NULL; a NARROWER batch
+        // column upcasts losslessly; any other TYPE clash is not evolution
+        // and fails loud
+        val aligned = changes.select(schema.fields.toIndexedSeq.map { f =>
+          // backtick-quoted so a literal dot in a column name is never
+          // parsed as nested-field access
+          def ref(n: String) = col("`" + n.replace("`", "``") + "`")
+          changes.schema.fields.find(_.name.equalsIgnoreCase(f.name)) match {
+            case Some(g) if g.dataType == f.dataType => ref(g.name).as(f.name)
+            case Some(g) if g.dataType == NullType ||
+                typeWidens(g.dataType, f.dataType) =>
+              ref(g.name).cast(f.dataType).as(f.name)
+            case Some(g) => throw new IllegalArgumentException(
+              s"log table $path: column `${f.name}` is ${f.dataType.sql}; a " +
+                s"${g.dataType.sql} batch cannot evolve it — only ADD-column " +
+                "and type-WIDENING evolution are supported")
+            case None => lit(null).cast(f.dataType).as(f.name)
           }
+        }: _*)
+        // CDC-enabled merges read `base` twice (the merge itself + the
+        // pre-image side of the CDC pivot) — persist so the victim files
+        // are scanned ONCE, not doubled. Persisted LAST before the
+        // try/finally that unpersists, so a refusal thrown while building
+        // `aligned` can never leak the cache entry.
+        val base0 = readFiles(spark, path, evolved, victims)
+        val base =
+          if (cdcOn)
+            base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          else base0
+        // IDENTITY / ROW-ID enrichment of an omitting batch: one
+        // column-pruned pass over the victims recovers each matched key's
+        // committed value (replacing a row never re-keys its identity or
+        // its row id), the rest fill dense off the respective high-water —
+        // the alignment's NULL would otherwise break uniqueness silently
+        val alignedId = sysOmitted.foldLeft(aligned) { (acc, fn0) =>
+          val fn = schema.fields.find(_.name.equalsIgnoreCase(fn0))
+            .map(_.name).getOrElse(fn0)
+          def q(n: String) = col("`" + n.replace("`", "``") + "`")
+          val existing = base.select(
+            keyCols.map(q) :+ q(fn).as("__graft_idv"): _*)
+          val j = acc.drop(fn).join(existing, keyCols, "left")
+          val order = schema.fields.toIndexedSeq.map(f => q(f.name).as(f.name))
+          val kept = j.filter(col("__graft_idv").isNotNull)
+            .withColumn(fn, col("__graft_idv")).select(order: _*)
+          val needFill = j.filter(col("__graft_idv").isNull)
+            .drop("__graft_idv")
+          val fresh = (if (idOmitted.exists(_.equalsIgnoreCase(fn)))
+              identityFill(spark, path, snap, needFill, fn)
+            else denseFill(spark, needFill, fn,
+              snap.properties.get(RowTrackingNextProp).map(_.toLong)
+                .getOrElse(0L), 1L))
+            .select(order: _*)
+          kept.unionByName(fresh)
+        }
+        // persisted across the range-sampling pass and the shuffled write,
+        // so the merge aggregation runs ONCE (bounded by the touched
+        // partitions + batch — the rows being rewritten anyway)
+        val merged = Merge.merge(base, alignedId, keyCols, orderCols, opCol, deleteOp)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val (adds, cdcFiles) =
+          try {
+            enforceConstraints(path, snap, merged)
+            // row-level CDC (cdc.enabled): pre/post rows restricted to the
+            // BATCH's keys (riders never enter), pivoted through one keyed
+            // aggregate — a no-op batch row (its version lost the argmax)
+            // emits nothing, exactly like readNetChanges' rider cancel —
+            // written overlapped with the data files over the same
+            // persisted frames
+            writeWithCdc(tx, evolved, Option.when(cdcOn)(() =>
+              upsertCdcRows(evolved, base, merged, aligned, keyCols))) {
+              writeDataFiles(spark, path, merged, snap.partitionCols,
+                snap.statsCols, bloomCols = snap.bloomCols,
+                colMap = snap.colMap, nestMaps = snap.nestMaps,
+                ndvCols = ndvColsOf(snap.properties),
+                histCols = histColsOf(snap.properties),
+                // victims + the batch's own bytes when knowable: an
+                // insert-heavy merge (victims near-empty) of a huge
+                // scan-backed batch must not fall back to the floor
+                sizeHintBytes = Some(victims.iterator.map(_.bytes).sum +
+                  scanBackedBytes(changes).getOrElse(0L)))
+            }
+          } finally {
+            merged.unpersist(): Unit
+            if (cdcOn) base.unpersist(): Unit
+            drainFillCaches()
+          }
+        val c = Commit.of(snap, "MERGE").copy(schemaDdl = evolved.schemaDdl,
+          adds = adds, removes = victims.map(_.name), txns = txn.toMap,
+          cdc = cdcFiles)
+        tx.publish(c, recover = recommitDisjoint(spark, path, snap, c, touched,
+          maxRetries,
+          keyRanges = () => batchKeyRanges(spark, evolved, changes, keyCols)))
       }
     }
-    -1L // unreachable
   }
 
   /** [[upsert]]'s row-level CDC derivation: both sides restricted to
@@ -4781,9 +4622,8 @@ object LogTable {
   def addConstraint(spark: SparkSession, path: String, name: String,
                     expression: String, maxRetries: Int = 3): Long = {
     require(name.nonEmpty, "constraint needs a name")
-    var attempt = 0
-    while (true) {
-      val snap = snapshot(spark, path)
+    transact(spark, path, maxRetries) { tx =>
+      val snap = tx.snap
       require(!snap.constraints.contains(name),
         s"log table $path: constraint `$name` already exists")
       // the expression must analyze against the schema — a typo fails
@@ -4795,45 +4635,21 @@ object LogTable {
         .limit(1).count()
       require(bad == 0L,
         s"log table $path: existing rows violate `$name` ($expression)")
-      try {
-        commit(spark, path, snap.version + 1, snap.schemaDdl,
-          snap.partitionCols, snap.statsCols, Nil, Nil, dataChange = false,
-          bloomCols = snap.bloomCols, operation = "ADD CONSTRAINT",
-          constraints = snap.constraints + (name -> expression),
-          properties = snap.properties)
-        return snap.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      tx.publish(Commit.of(snap, "ADD CONSTRAINT").copy(dataChange = false,
+        constraints = snap.constraints + (name -> expression)))
     }
-    -1L // unreachable
   }
 
   /** Drop a CHECK constraint (dataChange = false). */
   def dropConstraint(spark: SparkSession, path: String, name: String,
-                     maxRetries: Int = 3): Long = {
-    var attempt = 0
-    while (true) {
-      val snap = snapshot(spark, path)
+                     maxRetries: Int = 3): Long =
+    transact(spark, path, maxRetries) { tx =>
+      val snap = tx.snap
       require(snap.constraints.contains(name),
         s"log table $path: no constraint `$name` to drop")
-      try {
-        commit(spark, path, snap.version + 1, snap.schemaDdl,
-          snap.partitionCols, snap.statsCols, Nil, Nil, dataChange = false,
-          bloomCols = snap.bloomCols, operation = "DROP CONSTRAINT",
-          constraints = snap.constraints - name,
-          properties = snap.properties)
-        return snap.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      tx.publish(Commit.of(snap, "DROP CONSTRAINT").copy(dataChange = false,
+        constraints = snap.constraints - name))
     }
-    -1L // unreachable
-  }
 
   /** One pass per constraint over the rows a transaction is about to
     * write (bounded by the write, never the table). Violation = the
@@ -4961,88 +4777,69 @@ object LogTable {
   def append(spark: SparkSession, path: String, rows: DataFrame,
              txn: Option[(String, Long)] = None, maxRetries: Int = 3,
              mergeSchema: Boolean = false): Long = {
-    val fs = fsOf(spark, path)
-    var attempt = 0
-    while (true) {
-      val snap0 = snapshot(spark, path)
-      txn.foreach { case (app, id) =>
-        if (snap0.txns.get(app).exists(_ >= id)) return -1L
-      }
-      // OPT-IN auto-evolution (the drifting-source ingest shape): batch
-      // columns absent from the table append nullable, strictly-wider
-      // batch types widen — inside THIS append's own commit, with the
-      // same column-mapping resurrection guard the merge paths apply.
-      // Everything else stays alignStrict's loud refusal.
-      val snap = if (!mergeSchema) snap0 else {
-        val known = snap0.schema.fieldNames.map(_.toLowerCase).toSet
-        val added = rows.schema.fields.toIndexedSeq
-          .filterNot(f => known.contains(f.name.toLowerCase))
-          .map(_.copy(nullable = true))
-        added.foreach { f =>
-          val clash =
-            snap0.droppedPhysicals.exists(_.equalsIgnoreCase(f.name)) ||
-              snap0.schema.fields.exists(g =>
-                !g.name.equalsIgnoreCase(f.name) &&
-                  snap0.physicalOf(g.name).equalsIgnoreCase(f.name))
-          require(!clash,
-            s"log table $path: evolved column `${f.name}` collides with " +
-              "a retired or renamed column's at-rest physical name — " +
-              "add it via ALTER TABLE ... ADD COLUMNS instead")
-        }
-        val widened = snap0.schema.fields.toIndexedSeq.map { f =>
-          rows.schema.fields
-            .find(g => g.name.equalsIgnoreCase(f.name) &&
-              typeWidens(f.dataType, g.dataType))
-            .map(g => f.copy(dataType = g.dataType)).getOrElse(f)
-        }
-        if (added.isEmpty && widened == snap0.schema.fields.toIndexedSeq)
-          snap0
-        else snap0.copy(schemaDdl = StructType(widened ++ added).toDDL)
-      }
-      // IDENTITY fill: a batch omitting the declared identity column
-      // gets generated values from the committed high-water — unique,
-      // DENSE within the batch, gaps only between batches (see
-      // [[IdentityColProp]] and [[identityFill]]); GENERATED ALWAYS
-      // refuses supplied values outright
-      val rowsFilled = rowIdApply(spark, snap,
-        identityApply(spark, path, snap, rows))
-      val aligned = alignStrict(path, snap, rowsFilled)
-      enforceConstraints(path, snap, aligned)
-      val adds =
-        try writeDataFiles(spark, path, aligned, snap.partitionCols,
-          snap.statsCols, bloomCols = snap.bloomCols, colMap = snap.colMap, nestMaps = snap.nestMaps,
-          ndvCols = ndvColsOf(snap.properties),
-          histCols = histColsOf(snap.properties),
-          sizeHintBytes = scanBackedBytes(rows))
-        finally drainFillCaches()
-      val idAdv = identityAdvance(snap.properties, adds)
-      try {
-        commit(spark, path, snap.version + 1, snap.schemaDdl,
-          snap.partitionCols, snap.statsCols, adds, Nil,
-          bloomCols = snap.bloomCols, operation = "APPEND",
-          txns = txn.map { case (a, i) => a -> i }.toMap,
-          constraints = snap.constraints,
-          properties = snap.properties ++ idAdv)
-        return snap.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          // identity appends never take the blind fast path: the
-          // high-water must re-read the winner's (and the commutes
-          // check would decline on the property drift anyway)
-          (if (idAdv.isEmpty)
-            recommitDisjoint(spark, path, snap, snap.schemaDdl, Nil, adds,
-              Set.empty, maxRetries, operation = "APPEND",
-              txns = txn.map { case (a, i) => a -> i }.toMap)
-          else None) match {
-            case Some(v) => return v
-            case None =>
-              adds.foreach(a => fs.delete(new Path(path, a.name), false): Unit)
-              attempt += 1
-              if (attempt > maxRetries) throw e
+    transact(spark, path, maxRetries) { tx =>
+      val snap0 = tx.snap
+      if (txn.exists { case (app, id) => snap0.txns.get(app).exists(_ >= id) })
+        Done(-1L)
+      else {
+        // OPT-IN auto-evolution (the drifting-source ingest shape): batch
+        // columns absent from the table append nullable, strictly-wider
+        // batch types widen — inside THIS append's own commit, with the
+        // same column-mapping resurrection guard the merge paths apply.
+        // Everything else stays alignStrict's loud refusal.
+        val snap = if (!mergeSchema) snap0 else {
+          val known = snap0.schema.fieldNames.map(_.toLowerCase).toSet
+          val added = rows.schema.fields.toIndexedSeq
+            .filterNot(f => known.contains(f.name.toLowerCase))
+            .map(_.copy(nullable = true))
+          added.foreach { f =>
+            val clash =
+              snap0.droppedPhysicals.exists(_.equalsIgnoreCase(f.name)) ||
+                snap0.schema.fields.exists(g =>
+                  !g.name.equalsIgnoreCase(f.name) &&
+                    snap0.physicalOf(g.name).equalsIgnoreCase(f.name))
+            require(!clash,
+              s"log table $path: evolved column `${f.name}` collides with " +
+                "a retired or renamed column's at-rest physical name — " +
+                "add it via ALTER TABLE ... ADD COLUMNS instead")
           }
+          val widened = snap0.schema.fields.toIndexedSeq.map { f =>
+            rows.schema.fields
+              .find(g => g.name.equalsIgnoreCase(f.name) &&
+                typeWidens(f.dataType, g.dataType))
+              .map(g => f.copy(dataType = g.dataType)).getOrElse(f)
+          }
+          if (added.isEmpty && widened == snap0.schema.fields.toIndexedSeq)
+            snap0
+          else snap0.copy(schemaDdl = StructType(widened ++ added).toDDL)
+        }
+        // IDENTITY fill: a batch omitting the declared identity column
+        // gets generated values from the committed high-water — unique,
+        // DENSE within the batch, gaps only between batches (see
+        // [[IdentityColProp]] and [[identityFill]]); GENERATED ALWAYS
+        // refuses supplied values outright
+        val rowsFilled = rowIdApply(spark, snap,
+          identityApply(spark, path, snap, rows))
+        val aligned = alignStrict(path, snap, rowsFilled)
+        enforceConstraints(path, snap, aligned)
+        val adds =
+          try tx.stageFiles(writeDataFiles(spark, path, aligned, snap.partitionCols,
+            snap.statsCols, bloomCols = snap.bloomCols, colMap = snap.colMap, nestMaps = snap.nestMaps,
+            ndvCols = ndvColsOf(snap.properties),
+            histCols = histColsOf(snap.properties),
+            sizeHintBytes = scanBackedBytes(rows)))
+          finally drainFillCaches()
+        val idAdv = identityAdvance(snap.properties, adds)
+        val c = Commit.of(snap, "APPEND").copy(adds = adds, txns = txn.toMap,
+          properties = snap.properties ++ idAdv)
+        // identity appends never take the blind fast path: the
+        // high-water must re-read the winner's (and the commutes
+        // check would decline on the property drift anyway)
+        tx.publish(c, recover =
+          if (idAdv.isEmpty) recommitDisjoint(spark, path, snap, c, Nil, maxRetries)
+          else None)
       }
     }
-    -1L // unreachable
   }
 
   /** FULL OVERWRITE — one commit replacing every live file (the INSERT
@@ -5054,39 +4851,24 @@ object LogTable {
     * winner's files (the last overwrite wins wholesale).
     */
   def overwriteAll(spark: SparkSession, path: String, rows: DataFrame,
-                   maxRetries: Int = 3): Long = {
-    val fs = fsOf(spark, path)
-    var attempt = 0
-    while (true) {
-      val snap = snapshot(spark, path)
+                   maxRetries: Int = 3): Long =
+    transact(spark, path, maxRetries) { tx =>
+      val snap = tx.snap
       // identity discipline rides every insert path, not just append:
       // an omitted identity column fills dense, ALWAYS refuses values
       val aligned = alignStrict(path, snap,
         rowIdApply(spark, snap, identityApply(spark, path, snap, rows)))
       enforceConstraints(path, snap, aligned)
       val adds =
-        try writeDataFiles(spark, path, aligned, snap.partitionCols,
+        try tx.stageFiles(writeDataFiles(spark, path, aligned, snap.partitionCols,
           snap.statsCols, bloomCols = snap.bloomCols, colMap = snap.colMap, nestMaps = snap.nestMaps,
           ndvCols = ndvColsOf(snap.properties),
           histCols = histColsOf(snap.properties),
-          sizeHintBytes = scanBackedBytes(rows))
+          sizeHintBytes = scanBackedBytes(rows)))
         finally drainFillCaches()
-      try {
-        commit(spark, path, snap.version + 1, snap.schemaDdl,
-          snap.partitionCols, snap.statsCols, adds,
-          snap.files.map(_.name), bloomCols = snap.bloomCols,
-          operation = "OVERWRITE", constraints = snap.constraints,
-          properties = snap.properties)
-        return snap.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          adds.foreach(a => fs.delete(new Path(path, a.name), false): Unit)
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      tx.publish(Commit.of(snap, "OVERWRITE").copy(adds = adds,
+        removes = snap.files.map(_.name)))
     }
-    -1L // unreachable
-  }
 
   /** The newest version whose commit file existed at `tsMillis` — the
     * `TIMESTAMP AS OF` lookup, resolved from commit-file modification
@@ -5425,9 +5207,8 @@ object LogTable {
                    maxRetries: Int = 3,
                    defaults: Map[String, String] = Map.empty): Long = {
     import org.apache.spark.sql.connector.catalog.TableChange
-    var attempt = 0
-    while (true) {
-      val snap = snapshot(spark, path)
+    transact(spark, path, maxRetries) { tx =>
+      val snap = tx.snap
       var fields = snap.schema.fields.toIndexedSeq
       var props = snap.properties
       var statsCols = snap.statsCols
@@ -5887,20 +5668,10 @@ object LogTable {
             "ADD COLUMNS, widening ALTER COLUMN TYPE, RENAME COLUMN " +
             "and DROP COLUMN only")
       }
-      try {
-        commit(spark, path, snap.version + 1,
-          StructType(fields).toDDL, snap.partitionCols, statsCols,
-          Nil, Nil, dataChange = false, bloomCols = bloomCols,
-          operation = "ALTER_SCHEMA", constraints = snap.constraints,
-          properties = props)
-        return snap.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      tx.publish(Commit.of(snap, "ALTER_SCHEMA").copy(
+        schemaDdl = StructType(fields).toDDL, statsCols = statsCols,
+        bloomCols = bloomCols, properties = props, dataChange = false))
     }
-    -1L // unreachable
   }
 
   /** PARTITION EVOLUTION — re-declare how the table clusters and prunes,
@@ -5935,10 +5706,9 @@ object LogTable {
   def evolvePartitioning(spark: SparkSession, path: String,
                          newPartitionCols: Seq[String],
                          generatedColumns: Map[String, String] = Map.empty,
-                         maxRetries: Int = 3): Long = {
-    var attempt = 0
-    while (true) {
-      val snap = snapshot(spark, path)
+                         maxRetries: Int = 3): Long =
+    transact(spark, path, maxRetries) { tx =>
+      val snap = tx.snap
       val gens = generatorsOf(snap)
       // a requested generator that ALREADY exists with the same SQL is a
       // passthrough (SQL callers re-derive names); a clashing one is not
@@ -5988,42 +5758,34 @@ object LogTable {
       if (fresh.isEmpty &&
           newPartitionCols.map(_.toLowerCase) ==
             snap.partitionCols.map(_.toLowerCase))
-        return -1L // spec already in effect
-      // old partition columns keep their stats flowing on NEW files too —
-      // old-column pruning must never degrade across the evolution
-      val statsCols = (snap.statsCols ++ snap.partitionCols)
-        .foldLeft(Vector.empty[String]) { (acc, c) =>
-          if (acc.exists(_.equalsIgnoreCase(c))) acc else acc :+ c
+        Done(-1L) // spec already in effect
+      else {
+        // old partition columns keep their stats flowing on NEW files too —
+        // old-column pruning must never degrade across the evolution
+        val statsCols = (snap.statsCols ++ snap.partitionCols)
+          .foldLeft(Vector.empty[String]) { (acc, c) =>
+            if (acc.exists(_.equalsIgnoreCase(c))) acc else acc :+ c
+          }
+        var props = snap.properties ++ fresh.map { case (c, g) =>
+          (GenPropPrefix + c) -> g
         }
-      var props = snap.properties ++ fresh.map { case (c, g) =>
-        (GenPropPrefix + c) -> g
-      }
-      if (fresh.nonEmpty) {
-        val late = (lateGenerated(snap) ++ fresh.keys.toSeq.sorted)
-          .distinct.mkString(",")
-        // late generated columns = reader level 3: predating files lack
-        // the column physically and readers must COMPUTE it
-        props = ensureProtocol(props + (GenLateProp -> late), 3)
-      }
-      val leadBefore = snap.partitionCol
-      val leadAfter = newPartitionCols.headOption.getOrElse("")
-      if (!leadAfter.equalsIgnoreCase(leadBefore) &&
-          !props.contains(PspecOriginProp))
-        props = props + (PspecOriginProp -> leadBefore)
-      try {
-        commit(spark, path, snap.version + 1, StructType(fields).toDDL,
-          newPartitionCols, statsCols, Nil, Nil, dataChange = false,
-          bloomCols = snap.bloomCols, operation = "EVOLVE_PARTITIONING",
-          constraints = snap.constraints, properties = props)
-        return snap.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
+        if (fresh.nonEmpty) {
+          val late = (lateGenerated(snap) ++ fresh.keys.toSeq.sorted)
+            .distinct.mkString(",")
+          // late generated columns = reader level 3: predating files lack
+          // the column physically and readers must COMPUTE it
+          props = ensureProtocol(props + (GenLateProp -> late), 3)
+        }
+        val leadBefore = snap.partitionCol
+        val leadAfter = newPartitionCols.headOption.getOrElse("")
+        if (!leadAfter.equalsIgnoreCase(leadBefore) &&
+            !props.contains(PspecOriginProp))
+          props = props + (PspecOriginProp -> leadBefore)
+        tx.publish(Commit.of(snap, "EVOLVE_PARTITIONING").copy(
+          schemaDdl = StructType(fields).toDDL, partitionCols = newPartitionCols,
+          statsCols = statsCols, properties = props, dataChange = false))
       }
     }
-    -1L // unreachable
-  }
 
   /** The analyzed result type of a generator expression over `schema` —
     * what an evolution-introduced derived column's schema field gets.
@@ -7456,10 +7218,9 @@ object LogTable {
     * commit; a no-op returns -1.
     */
   def syncIdentity(spark: SparkSession, path: String,
-                   maxRetries: Int = 3): Long = {
-    var attempt = 0
-    while (true) {
-      val snap = snapshot(spark, path)
+                   maxRetries: Int = 3): Long =
+    transact(spark, path, maxRetries) { tx =>
+      val snap = tx.snap
       val c = snap.properties.getOrElse(IdentityColProp,
         throw new IllegalArgumentException(
           s"log table $path: no identity column is declared"))
@@ -7468,22 +7229,10 @@ object LogTable {
           val pc = snap.physicalOf(c)
           f.stats.exists { case (k, _) => k.equalsIgnoreCase(pc) }
         })
-      if (adv.isEmpty) return -1L
-      try {
-        commit(spark, path, snap.version + 1, snap.schemaDdl,
-          snap.partitionCols, snap.statsCols, Nil, Nil,
-          dataChange = false, bloomCols = snap.bloomCols,
-          operation = "SYNC_IDENTITY", constraints = snap.constraints,
-          properties = snap.properties ++ adv)
-        return snap.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      if (adv.isEmpty) Done(-1L)
+      else tx.publish(Commit.of(snap, "SYNC_IDENTITY").copy(
+        dataChange = false, properties = snap.properties ++ adv))
     }
-    -1L // unreachable
-  }
 
   /** The committed high-water update for one write's adds (empty when
     * the table declares no identity column or the adds carry no values).
@@ -7552,24 +7301,13 @@ object LogTable {
     (set.keys ++ unset).foreach(k => require(!reservedProperty(k),
       s"log table $path: property `$k` is engine-owned — use its " +
         "dedicated API (generated columns, MV auto-refresh, clone)"))
-    var attempt = 0
-    while (true) {
-      val snap = snapshot(spark, path)
+    transact(spark, path, maxRetries) { tx =>
+      val snap = tx.snap
       val props = (snap.properties ++ set) -- unset
-      if (props == snap.properties) return -1L
-      try {
-        commit(spark, path, snap.version + 1, snap.schemaDdl,
-          snap.partitionCols, snap.statsCols, Nil, Nil, dataChange = false,
-          bloomCols = snap.bloomCols, operation = "SET PROPERTIES",
-          constraints = snap.constraints, properties = props)
-        return snap.version + 1
-      } catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      if (props == snap.properties) Done(-1L)
+      else tx.publish(Commit.of(snap, "SET PROPERTIES").copy(
+        dataChange = false, properties = props))
     }
-    -1L // unreachable
   }
 
   /** Table property listing the MVs to refresh after every row-visible
@@ -7597,8 +7335,9 @@ object LogTable {
     * returns first.
     */
   /** Overlaps a transaction's INDEPENDENT writes (data files + CDC
-    * files, guide §2.6): small, daemon, bounded — a transaction submits
-    * at most one side job and always joins it before committing.
+    * files, guide §2.6 — see [[writeWithCdc]]): small, daemon, bounded —
+    * a transaction submits at most one side job and always joins it
+    * before committing.
     */
   private[sources] lazy val writeOverlapPool =
     java.util.concurrent.Executors.newFixedThreadPool(4, r => {
@@ -7635,24 +7374,159 @@ object LogTable {
   private[graft] val asyncRefreshes =
     new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** What one [[commit]] publishes: the metadata the new version carries
+    * and its delta. [[Commit.of]] starts from a snapshot's carried
+    * metadata, so an operation names only the fields it changes.
+    */
+  private[sources] final case class Commit(
+      operation: String, schemaDdl: String, partitionCols: Seq[String],
+      statsCols: Seq[String], bloomCols: Seq[String] = Nil,
+      constraints: Map[String, String] = Map.empty,
+      properties: Map[String, String] = Map.empty,
+      adds: Seq[LogFile] = Nil, removes: Seq[String] = Nil,
+      dataChange: Boolean = true, txns: Map[String, Long] = Map.empty,
+      cdc: Seq[CdcFile] = Nil)
+
+  private[sources] object Commit {
+    def of(snap: Snapshot, operation: String): Commit =
+      Commit(operation, snap.schemaDdl, snap.partitionCols, snap.statsCols,
+        snap.bloomCols, snap.constraints, snap.properties)
+  }
+
+  /** How one [[transact]] attempt ends: [[Done]] without committing, or
+    * [[Publish]] one commit — the transaction then returns `result`, and
+    * `recover` is the attempt's answer to a lost race (`Some` when it
+    * landed its work another way, e.g. [[recommitDisjoint]]).
+    */
+  private[sources] sealed trait Outcome[+R]
+  private[sources] final case class Done[+R](result: R) extends Outcome[R]
+  private[sources] final case class Publish[+R](commit: Commit, result: R,
+      recover: () => Option[R]) extends Outcome[R]
+
+  /** One attempt of a [[transact]]ion: the snapshot it read, the files
+    * it staged (written, invisible until its commit lands) and the
+    * frames it persisted. Writes register their files here as they land,
+    * so whatever fails afterwards, [[transact]] knows what to delete.
+    */
+  private[sources] final class Attempt private[LogTable] (
+      val spark: SparkSession, val path: String, val snap: Snapshot) {
+    private val staged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    private val cached = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+
+    /** The version this attempt publishes. */
+    def version: Long = snap.version + 1
+    def stageFiles(adds: Seq[LogFile]): Seq[LogFile] = {
+      adds.foreach(a => staged.add(a.name): Unit); adds
+    }
+    def stageCdc(files: Seq[CdcFile]): Seq[CdcFile] = {
+      files.foreach(c => staged.add(c.name): Unit); files
+    }
+    def stageSidecar(name: String): String = { staged.add(name): Unit; name }
+    /** Persist `df` until the attempt ends — past its conflict recovery. */
+    def persist(df: DataFrame): DataFrame = {
+      cached.add(df): Unit
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    /** Publish `c` at [[version]]; `recover` runs on a lost race. */
+    def publish(c: Commit, recover: => Option[Long] = None): Outcome[Long] =
+      Publish(c, version, () => recover)
+
+    private[LogTable] def discard(): Unit =
+      if (!staged.isEmpty) {
+        val fs = fsOf(spark, path)
+        staged.forEach { n =>
+          try fs.delete(dataPath(path, n), false): Unit
+          catch { case scala.util.control.NonFatal(e) =>
+            logWarning(s"graft: could not delete staged file $n of $path " +
+              "(vacuum reclaims it)", e)
+          }
+        }
+        staged.clear()
+      }
+    private[LogTable] def release(): Unit = cached.forEach(_.unpersist(): Unit)
+  }
+
+  /** The optimistic transaction loop (Delta's `OptimisticTransaction`
+    * shape) and the one place a lost commit race is handled. Each attempt
+    * reads the latest snapshot, stages invisible files, and either ends
+    * without committing or publishes ONE version through [[commit]]. On a
+    * lost race the attempt's recovery step runs first; when it declines,
+    * the staged files are deleted and a fresh attempt runs against the
+    * winner's snapshot, at most `maxRetries` times — past that, `giveUp`
+    * names the failure. Staged files are deleted too when an attempt
+    * fails or ends before publishing, but never once a publish may have
+    * landed: an I/O failure out of [[commit]] leaves them for vacuum.
+    */
+  private[sources] def transact[R](spark: SparkSession, path: String,
+      maxRetries: Int,
+      giveUp: CommitConflictException => Throwable = (e: CommitConflictException) => e)
+      (attempt: Attempt => Outcome[R]): R = {
+    var conflicts = 0
+    var result = Option.empty[R]
+    while (result.isEmpty) {
+      val tx = new Attempt(spark, path, snapshot(spark, path))
+      var landed = false // true once the publish may have landed
+      try attempt(tx) match {
+        case Done(r) => result = Some(r)
+        case Publish(c, r, recover) =>
+          landed = true
+          try {
+            commit(spark, path, tx.version, c)
+            result = Some(r)
+          } catch {
+            case e: CommitConflictException =>
+              result = recover()
+              landed = result.isDefined
+              if (!landed) {
+                conflicts += 1
+                if (conflicts > maxRetries) throw giveUp(e)
+              }
+          }
+      } finally {
+        try if (!landed) tx.discard()
+        finally tx.release()
+      }
+    }
+    result.get
+  }
+
+  /** A transaction's data write with its CDC write (when `cdcRows` is
+    * given) overlapped on a side thread — independent jobs into disjoint
+    * tmp dirs (guide §2.6), so one write's task tail back-fills with the
+    * other's tasks. Both sides' files are staged with `tx` as they land,
+    * and the side job never outlives a failed data write.
+    */
+  private[sources] def writeWithCdc(tx: Attempt, cdcSnap: Snapshot,
+                                    cdcRows: Option[() => DataFrame])
+                                   (data: => Seq[LogFile])
+      : (Seq[LogFile], Seq[CdcFile]) = {
+    val side = cdcRows.map(rows => submitOverlapped(tx.spark) {
+      writeCdcFiles(tx.spark, tx.path, rows(), cdcSnap)
+    })
+    def joinCdc(): Seq[CdcFile] =
+      try tx.stageCdc(side.map(_.get()).getOrElse(Nil))
+      catch {
+        case e: java.util.concurrent.ExecutionException =>
+          throw Option(e.getCause).getOrElse(e)
+      }
+    val adds =
+      try tx.stageFiles(data)
+      catch { case t: Throwable =>
+        try joinCdc(): Unit catch { case _: Throwable => () }
+        throw t
+      }
+    (adds, joinCdc())
+  }
+
   private[sources] def commit(spark: SparkSession, path: String, version: Long,
-                     schemaDdl: String, partitionCols: Seq[String],
-                     statsCols: Seq[String],
-                     adds: Seq[LogFile], removes: Seq[String],
-                     dataChange: Boolean = true,
-                     bloomCols: Seq[String] = Nil,
-                     operation: String = "UNKNOWN",
-                     txns: Map[String, Long] = Map.empty,
-                     constraints: Map[String, String] = Map.empty,
-                     properties: Map[String, String] = Map.empty,
-                     cdc: Seq[CdcFile] = Nil): Unit = {
+                              c: Commit): Unit = {
     val fs = fsOf(spark, path)
     // IDENTITY high-water: every commit that ADDS files advances
     // `identity.next` past its adds' max (off the stats the write
     // already recorded) — so values supplied through ANY path (upsert,
     // MERGE, UPDATE, overwrite) keep later generated values above them
-    val committedProps = properties ++ identityAdvance(properties, adds) ++
-      rowTrackingAdvance(properties, adds)
+    val committedProps = c.properties ++ identityAdvance(c.properties, c.adds) ++
+      rowTrackingAdvance(c.properties, c.adds)
     val tmp = new Path(logDir(path),
       ".commit_" + java.util.UUID.randomUUID().toString.take(8) + ".tmp")
     // IN-COMMIT timestamp, clamped MONOTONE against the parent version's
@@ -7675,16 +7549,16 @@ object LogTable {
       }
     val ict = math.max(System.currentTimeMillis(), parentTs + 1L)
     val out = fs.create(tmp, true)
-    try out.write(commitJson(version, schemaDdl, partitionCols, statsCols,
-      adds, removes, dataChange, bloomCols, operation, txns, constraints,
-      committedProps, tsMillis = ict, cdc = cdc))
+    try out.write(commitJson(version, c.schemaDdl, c.partitionCols,
+      c.statsCols, c.adds, c.removes, c.dataChange, c.bloomCols, c.operation,
+      c.txns, c.constraints, committedProps, tsMillis = ict, cdc = c.cdc))
     finally out.close()
     val dst = commitPath(path, version)
     // The coordinator's publish IS the transaction: exactly one writer
     // can own version N (see [[CommitCoordinator]]; the default is the
     // no-overwrite rename, serialized under a JVM lock on raw local FS;
     // a table property or session conf swaps in lockfile/condput).
-    val won = coordinatorFor(spark, path, properties).publish(fs, tmp, dst)
+    val won = coordinatorFor(spark, path, c.properties).publish(fs, tmp, dst)
     if (!won) {
       fs.delete(tmp, false): Unit
       if (fs.exists(dst))
@@ -7692,26 +7566,22 @@ object LogTable {
           s"version $version already committed at $path")
       throw new java.io.IOException(s"commit rename failed for $dst")
     }
-    // post-commit hooks fire AFTER the version is durably published —
-    // the transaction's outcome can no longer change, so a hook failure
-    // must never unwind the (already successful) write
-    if (!commitHooks.isEmpty) {
-      val it = commitHooks.iterator()
-      while (it.hasNext) {
-        try it.next()(spark, path, version, operation, dataChange)
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"graft: post-commit hook failed for $path v$version: $e")
-        }
+    // everything below runs AFTER the version is durably published —
+    // the transaction's outcome can no longer change, so each step is
+    // best effort ([[maintain]]) and never unwinds the write
+    val it = commitHooks.iterator()
+    while (it.hasNext) {
+      val hook = it.next()
+      maintain(path, version, "post-commit hook") {
+        hook(spark, path, version, c.operation, c.dataChange)
       }
     }
     // LOG-PERSISTED MV auto-refresh: the registry rides the commit's own
     // properties (no snapshot re-read, no JVM state), so a restarted
     // driver — or a different writer entirely — keeps registered views
-    // fresh. Fires only on row-visible commits; failures log and never
-    // unwind the (already durable) write; the self-guard keeps a
+    // fresh. Fires only on row-visible commits; the self-guard keeps a
     // misregistered self-reference from recursing.
-    if (dataChange) properties.get(MvAutoRefreshProp).foreach { list =>
+    if (c.dataChange) c.properties.get(MvAutoRefreshProp).foreach { list =>
       val self = fs.makeQualified(new Path(path)).toUri.toString
       // refresh mode is a TABLE PROPERTY (`mv.refreshmode = async`):
       // inline (default) folds the rollup before the writer returns;
@@ -7720,30 +7590,23 @@ object LogTable {
       // queued refresh reads the base's LATEST version, so n commits
       // while one is pending fold in one pass), and the `(MvApp, to)`
       // txn watermark makes concurrent/duplicate fires safe.
-      val async = properties.get(MvRefreshModeProp)
+      val async = c.properties.get(MvRefreshModeProp)
         .exists(_.equalsIgnoreCase("async"))
       list.split(';').iterator.filter(_.nonEmpty)
         .filterNot(_ == self).foreach { mv =>
-          if (!async) {
-            try MaterializedView.refresh(spark, mv): Unit
-            catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(
-                s"graft: auto-refresh of MV $mv after $path v$version " +
-                  s"failed: $e")
+          if (!async)
+            maintain(path, version, s"auto-refresh of MV $mv") {
+              MaterializedView.refresh(spark, mv): Unit
             }
-          } else if (mvRefreshQueued.add(mv)) {
+          else if (mvRefreshQueued.add(mv)) {
             mvRefreshExecutor.submit(new Runnable {
               override def run(): Unit = {
                 // dequeue BEFORE refreshing: a commit landing mid-
                 // refresh re-queues, so its window is never missed
                 mvRefreshQueued.remove(mv): Unit
-                try {
+                maintain(path, version, s"async auto-refresh of MV $mv") {
                   MaterializedView.refresh(spark, mv): Unit
                   asyncRefreshes.incrementAndGet(): Unit
-                } catch { case scala.util.control.NonFatal(e) =>
-                  System.err.println(
-                    s"graft: async auto-refresh of MV $mv after $path " +
-                      s"v$version failed: $e")
                 }
               }
             }): Unit
@@ -7751,16 +7614,13 @@ object LogTable {
         }
     }
     // AUTO-CHECKPOINT: every n-th version also lands a checkpoint, so
-    // replay stays O(n) without an external maintenance job. Post-
-    // publish and best-effort — the commit already succeeded.
-    properties.get(CheckpointEveryProp)
+    // replay stays O(n) without an external maintenance job.
+    c.properties.get(CheckpointEveryProp)
       .flatMap(s => scala.util.Try(s.toLong).toOption).filter(_ > 0)
       .foreach { n =>
         if (version % n == 0)
-          try checkpoint(spark, path): Unit
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(
-              s"graft: auto-checkpoint of $path at v$version failed: $e")
+          maintain(path, version, "auto-checkpoint") {
+            checkpoint(spark, path): Unit
           }
       }
     // AUTO-OPTIMIZE (`optimize.every = n` [+ `optimize.maxfiles`]):
@@ -7768,26 +7628,35 @@ object LogTable {
     // the debt-triggered compaction — a metadata-only check when every
     // partition value is under budget (compactPartitions returns
     // without reading a byte), a bounded rewrite of exactly the
-    // over-budget values when one is not. Post-publish, best-effort;
-    // the compaction commit itself is dataChange = false, so the policy
-    // can never re-fire off its own write.
-    if (dataChange)
-      properties.get(OptimizeEveryProp)
+    // over-budget values when one is not. The compaction commit itself
+    // is dataChange = false, so the policy can never re-fire off its
+    // own write.
+    if (c.dataChange)
+      c.properties.get(OptimizeEveryProp)
         .flatMap(s => scala.util.Try(s.toLong).toOption).filter(_ > 0)
         .foreach { n =>
           if (version % n == 0) {
-            val budget = properties.get(OptimizeMaxFilesProp)
+            val budget = c.properties.get(OptimizeMaxFilesProp)
               .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0)
               .getOrElse(8)
-            try compactPartitions(spark, path,
-              maxFilesPerPartition = budget): Unit
-            catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(
-                s"graft: auto-optimize of $path at v$version failed: $e")
+            maintain(path, version, "auto-optimize") {
+              compactPartitions(spark, path,
+                maxFilesPerPartition = budget): Unit
             }
           }
         }
   }
+
+  /** One best-effort post-commit step: the version is already durable,
+    * so a failure is logged — table, version, what failed and the stack
+    * trace — and never unwinds the write.
+    */
+  private def maintain(path: String, version: Long, what: String)
+                      (body: => Unit): Unit =
+    try body
+    catch { case scala.util.control.NonFatal(e) =>
+      logWarning(s"graft: $what after $path v$version failed", e)
+    }
 
   /** Post-commit hooks: observers of durably published versions —
     * (session, path, version, operation, dataChange), fired on the

@@ -549,33 +549,24 @@ object MaterializedView {
 
   private def editRegistry(spark: SparkSession, basePath: String,
                            mv: String, add: Boolean,
-                           maxRetries: Int = 3): Int = {
-    var attempt = 0
-    while (true) {
-      val snap = LogTable.snapshot(spark, basePath)
+                           maxRetries: Int = 3): Int =
+    LogTable.transact(spark, basePath, maxRetries) { tx =>
+      val snap = tx.snap
       val cur = snap.properties.get(LogTable.MvAutoRefreshProp)
         .map(_.split(';').filter(_.nonEmpty).toSet).getOrElse(Set.empty)
       val next = if (add) cur + mv else cur - mv
-      if (next == cur) return cur.size
-      val props =
-        if (next.isEmpty) snap.properties - LogTable.MvAutoRefreshProp
-        else snap.properties +
-          (LogTable.MvAutoRefreshProp -> next.toSeq.sorted.mkString(";"))
-      try {
-        LogTable.commit(spark, basePath, snap.version + 1, snap.schemaDdl,
-          snap.partitionCols, snap.statsCols, Nil, Nil, dataChange = false,
-          bloomCols = snap.bloomCols,
-          operation = if (add) "REGISTER_MV" else "UNREGISTER_MV",
-          constraints = snap.constraints, properties = props)
-        return next.size
-      } catch {
-        case e: LogTable.CommitConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
+      if (next == cur) LogTable.Done(cur.size)
+      else {
+        val props =
+          if (next.isEmpty) snap.properties - LogTable.MvAutoRefreshProp
+          else snap.properties +
+            (LogTable.MvAutoRefreshProp -> next.toSeq.sorted.mkString(";"))
+        LogTable.Publish(LogTable.Commit.of(snap,
+          if (add) "REGISTER_MV" else "UNREGISTER_MV")
+          .copy(dataChange = false, properties = props), next.size,
+          () => None)
       }
     }
-    -1 // unreachable
-  }
 
   /** The user-facing view: group columns + aggregate outputs with SQL
     * semantics (`sum`/`avg` are NULL for a group with no non-NULL

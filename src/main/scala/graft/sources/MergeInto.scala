@@ -135,12 +135,11 @@ final case class MergeInto private[sources] (
   }
 
   /** Run the merge; its jobs without a finer label carry `merge`. */
-  def run(): Long = LogTable.withDesc(spark, s"merge($path)")(transact())
+  def run(): Long = LogTable.withDesc(spark, s"merge($path)")(execute())
 
-  private def transact(): Long = {
+  private def execute(): Long = {
     require(matched.nonEmpty || insert.isDefined || bySource.nonEmpty,
       s"merge into $path: no clauses — nothing to do")
-    val fs = LogTable.fsOf(spark, path)
     // GENERATED partition columns derive from the batch's own source
     // column — materialize them onto the merge source so the pruned-
     // merge contract (partition tuples name every candidate file) holds
@@ -196,9 +195,8 @@ final case class MergeInto private[sources] (
     require(dup == 0L,
       s"merge into $path: source has duplicate keys on " +
         s"(${keyCols.mkString(", ")}) — ambiguous merge")
-    var attempt = 0
-    while (true) {
-      val snap = evolveForMerge(LogTable.snapshot(spark, path))
+    LogTable.transact(spark, path, maxRetries) { tx =>
+      val snap = evolveForMerge(tx.snap)
       validate(snap)
       // IDENTITY fill for INSERT clauses: when the declared identity
       // column arrives neither as an explicit value nor as a source
@@ -306,15 +304,11 @@ final case class MergeInto private[sources] (
       val outRows = LogTable.materializeGenerated(gens, result)
       LogTable.enforceConstraints(path, snap, outRows)
       val ddl = widenedDdl(snap, fills)
-      val (adds, cdcFiles) = try {
+      val (adds, cdcFiles) =
         // data-file and CDC-file writes are independent jobs over the
-        // persisted tagged join, into disjoint tmp dirs — overlap them
-        // (guide §2.6), mirroring the upsert path
-        val cdcF = cdcDf.map(df => LogTable.submitOverlapped(spark) {
-          LogTable.writeCdcFiles(spark, path, df, snap)
-        })
-        val a =
-          try LogTable.writeDataFiles(spark, path, outRows,
+        // persisted tagged join — overlapped, like the upsert path
+        try LogTable.writeWithCdc(tx, snap, cdcDf.map(df => () => df)) {
+          LogTable.writeDataFiles(spark, path, outRows,
             snap.partitionCols, snap.statsCols, bloomCols = snap.bloomCols,
             colMap = snap.colMap, nestMaps = snap.nestMaps,
             ndvCols = LogTable.ndvColsOf(snap.properties),
@@ -324,50 +318,22 @@ final case class MergeInto private[sources] (
             // must not fall back to the session floor
             sizeHintBytes = Some(victims.iterator.map(_.bytes).sum +
               LogTable.scanBackedBytes(source).getOrElse(0L)))
-          catch { case t: Throwable =>
-            cdcF.foreach(f => try f.get() catch { case _: Throwable => () })
-            throw t
-          }
-        val c = cdcF.map(_.get()).getOrElse(Nil)
-        (a, c)
-      } catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw Option(e.getCause).getOrElse(e)
-      } finally {
-        augCache.foreach(_.unpersist(): Unit)
-        LogTable.drainFillCaches()
-      }
-      try {
-        LogTable.commit(spark, path, snap.version + 1, ddl,
-          snap.partitionCols, snap.statsCols, adds, victims.map(_.name),
-          bloomCols = snap.bloomCols, operation = "MERGE_INTO",
-          constraints = snap.constraints, properties = snap.properties,
-          cdc = cdcFiles)
-        return snap.version + 1
-      } catch {
-        case e: LogTable.CommitConflictException =>
-          // a by-source merge NEVER re-commits blind: even a winner that
-          // only appended rows to an untouched partition breaks
-          // serializability (re-running after the winner could expire
-          // those very rows), so the full re-merge is the only sound path
-          (if (bySource.nonEmpty) None
-          else LogTable.recommitDisjoint(spark, path, snap, ddl, touched,
-            adds, victims.map(_.name).toSet, maxRetries, cdc = cdcFiles,
-            operation = "MERGE_INTO",
-            keyRanges = () =>
-              LogTable.batchKeyRanges(spark, snap, source, keyCols))) match {
-            case Some(v) => return v
-            case None =>
-              adds.foreach(a => fs.delete(
-                new org.apache.hadoop.fs.Path(path, a.name), false): Unit)
-              cdcFiles.foreach(c => fs.delete(
-                LogTable.dataPath(path, c.name), false): Unit)
-              attempt += 1
-              if (attempt > maxRetries) throw e
-          }
-      }
+        } finally {
+          augCache.foreach(_.unpersist(): Unit)
+          LogTable.drainFillCaches()
+        }
+      val c = LogTable.Commit.of(snap, "MERGE_INTO").copy(schemaDdl = ddl,
+        adds = adds, removes = victims.map(_.name), cdc = cdcFiles)
+      // a by-source merge NEVER re-commits blind: even a winner that
+      // only appended rows to an untouched partition breaks
+      // serializability (re-running after the winner could expire
+      // those very rows), so the full re-merge is the only sound path
+      tx.publish(c, recover =
+        if (bySource.nonEmpty) None
+        else LogTable.recommitDisjoint(spark, path, snap, c, touched,
+          maxRetries, keyRanges = () =>
+            LogTable.batchKeyRanges(spark, snap, source, keyCols)))
     }
-    -1L // unreachable
     } finally source.unpersist(): Unit
   }
 

@@ -20,6 +20,16 @@ class FailDataRenameFs extends org.apache.hadoop.fs.LocalFileSystem {
     else super.rename(src, dst)
 }
 
+/** A filesystem whose renames into a table's `_change_data/` directory
+  * fail — the CDC side of a transaction fails after its data write
+  * succeeded. Every other rename passes through.
+  */
+class FailCdcRenameFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: Path, dst: Path): Boolean =
+    if (dst.getParent.getName == LogTable.CdcDir) false
+    else super.rename(src, dst)
+}
+
 /** The per-file stats the writer tasks fold while they write must equal
   * what a RESCAN of the written files computes — the same aggregates
   * grouped by file over a read of exactly the table's live files.
@@ -153,16 +163,26 @@ class FileStatsParitySpec extends SparkSpec {
   test("a failed rename out of the write's tmp dir leaves no tmp dir behind") {
     val t = tmp() + "/t"
     mkTable(t, 60)
-    val v = LogTable.snapshot(spark, t).version
     val failing = spark.newSession()
     failing.conf.set("fs.file.impl", classOf[FailDataRenameFs].getName)
     failing.conf.set("fs.file.impl.disable.cache", "true")
-    intercept[java.io.IOException] {
-      LogTable.append(failing, t, rows(1000, 1050))
+    LogTable.setProperties(spark, t, Map(LogTable.CdcProp -> "true")): Unit
+    val v = LogTable.snapshot(spark, t).version
+    Seq[(String, () => Any)](
+      "append" -> (() => LogTable.append(failing, t, rows(1000, 1050))),
+      // a partial-file DV delete writes one deletion-vector sidecar
+      "DV delete" -> (() => LogTable.deleteWhere(failing, t,
+        col("k") === 5L, deletionVectors = true)),
+      // a CDC-enabled rewrite writes data files and CDC files
+      "rewrite delete with CDC" -> (() =>
+        LogTable.deleteWhere(failing, t, col("k") === 6L))
+    ).foreach { case (name, op) =>
+      intercept[java.io.IOException](op())
+      val left = LogTable.fsOf(spark, t).listStatus(new Path(t))
+        .map(_.getPath.getName).filter(_.startsWith("_tmp_"))
+      assert(left.isEmpty,
+        s"$name: tmp dirs left behind: ${left.mkString(", ")}")
+      assert(LogTable.snapshot(spark, t).version == v, name)
     }
-    val left = LogTable.fsOf(spark, t).listStatus(new Path(t))
-      .map(_.getPath.getName).filter(_.startsWith("_tmp_"))
-    assert(left.isEmpty, s"tmp dirs left behind: ${left.mkString(", ")}")
-    assert(LogTable.snapshot(spark, t).version == v)
   }
 }

@@ -662,39 +662,224 @@ class LogTableSpec extends SparkSpec {
     }
   }
 
-  test("commit coordinator is pluggable: a lost publish retries, a win lands") {
-    val dir = tmp() + "/t"
-    LogTable.create(spark, dir, baseDf, "p")
+  /** Run `body` under a coordinator that loses the FIRST publish to a
+    * competing writer: a no-op commit carrying the table's own metadata
+    * (plus `foreignProps`) lands at that version first, and the loser
+    * sees the conflict. Every later publish goes through.
+    */
+  private def losingFirstPublish[T](foreignProps: Map[String, String])
+                                   (body: => T): T = {
     val prev = LogTable.coordinator
-    var calls = 0
-    try {
-      LogTable.coordinator = new LogTable.CommitCoordinator {
-        override def publish(fs: org.apache.hadoop.fs.FileSystem,
-                             t: org.apache.hadoop.fs.Path,
-                             d: org.apache.hadoop.fs.Path): Boolean = {
-          calls += 1
-          if (calls == 1) {
-            // simulate a competing writer (e.g. another process under a
-            // conditional-put store) winning this version: a valid empty
-            // commit lands at dst, and WE report the loss
-            val snap = LogTable.snapshot(spark, dir)
-            val json = ("""{"version":2,"schema":"""" +
-              snap.schemaDdl.replace("\"", "\\\"") +
-              """","partitionCol":"p","adds":[],"removes":[]}""")
-            val out = fs.create(d, false)
-            try out.write(json.getBytes("UTF-8")) finally out.close()
-            false
-          } else LogTable.RenameCommitCoordinator.publish(fs, t, d)
-        }
+    val lost = new java.util.concurrent.atomic.AtomicBoolean(false)
+    LogTable.coordinator = new LogTable.CommitCoordinator {
+      override def publish(fs: org.apache.hadoop.fs.FileSystem,
+                           t: org.apache.hadoop.fs.Path,
+                           d: org.apache.hadoop.fs.Path): Boolean =
+        if (lost.compareAndSet(false, true)) {
+          val table = d.getParent.getParent.toString
+          val snap = LogTable.snapshot(spark, table)
+          LogTable.commit(spark, table, d.getName.stripSuffix(".json").toLong,
+            LogTable.Commit.of(snap, "FOREIGN").copy(dataChange = false,
+              properties = snap.properties ++ foreignProps))
+          false
+        } else LogTable.RenameCommitCoordinator.publish(fs, t, d)
+    }
+    try body finally LogTable.coordinator = prev
+  }
+
+  /** Parquet files under the table that no version references — what a
+    * transaction staged and failed to clean up.
+    */
+  private def unreferenced(dir: String): Seq[String] = {
+    val fs = LogTable.fsOf(spark, dir)
+    def q(p: org.apache.hadoop.fs.Path) = fs.makeQualified(p).toString
+    val referenced = (1L to LogTable.latestVersion(spark, dir)).flatMap { v =>
+      val c = LogTable.commitAt(spark, dir, v)
+      c.adds.flatMap(f => f.name +: f.dv.map(_.name).toSeq) ++ c.cdc.map(_.name)
+    }.map(n => q(LogTable.dataPath(dir, n))).toSet
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+    val out = Seq.newBuilder[String]
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.endsWith(".parquet") && !p.getName.startsWith(".") &&
+          !p.toString.contains("/_graft_log/") &&
+          !p.toString.contains("/_branches/") && !referenced(q(p)))
+        out += p.toString
+    }
+    out.result()
+  }
+
+  private case class RaceCase(name: String, op: String => Any,
+                              setup: String => Unit = _ => (),
+                              foreignProps: Map[String, String] = Map.empty)
+
+  private def cdcTable(d: String): Unit =
+    LogTable.create(spark, d, baseDf, Seq("p"), statsCols = Seq("k"),
+      tableProperties = Map(LogTable.CdcProp -> "true")): Unit
+
+  private val declineFastPath = Map("test.foreign" -> "1")
+
+  private def raceCases: Seq[RaceCase] = {
+    val batch = Seq((1L, "a1", 1, "p1", "U"), (9L, "n", 1, "p1", "U"))
+      .toDF("k", "v", "ver", "p", "op")
+    def merge(d: String) = LogTable.mergeInto(spark, d, batch, Seq("k"))
+      .whenMatchedUpdate(Map("v" -> "s.v")).whenNotMatchedInsert().run()
+    def upsert(d: String) =
+      LogTable.upsert(spark, d, batch, Seq("k"), Seq("ver"), "op")
+    def append(d: String) = LogTable.append(spark, d,
+      Seq((5L, "e", 0, "p1", "U")).toDF("k", "v", "ver", "p", "op"))
+    def withBranch(mainAdvances: Boolean)(d: String): Unit = {
+      cdcTable(d)
+      append(LogTable.createBranch(spark, d, "b")): Unit
+      if (mainAdvances) LogTable.append(spark, d,
+        Seq((7L, "m", 0, "p3", "U")).toDF("k", "v", "ver", "p", "op")): Unit
+    }
+    Seq(
+      RaceCase("append", append, cdcTable),
+      RaceCase("append, fast path declined", append, cdcTable, declineFastPath),
+      RaceCase("upsert", upsert, cdcTable),
+      RaceCase("upsert, fast path declined", upsert, cdcTable, declineFastPath),
+      RaceCase("MERGE INTO", merge, cdcTable),
+      RaceCase("MERGE INTO, fast path declined", merge, cdcTable,
+        declineFastPath),
+      RaceCase("rewrite DELETE",
+        d => LogTable.deleteWhere(spark, d, col("k") === 2L), cdcTable),
+      RaceCase("rewrite UPDATE", d => LogTable.updateWhere(spark, d,
+        col("k") === 3L, Map("v" -> lit("z"))), cdcTable),
+      RaceCase("DV DELETE", d => LogTable.deleteWhere(spark, d,
+        col("k") === 2L, deletionVectors = true), cdcTable),
+      RaceCase("DV UPDATE", d => LogTable.updateWhere(spark, d,
+        col("k") === 1L, Map("v" -> lit("z")), deletionVectors = true),
+        cdcTable),
+      RaceCase("purgeDeletes", d => LogTable.purgeDeletes(spark, d), { d =>
+        cdcTable(d)
+        LogTable.deleteWhere(spark, d, col("k") === 2L,
+          deletionVectors = true): Unit
+      }),
+      RaceCase("restore", d => LogTable.restore(spark, d, 1L),
+        { d => cdcTable(d); append(d): Unit }),
+      RaceCase("overwriteAll", d => LogTable.overwriteAll(spark, d,
+        baseDf.filter(col("k") < 3L)), cdcTable),
+      RaceCase("addConstraint",
+        d => LogTable.addConstraint(spark, d, "pos", "k > 0"), cdcTable),
+      RaceCase("dropConstraint",
+        d => LogTable.dropConstraint(spark, d, "pos"), { d =>
+          cdcTable(d)
+          LogTable.addConstraint(spark, d, "pos", "k > 0"): Unit
+        }),
+      RaceCase("evolveSchema", d => LogTable.evolveSchema(spark, d, Seq(
+        org.apache.spark.sql.connector.catalog.TableChange.addColumn(
+          Array("extra"), org.apache.spark.sql.types.LongType, true))),
+        cdcTable),
+      RaceCase("evolvePartitioning",
+        d => LogTable.evolvePartitioning(spark, d, Seq("v")), cdcTable),
+      RaceCase("syncIdentity", d => LogTable.syncIdentity(spark, d), { d =>
+        LogTable.create(spark, d, baseDf, Seq("p"), statsCols = Seq("k"),
+          tableProperties = Map(LogTable.IdentityColProp -> "k")): Unit
+        // a high-water behind the committed values (a history written
+        // by another engine): SYNC IDENTITY has work to do
+        val snap = LogTable.snapshot(spark, d)
+        LogTable.commit(spark, d, snap.version + 1,
+          LogTable.Commit.of(snap, "RESET").copy(dataChange = false,
+            properties = snap.properties + (LogTable.IdentityNextProp -> "1")))
+      }),
+      RaceCase("setProperties",
+        d => LogTable.setProperties(spark, d, Map("owner" -> "x")), cdcTable),
+      RaceCase("migrateConverted", d => LogTable.migrateConverted(spark, d),
+        { d =>
+          Sources.writeParquet(baseDf, d, partitionBy = Seq("p"))
+          LogTable.convert(spark, d, statsCols = Seq("k")): Unit
+        }),
+      RaceCase("MV registry edit",
+        d => MaterializedView.enableAutoRefresh(spark, d + "_mv"), { d =>
+          cdcTable(d)
+          MaterializedView.define(spark, d + "_mv", d, Seq("p"),
+            Seq(MaterializedView.MvCount("n"))): Unit
+        }),
+      RaceCase("publishBranch, fast-forward",
+        d => LogTable.publishBranch(spark, d, "b"), withBranch(false)),
+      RaceCase("publishBranch, rebase",
+        d => LogTable.publishBranch(spark, d, "b"), withBranch(true)))
+  }
+
+  test("commit coordinator is pluggable: a lost publish retries, a win lands") {
+    // every operation that runs through LogTable.transact, each against a twin
+    // table that runs it without the race
+    raceCases.foreach { c =>
+      val root = tmp()
+      val twinRoot = tmp()
+      val (dir, twin) = (root + "/t", twinRoot + "/t")
+      c.setup(dir)
+      c.setup(twin)
+      c.op(twin): Unit
+      val foreign = LogTable.latestVersion(spark, dir) + 1
+      val got = losingFirstPublish(c.foreignProps)(c.op(dir))
+      assert(LogTable.latestVersion(spark, dir) == foreign + 1, c.name)
+      got match {
+        case v: Long => assert(v == foreign + 1, c.name)
+        case _ => ()
       }
-      // the lost race surfaces as a conflict; the retry merges against the
-      // foreign version 2 and lands at 3 through the swapped coordinator
-      val c = Seq((4L, "d1", 1, "p3", "U")).toDF("k", "v", "ver", "p", "op")
-      assert(LogTable.upsert(spark, dir, c, Seq("k"), Seq("ver"), "op") == 3L)
-      assert(calls >= 2, s"coordinator consulted $calls times")
-    } finally LogTable.coordinator = prev
-    assert(LogTable.read(spark, dir).filter($"k" === 4L)
-      .select("v").as[String].head() == "d1")
+      def rows(d: String) = LogTable.read(spark, d).collect()
+        .map(_.toString).sorted.toSeq
+      assert(rows(dir) == rows(twin), c.name)
+      def meta(d: String, r: String) = {
+        val s = LogTable.snapshot(spark, d)
+        (s.schemaDdl, s.partitionCols, s.statsCols, s.constraints,
+          (s.properties -- c.foreignProps.keys)
+            .map { case (k, v) => k -> v.replace(r, "<root>") })
+      }
+      assert(meta(dir, root) == meta(twin, twinRoot), c.name)
+      assert(unreferenced(dir).isEmpty,
+        s"${c.name}: staged files left behind: ${unreferenced(dir)}")
+    }
+  }
+
+  test("maxRetries = 0 and compaction: a lost publish throws and leaves " +
+    "nothing staged") {
+    Seq[(String, String => Unit, String => Any)](
+      ("rewrite DELETE with CDC", cdcTable,
+        d => LogTable.deleteWhere(spark, d, col("k") === 2L, maxRetries = 0)),
+      ("compactPartitions", { d =>
+        cdcTable(d)
+        LogTable.append(spark, d,
+          Seq((5L, "e", 0, "p1", "U")).toDF("k", "v", "ver", "p", "op")): Unit
+      }, d => LogTable.compactPartitions(spark, d, maxFilesPerPartition = 1))
+    ).foreach { case (name, setup, op) =>
+      val dir = tmp() + "/t"
+      setup(dir)
+      val foreign = LogTable.latestVersion(spark, dir) + 1
+      intercept[LogTable.CommitConflictException] {
+        losingFirstPublish(Map.empty)(op(dir))
+      }
+      assert(LogTable.latestVersion(spark, dir) == foreign, name)
+      assert(unreferenced(dir).isEmpty,
+        s"$name: staged files left behind: ${unreferenced(dir)}")
+    }
+  }
+
+  test("a failed CDC write leaves none of the transaction's files behind") {
+    val dir = tmp() + "/t"
+    cdcTable(dir)
+    val v = LogTable.latestVersion(spark, dir)
+    val failing = spark.newSession()
+    failing.conf.set("fs.file.impl", classOf[FailCdcRenameFs].getName)
+    failing.conf.set("fs.file.impl.disable.cache", "true")
+    val batch = failing.createDataFrame(Seq((1L, "a1", 1, "p1", "U"),
+      (9L, "n", 1, "p1", "U"))).toDF("k", "v", "ver", "p", "op")
+    Seq[(String, () => Any)](
+      "upsert" -> (() =>
+        LogTable.upsert(failing, dir, batch, Seq("k"), Seq("ver"), "op")),
+      "rewrite DELETE" -> (() =>
+        LogTable.deleteWhere(failing, dir, col("k") === 2L)),
+      "MERGE INTO" -> (() => LogTable.mergeInto(failing, dir, batch, Seq("k"))
+        .whenMatchedUpdate(Map("v" -> "s.v")).whenNotMatchedInsert().run())
+    ).foreach { case (name, op) =>
+      intercept[java.io.IOException](op())
+      assert(LogTable.latestVersion(spark, dir) == v, name)
+      assert(unreferenced(dir).isEmpty,
+        s"$name: staged files left behind: ${unreferenced(dir)}")
+    }
+    assert(LogTable.read(spark, dir).count() == 4L)
   }
 
   test("a disjoint-partition loser re-commits its staged files without re-merging") {

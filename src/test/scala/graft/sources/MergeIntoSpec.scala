@@ -535,14 +535,14 @@ class MergeIntoSpec extends SparkSpec {
     LogTable.evolveSchema(spark, dir, Seq(
       org.apache.spark.sql.connector.catalog.TableChange.addColumn(
         Array("extra"), org.apache.spark.sql.types.LongType, true))): Unit
-    assert(LogTable.recommitDisjoint(spark, dir, base, base.schemaDdl,
-      Nil, Nil, Set.empty, maxRetries = 1).isEmpty,
+    assert(LogTable.recommitDisjoint(spark, dir, base,
+      LogTable.Commit.of(base, "MERGE"), Nil, maxRetries = 1).isEmpty,
       "DDL drift must force the full re-merge")
     // winner 2: a properties change (e.g. REGISTER_MV / SET TBLPROPERTIES)
     val snap2 = LogTable.snapshot(spark, dir)
     LogTable.setProperties(spark, dir, Map("owner" -> "t2")): Unit
-    assert(LogTable.recommitDisjoint(spark, dir, snap2, snap2.schemaDdl,
-      Nil, Nil, Set.empty, maxRetries = 1).isEmpty,
+    assert(LogTable.recommitDisjoint(spark, dir, snap2,
+      LogTable.Commit.of(snap2, "MERGE"), Nil, maxRetries = 1).isEmpty,
       "a properties winner must never be silently reverted")
   }
 }

@@ -48,10 +48,9 @@ class ProtocolSpec extends SparkSpec {
     mk(t)
     val snap = LogTable.snapshot(spark, t)
     // simulate a future writer: a raw commit carrying minreader=99
-    LogTable.commit(spark, t, snap.version + 1, snap.schemaDdl,
-      snap.partitionCols, snap.statsCols, Nil, Nil, dataChange = false,
-      operation = "FUTURE_FEATURE",
-      properties = snap.properties + ("protocol.minreader" -> "99"))
+    LogTable.commit(spark, t, snap.version + 1,
+      LogTable.Commit.of(snap, "FUTURE_FEATURE").copy(dataChange = false,
+        properties = snap.properties + ("protocol.minreader" -> "99")))
     val e = intercept[IllegalArgumentException] {
       LogTable.snapshot(spark, t): Unit
     }
