@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * {{{
   * table/
-  *   part-<job>-<task>-<uuid>.parquet     immutable data files
+  *   part-<task>-<uuid>-c000.snappy.parquet  immutable data files
   *   _graft_log/00000000000000000001.json ordered commits
   * }}}
   *
@@ -170,10 +170,7 @@ object LogTable extends org.apache.spark.internal.Logging {
         k.drop(ColMapMapPrefix.length) -> v
     }
     /** This column's at-rest name (identity when never renamed). */
-    def physicalOf(logical: String): String =
-      colMap.collectFirst {
-        case (l, p) if l.equalsIgnoreCase(logical) => p
-      }.getOrElse(logical)
+    def physicalOf(logical: String): String = physicalIn(colMap, logical)
 
     /** NESTED column mapping — the struct-field extension of [[colMap]]:
       * `colmap.nest.<physParentPath>.<logical> = <physLeaf>` maps one
@@ -640,64 +637,51 @@ object LogTable extends org.apache.spark.internal.Logging {
     col(path.split("\\.").iterator
       .map(s => "`" + s.replace("`", "``") + "`").mkString("."))
 
-  /** A logical-named struct VALUE rebuilt under physical leaf names (the
-    * write direction), or vice versa (the read direction) — shared by
-    * batch reads, the write path, and the streaming source. The rebuild
-    * wraps in `when(isNotNull)` so a NULL struct stays NULL instead of
-    * becoming a struct of NULLs; subtrees with no mapping below them
-    * pass through untouched (no plan nodes added).
+  /** A logical-named struct VALUE rebuilt under physical leaf names
+    * (`toPhysical`, the write direction), or vice versa (the read
+    * direction) — shared by batch reads, the write path, and the
+    * streaming source. The rebuild wraps in `when(isNotNull)` so a NULL
+    * struct stays NULL instead of becoming a struct of NULLs; subtrees
+    * with no mapping below them pass through untouched (no plan nodes
+    * added). ARRAY OF STRUCTS: the mapping's path crosses the element
+    * layer as the `element` segment (the DSv2 convention), each element
+    * rebuilt with transform(); MAP OF STRUCTS: it crosses the value layer
+    * as the `value` segment, each value rebuilt with transform_values()
+    * (keys are opaque scalars and never remap).
     */
-  private[sources] def colToPhysical(c: Column, logicalDt: DataType,
-      physPath: String, nestMaps: Map[String, Map[String, String]]): Column =
+  private[sources] def colRemapped(c: Column, logicalDt: DataType,
+      physPath: String, nestMaps: Map[String, Map[String, String]],
+      toPhysical: Boolean): Column = {
+    def in(x: Column, dt: DataType, path: String) =
+      colRemapped(x, dt, path, nestMaps, toPhysical)
     logicalDt match {
       case st: StructType if nestMappedBelowIn(nestMaps, physPath) =>
         val rebuilt = struct(st.fields.toIndexedSeq.map { f =>
           val pn = nestPhysIn(nestMaps, physPath, f.name)
-          colToPhysical(c.getField(f.name), f.dataType,
-            physPath + "." + pn, nestMaps).as(pn)
+          val (from, to) = if (toPhysical) (f.name, pn) else (pn, f.name)
+          in(c.getField(from), f.dataType, physPath + "." + pn).as(to)
         }: _*)
         when(c.isNotNull, rebuilt)
-      // ARRAY OF STRUCTS: the mapping's path crosses the element layer
-      // as the `element` segment (the DSv2 convention) — rebuild each
-      // element with transform(); a NULL array stays NULL
       case at: ArrayType if at.elementType.isInstanceOf[StructType] &&
           nestMappedBelowIn(nestMaps, physPath + ".element") =>
         when(c.isNotNull, org.apache.spark.sql.functions.transform(c,
-          x => colToPhysical(x, at.elementType,
-            physPath + ".element", nestMaps)))
-      // MAP OF STRUCTS: the mapping crosses the value layer as the
-      // `value` segment — rebuild each value with transform_values();
-      // keys are opaque scalars and never remap
+          x => in(x, at.elementType, physPath + ".element")))
       case mt: MapType if mt.valueType.isInstanceOf[StructType] &&
           nestMappedBelowIn(nestMaps, physPath + ".value") =>
         when(c.isNotNull, org.apache.spark.sql.functions.transform_values(c,
-          (_, v) => colToPhysical(v, mt.valueType,
-            physPath + ".value", nestMaps)))
+          (_, v) => in(v, mt.valueType, physPath + ".value")))
       case _ => c
     }
+  }
 
-  private[sources] def colToLogical(c: Column, logicalDt: DataType,
-      physPath: String, nestMaps: Map[String, Map[String, String]]): Column =
-    logicalDt match {
-      case st: StructType if nestMappedBelowIn(nestMaps, physPath) =>
-        val rebuilt = struct(st.fields.toIndexedSeq.map { f =>
-          val pn = nestPhysIn(nestMaps, physPath, f.name)
-          colToLogical(c.getField(pn), f.dataType,
-            physPath + "." + pn, nestMaps).as(f.name)
-        }: _*)
-        when(c.isNotNull, rebuilt)
-      case at: ArrayType if at.elementType.isInstanceOf[StructType] &&
-          nestMappedBelowIn(nestMaps, physPath + ".element") =>
-        when(c.isNotNull, org.apache.spark.sql.functions.transform(c,
-          x => colToLogical(x, at.elementType,
-            physPath + ".element", nestMaps)))
-      case mt: MapType if mt.valueType.isInstanceOf[StructType] &&
-          nestMappedBelowIn(nestMaps, physPath + ".value") =>
-        when(c.isNotNull, org.apache.spark.sql.functions.transform_values(c,
-          (_, v) => colToLogical(v, mt.valueType,
-            physPath + ".value", nestMaps)))
-      case _ => c
-    }
+  /** A top-level column's at-rest name under `colMap` (identity when
+    * never renamed; logical names match case-insensitively).
+    */
+  private[sources] def physicalIn(colMap: Map[String, String],
+                                  logical: String): String =
+    colMap.collectFirst {
+      case (l, p) if l.equalsIgnoreCase(logical) => p
+    }.getOrElse(logical)
 
   /** A logical StructType re-titled under physical names, recursively —
     * the generalization of the flat `f.copy(name = physicalOf(f.name))`.
@@ -705,13 +689,10 @@ object LogTable extends org.apache.spark.internal.Logging {
   private[sources] def physicalizeStruct(st: StructType,
       colMap: Map[String, String],
       nestMaps: Map[String, Map[String, String]]): StructType = {
-    def phys(n: String): String = colMap.collectFirst {
-      case (l, p) if l.equalsIgnoreCase(n) => p
-    }.getOrElse(n)
     def conv(s: StructType, parentPhys: Option[String]): StructType =
       StructType(s.fields.map { f =>
         val pn = parentPhys match {
-          case None => phys(f.name)
+          case None => physicalIn(colMap, f.name)
           case Some(pp) => nestPhysIn(nestMaps, pp, f.name)
         }
         val childPath = parentPhys.map(_ + "." + pn).getOrElse(pn)
@@ -2845,18 +2826,19 @@ object LogTable extends org.apache.spark.internal.Logging {
   }
 
   /** Persist one transaction's deletion-vector rows as a single sidecar
-    * parquet file in the table root (invisible until a commit references
-    * it) — v2 by default: per-file roaring bitmaps, ~100× denser than
-    * the v1 pair rows on dense runs; v1 written only under the spec's
-    * compat flag, sorted by (file, row_index) for run-length-friendly
-    * encoding. One file BY DESIGN: a vector's size is O(marked rows),
+    * parquet file, written by `GraftBridge.writeFiles` straight into the
+    * table root at its final name (`dv-`/`dv2-` + 12 chars + `.parquet`),
+    * invisible until a commit references it. v2 by default: per-file
+    * roaring bitmaps, ~100× denser than the v1 pair rows on dense runs;
+    * v1 written only under the spec's compat flag, sorted by (file,
+    * row_index) for run-length-friendly encoding. One file BY DESIGN: a vector's size is O(marked rows),
     * and the DV path's contract is selective deletes — a delete big
     * enough to produce an oversized vector wants the rewrite path (or
     * ends in full-file drops, which need no vector at all).
     */
   private def writeDvFile(spark: SparkSession, path: String,
                           pairs: DataFrame): String = {
-    val staged =
+    val (df, prefix) =
       if (!dvWriteV2)
         (pairs.repartition(1)
           .sortWithinPartitions(col("file"), col("row_index")), "dv-")
@@ -2879,20 +2861,10 @@ object LogTable extends org.apache.spark.internal.Logging {
           }.toDF("file", "bitmap")
         (bitmaps.repartition(1), Dv2Prefix)
       }
-    val (df, prefix) = staged
-    val fs = fsOf(spark, path)
-    val tmp = new Path(path,
-      "_tmp_" + java.util.UUID.randomUUID().toString.take(8))
-    try {
-      df.write.mode("overwrite").parquet(tmp.toString)
-      val part = fs.listStatus(tmp).iterator.map(_.getPath)
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new java.io.IOException(s"no parquet output under $tmp"))
-      val name = prefix + java.util.UUID.randomUUID().toString.take(12) + ".parquet"
-      if (!fs.rename(part, new Path(path, name)))
-        throw new java.io.IOException(s"rename $part -> $name failed")
-      name
-    } finally { fs.delete(tmp, true): Unit }
+    // one task, and no record cap: the sidecar is exactly one file
+    val Seq((name, _)) = org.apache.spark.sql.GraftBridge.writeFiles(spark,
+      df, path, Map("maxRecordsPerFile" -> "0"), Nil, sidecar = Some(prefix))
+    name
   }
 
   /** Materialize every deletion vector: rewrite each DV'd file's LIVE
@@ -3854,10 +3826,10 @@ object LogTable extends org.apache.spark.internal.Logging {
   }
 
   /** Write one DML transaction's changed rows (`cdcDf0`: the table's
-    * LOGICAL columns + `_change_type`) as parquet CDC files under
-    * `_change_data/` — invisible until the commit references them (the
-    * write-once + atomic-publish discipline of every other artifact).
-    * Data columns land under PHYSICAL names, exactly like data files, so
+    * LOGICAL columns + `_change_type`) as parquet CDC files straight into
+    * `_change_data/` through `GraftBridge.writeFiles` — invisible until
+    * the commit references them, like every other table file. Data
+    * columns land under PHYSICAL names, exactly like data files, so
     * column renames never invalidate old CDC files. Cost: one pass over
     * the CHANGED rows only. An empty change set still writes one empty
     * part (FileFormatWriter's empty-frame file), so the commit carries a
@@ -3867,35 +3839,11 @@ object LogTable extends org.apache.spark.internal.Logging {
   private[sources] def writeCdcFiles(spark: SparkSession, path: String,
                                      cdcDf0: DataFrame,
                                      snap: Snapshot): Seq[CdcFile] = {
-    val df =
-      if (snap.colMap.isEmpty && snap.nestMaps.isEmpty) cdcDf0
-      else cdcDf0.select(cdcDf0.schema.fields.toIndexedSeq.map { f =>
-        if (f.name == "_change_type") col("_change_type")
-        else {
-          val pn = snap.physicalOf(f.name)
-          colToPhysical(col("`" + f.name.replace("`", "``") + "`"),
-            f.dataType, pn, snap.nestMaps).as(pn)
-        }
-      }: _*)
-    val fs = fsOf(spark, path)
-    val tmp = new Path(path,
-      "_tmp_" + java.util.UUID.randomUUID().toString.take(8))
-    try {
-      withDesc(spark, s"write-cdc-files($path)") {
-        df.write.mode("overwrite").parquet(tmp.toString)
-      }
-      val dir = new Path(path, CdcDir)
-      if (!fs.exists(dir)) fs.mkdirs(dir): Unit
-      fs.listStatus(tmp).iterator
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map { st =>
-          val name = CdcDir + "/" + st.getPath.getName
-          val dst = new Path(path, name)
-          if (!fs.rename(st.getPath, dst))
-            throw new java.io.IOException(s"rename ${st.getPath} -> $dst failed")
-          CdcFile(name, st.getLen)
-        }.toIndexedSeq
-    } finally { fs.delete(tmp, true): Unit }
+    val df = toPhysical(cdcDf0, snap.colMap, snap.nestMaps, Seq("_change_type"))
+    withDesc(spark, s"write-cdc-files($path)") {
+      org.apache.spark.sql.GraftBridge.writeFiles(spark, df,
+        new Path(path, CdcDir).toString, Map.empty, Nil)
+    }.map { case (name, bytes) => CdcFile(CdcDir + "/" + name, bytes) }
   }
 
   /** The rows of one commit's CDC files, read under `snap`'s schema
@@ -5017,12 +4965,12 @@ object LogTable extends org.apache.spark.internal.Logging {
 
   /** Reclaim everything invisible to the CURRENT snapshot: unreferenced
     * data files (crash orphans and vacated history), whole `_tmp_*`
-    * scratch directories from writers that died before their renames,
-    * and torn `.tmp` commit/checkpoint files in the log. Irreversibly
-    * breaks time travel behind the current version; `olderThanMs` must
-    * out-wait any in-flight reader of an old snapshot and any writer
-    * that has staged but not committed. Returns the number of
-    * files/directories deleted.
+    * scratch directories (only older writers made them: table files now
+    * land at their final names), and torn `.tmp` commit/checkpoint files
+    * in the log. Irreversibly breaks time travel behind the current
+    * version; `olderThanMs` must out-wait any in-flight reader of an old
+    * snapshot and any writer that has staged but not committed. Returns
+    * the number of files/directories deleted.
     */
   /** The youngest age [[vacuum]] accepts without `force` — the
     * Delta-style retention guard: reclaiming younger files can yank data
@@ -6295,6 +6243,24 @@ object LogTable extends org.apache.spark.internal.Logging {
       substring_index(col("_metadata.file_path"), "/", -1).as("__gdv_file"),
       col("_metadata.row_index").as("__gdv_idx"))
 
+  /** Rename a LOGICAL-named frame to the PHYSICAL names every written
+    * byte carries — recursively, for nested-renamed struct fields —
+    * carrying `extras` (a CDC frame's `_change_type`) through untouched.
+    * The identity mapping adds no plan node.
+    */
+  private def toPhysical(df: DataFrame, colMap: Map[String, String],
+                         nestMaps: Map[String, Map[String, String]],
+                         extras: Seq[String] = Nil): DataFrame =
+    if (colMap.isEmpty && nestMaps.isEmpty) df
+    else df.select(df.schema.fields.toIndexedSeq.map { f =>
+      if (extras.contains(f.name)) col(f.name)
+      else {
+        val pn = physicalIn(colMap, f.name)
+        colRemapped(col("`" + f.name.replace("`", "``") + "`"), f.dataType,
+          pn, nestMaps, toPhysical = true).as(pn)
+      }
+    }: _*)
+
   /** Alias a PHYSICAL-named frame (fresh off the files) back to the
     * snapshot's LOGICAL names, carrying `extras` (tags, DV helpers)
     * through untouched. The identity-mapping fast path adds NO plan
@@ -6306,8 +6272,8 @@ object LogTable extends org.apache.spark.internal.Logging {
       if (snap.colMap.isEmpty && snap.nestMaps.isEmpty) df
       else df.select(snap.schema.fields.toIndexedSeq.map { f =>
         val pn = snap.physicalOf(f.name)
-        colToLogical(col("`" + pn.replace("`", "``") + "`"), f.dataType,
-          pn, snap.nestMaps).as(f.name)
+        colRemapped(col("`" + pn.replace("`", "``") + "`"), f.dataType,
+          pn, snap.nestMaps, toPhysical = false).as(f.name)
       } ++ extras.map(col): _*)
     // generated columns introduced by PARTITION EVOLUTION: files written
     // before the evolution lack the column physically (the scan NULL
@@ -6714,6 +6680,14 @@ object LogTable extends org.apache.spark.internal.Logging {
     FileStatsSpec(tracked, ndvTracked, histTracked, aggs, partitionCols.nonEmpty)
   }
 
+  /** Write `df0` (LOGICAL names) as the table's data files, straight into
+    * the table root at their final names through `GraftBridge.writeFiles`
+    * — invisible until a commit references them. One planned query: a
+    * range shuffle on (partition values, layout key, salt), then the
+    * parquet write, whose tasks fold each file's stats as they write it.
+    * Returns the non-empty files with their stats; a zero-row file is
+    * deleted, never returned.
+    */
   private[sources] def writeDataFiles(spark: SparkSession, path: String,
                              df0: DataFrame,
                              partitionCols: Seq[String],
@@ -6729,25 +6703,9 @@ object LogTable extends org.apache.spark.internal.Logging {
                              histCols: Seq[String] = Nil,
                              sizeHintBytes: Option[Long] = None)
       : Seq[LogFile] = {
-    // everything at rest is PHYSICAL: the incoming frame speaks logical
-    // names — rename through the snapshot's column mapping (recursively,
-    // for nested-renamed struct fields) before any byte lands
-    // (partition/stats/bloom/layout params are already the at-rest
-    // physical names, so they match the renamed frame)
-    val df =
-      if (colMap.isEmpty && nestMaps.isEmpty) df0
-      else {
-        def phys(n: String): String = colMap.collectFirst {
-          case (l, p) if l.equalsIgnoreCase(n) => p
-        }.getOrElse(n)
-        df0.select(df0.schema.fields.toIndexedSeq.map { f =>
-          val pn = phys(f.name)
-          colToPhysical(col("`" + f.name.replace("`", "``") + "`"),
-            f.dataType, pn, nestMaps).as(pn)
-        }: _*)
-      }
-    val fs = fsOf(spark, path)
-    val tmp = new Path(path, "_tmp_" + java.util.UUID.randomUUID().toString.take(8))
+    // partition/stats/bloom/layout params are already the at-rest
+    // physical names, so they match the renamed frame
+    val df = toPhysical(df0, colMap, nestMaps)
     // partition-clustered output: RANGE partitioning on (partition
     // values..., cluster values..., salt). The leading values keep equal
     // tuples adjacent and never hash-collide distant values into one
@@ -6815,12 +6773,12 @@ object LogTable extends org.apache.spark.internal.Logging {
       else None
     }
     try {
-    val shuffled = df.withColumn("__salt",
+    val shuffled = df.withColumn("__graft_salt",
         if (saltCols.isEmpty) lit(0L)
         else pmod(xxhash64(struct(saltCols: _*)), lit(1L << 20)))
       .repartitionByRange(n,
-        (partitionCols.map(col) ++ layout) :+ col("__salt"): _*)
-      .drop("__salt")
+        (partitionCols.map(col) ++ layout) :+ col("__graft_salt"): _*)
+      .drop("__graft_salt")
     // Per-file stats WITHOUT a second query: the writer tasks fold every
     // row they write into per-file buffers ([[FileStatsTracker]]) that
     // evaluate the same Catalyst aggregates a rescan grouped by file
@@ -6833,31 +6791,19 @@ object LogTable extends org.apache.spark.internal.Logging {
     withDesc(spark, s"write-shuffle($path)") {
       org.apache.spark.sql.GraftBridge.runShuffleStages(shuffled)
     }
-    withDesc(spark, s"write-data-files($path)") {
-      org.apache.spark.sql.GraftBridge.writeFiles(shuffled, tmp.toString,
+    val bytesOf = withDesc(spark, s"write-data-files($path)") {
+      org.apache.spark.sql.GraftBridge.writeFiles(spark, shuffled, path,
         bloomOpts, Seq(tracker))
-    }
-    val bytesOf = fs.listStatus(tmp).iterator
-      .map(st => st.getPath.getName -> st.getLen).toMap
+    }.toMap
+    val (adds, empty) = tracker.files.toIndexedSeq.map { case (name, r) =>
+      spec.logFile(name, bytesOf(name), r)
+    }.partition(_.rows > 0L)
     // a zero-row file (footer-only artifact of an empty write) carries
-    // no information — it is never referenced and dies with the tmp dir
-    val adds = tracker.files.toIndexedSeq.map { case (name, r) =>
-      spec.logFile(name, bytesOf.getOrElse(name, throw new java.io.IOException(
-        s"written file $name missing under $tmp")), r)
-    }.filter(_.rows > 0L)
-    adds.foreach { f =>
-      val src = new Path(tmp, f.name)
-      val dst = new Path(path, f.name)
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"rename $src -> $dst failed")
-    }
+    // no information: it is never referenced, so it goes now
+    val fs = fsOf(spark, path)
+    empty.foreach(f => deleteUnreferenced(fs, new Path(path, f.name)))
     adds
-    } finally {
-      // the tmp dir goes on failure too — a failed write or rename must
-      // not leave it for vacuum
-      try fs.delete(tmp, true): Unit
-      finally inputCache.foreach(_.unpersist(): Unit)
-    }
+    } finally inputCache.foreach(_.unpersist(): Unit)
   }
 
   private def commitJson(version: Long, schemaDdl: String,
@@ -7434,17 +7380,21 @@ object LogTable extends org.apache.spark.internal.Logging {
     private[LogTable] def discard(): Unit =
       if (!staged.isEmpty) {
         val fs = fsOf(spark, path)
-        staged.forEach { n =>
-          try fs.delete(dataPath(path, n), false): Unit
-          catch { case scala.util.control.NonFatal(e) =>
-            logWarning(s"graft: could not delete staged file $n of $path " +
-              "(vacuum reclaims it)", e)
-          }
-        }
+        staged.forEach(n => deleteUnreferenced(fs, dataPath(path, n)))
         staged.clear()
       }
     private[LogTable] def release(): Unit = cached.forEach(_.unpersist(): Unit)
   }
+
+  /** Delete a file no commit references, best effort: a failure is
+    * logged and leaves the file to vacuum's retention rule.
+    */
+  private def deleteUnreferenced(fs: FileSystem, p: Path): Unit =
+    try fs.delete(p, false): Unit
+    catch { case scala.util.control.NonFatal(e) =>
+      logWarning(s"graft: could not delete unreferenced file $p " +
+        "(vacuum reclaims it)", e)
+    }
 
   /** The optimistic transaction loop (Delta's `OptimisticTransaction`
     * shape) and the one place a lost commit race is handled. Each attempt
@@ -7491,8 +7441,8 @@ object LogTable extends org.apache.spark.internal.Logging {
   }
 
   /** A transaction's data write with its CDC write (when `cdcRows` is
-    * given) overlapped on a side thread — independent jobs into disjoint
-    * tmp dirs (guide §2.6), so one write's task tail back-fills with the
+    * given) overlapped on a side thread — independent jobs writing
+    * disjoint files (guide §2.6), so one write's task tail back-fills with the
     * other's tasks. Both sides' files are staged with `tx` as they land,
     * and the side job never outlives a failed data write.
     */

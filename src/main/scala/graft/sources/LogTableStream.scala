@@ -157,9 +157,9 @@ final class LogTableStreamSource(spark: SparkSession, path: String,
       if (colMap.isEmpty && nestMaps.isEmpty) raw
       else raw.select(pinned.fields.zip(pinnedPhysical.fields)
         .map { case (lf, pf) =>
-          LogTable.colToLogical(
+          LogTable.colRemapped(
             col("`" + pf.name.replace("`", "``") + "`"),
-            lf.dataType, pf.name, nestMaps).as(lf.name)
+            lf.dataType, pf.name, nestMaps, toPhysical = false).as(lf.name)
         }.toIndexedSeq ++ extras.map(col): _*)
     lateGens.foldLeft(logical0) { case (d, (c, g)) =>
       pinned.fields.find(_.name.equalsIgnoreCase(c)) match {

@@ -43,36 +43,42 @@ object GraftBridge {
       case _ => ()
     }
 
-  /** Write a frame as parquet files under `dir` in ONE planned query:
-    * `FileFormatWriter.write` over the frame's own executed plan (the
-    * pattern of Delta's transactional write), with `trackers` riding the
-    * writer tasks. A `df.write.parquet(dir)` would wrap the frame in a
-    * write command and plan it again. Committer, Hadoop conf, options,
-    * output metrics and the recorded nullability match that path.
+  /** Write a frame as parquet files straight into `dir` in ONE planned
+    * query: `FileFormatWriter.write` over the frame's own executed plan
+    * (the pattern of Delta's transactional write), with `trackers` riding
+    * the writer tasks. Every file lands at its final name through
+    * [[graft.sources.InPlaceCommitProtocol]] (a `sidecar` prefix names
+    * one-file-per-task sidecars); returns each file's name, relative to
+    * `dir`, and size. The files open under `spark`'s Hadoop conf — the
+    * session of the operation, whose conf also reaches the table's log —
+    * whichever session `data` came from. A `df.write.parquet(dir)` would
+    * wrap the frame in a write command and plan it again. Options, output
+    * metrics and the recorded nullability match that path.
     */
-  def writeFiles(data: DataFrame, dir: String, options: Map[String, String],
-                 trackers: Seq[execution.datasources.WriteJobStatsTracker]): Unit = {
+  def writeFiles(spark: SparkSession, data: DataFrame, dir: String,
+                 options: Map[String, String],
+                 trackers: Seq[execution.datasources.WriteJobStatsTracker],
+                 sidecar: Option[String] = None): Seq[(String, Long)] = {
     import execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
-    val spark = data.sparkSession.asInstanceOf[classic.SparkSession]
+    val session = data.sparkSession.asInstanceOf[classic.SparkSession]
     val qe = data.queryExecution
     val plan = qe.executedPlan
     val output = plan.output.zip(data.schema.fields).map { case (a, f) =>
       a.withNullability(f.nullable)
     }
     val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
-    val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
-      spark.sessionState.conf.fileCommitProtocolClass,
-      jobId = java.util.UUID.randomUUID().toString, outputPath = dir)
+    val committer = new graft.sources.InPlaceCommitProtocol(dir, sidecar)
     val basic = new BasicWriteJobStatsTracker(
       new org.apache.spark.util.SerializableConfiguration(hadoopConf),
       BasicWriteJobStatsTracker.metrics)
     execution.SQLExecution.withNewExecutionId(qe, Some("graft-write")) {
-      FileFormatWriter.write(spark, plan,
+      FileFormatWriter.write(session, plan,
         new execution.datasources.parquet.ParquetFileFormat, committer,
         FileFormatWriter.OutputSpec(dir, Map.empty, output), hadoopConf,
         partitionColumns = Nil, bucketSpec = None,
         statsTrackers = basic +: trackers, options = options)
     }: Unit
+    committer.files
   }
 
   /** Snapshot of the calling thread's SparkContext-local properties

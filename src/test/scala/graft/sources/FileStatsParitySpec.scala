@@ -9,27 +9,6 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 
-/** A filesystem whose rename of a written data file out of a write's
-  * `_tmp_*` directory fails — the committer's own renames (under
-  * `_temporary`) and every other rename pass through.
-  */
-class FailDataRenameFs extends org.apache.hadoop.fs.LocalFileSystem {
-  override def rename(src: Path, dst: Path): Boolean =
-    if (src.getParent.getName.startsWith("_tmp_") &&
-        src.getName.startsWith("part-")) false
-    else super.rename(src, dst)
-}
-
-/** A filesystem whose renames into a table's `_change_data/` directory
-  * fail — the CDC side of a transaction fails after its data write
-  * succeeded. Every other rename passes through.
-  */
-class FailCdcRenameFs extends org.apache.hadoop.fs.LocalFileSystem {
-  override def rename(src: Path, dst: Path): Boolean =
-    if (dst.getParent.getName == LogTable.CdcDir) false
-    else super.rename(src, dst)
-}
-
 /** The per-file stats the writer tasks fold while they write must equal
   * what a RESCAN of the written files computes — the same aggregates
   * grouped by file over a read of exactly the table's live files.
@@ -160,11 +139,12 @@ class FileStatsParitySpec extends SparkSpec {
     assert(LogTable.read(spark, t2).count() == 30L)
   }
 
-  test("a failed rename out of the write's tmp dir leaves no tmp dir behind") {
+  test("a failed create of a data, DV or CDC file leaves no tmp dir and no " +
+    "unreferenced file behind") {
     val t = tmp() + "/t"
     mkTable(t, 60)
     val failing = spark.newSession()
-    failing.conf.set("fs.file.impl", classOf[FailDataRenameFs].getName)
+    failing.conf.set("fs.file.impl", classOf[FailTableFileCreateFs].getName)
     failing.conf.set("fs.file.impl.disable.cache", "true")
     LogTable.setProperties(spark, t, Map(LogTable.CdcProp -> "true")): Unit
     val v = LogTable.snapshot(spark, t).version
@@ -177,12 +157,15 @@ class FileStatsParitySpec extends SparkSpec {
       "rewrite delete with CDC" -> (() =>
         LogTable.deleteWhere(failing, t, col("k") === 6L))
     ).foreach { case (name, op) =>
-      intercept[java.io.IOException](op())
+      val e = intercept[Exception](op())
+      assert(TableFaults.injected(e), s"$name: $e")
       val left = LogTable.fsOf(spark, t).listStatus(new Path(t))
         .map(_.getPath.getName).filter(_.startsWith("_tmp_"))
       assert(left.isEmpty,
         s"$name: tmp dirs left behind: ${left.mkString(", ")}")
       assert(LogTable.snapshot(spark, t).version == v, name)
+      val orphans = TableFaults.unreferenced(spark, t)
+      assert(orphans.isEmpty, s"$name: unreferenced files left: $orphans")
     }
   }
 }

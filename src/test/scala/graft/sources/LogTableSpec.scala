@@ -117,6 +117,33 @@ class LogTableSpec extends SparkSpec {
       .select("v").as[String].head() == "b9")
   }
 
+  test("a user column named like the write's salt survives create, append and read") {
+    val dir = tmp() + "/t"
+    val rows = (1L to 24L).map(k => (k, s"s$k", "p" + (k % 3)))
+    LogTable.create(spark, dir, rows.take(16).toDF("k", "__Salt", "p"), "p")
+    LogTable.append(spark, dir, rows.drop(16).toDF("k", "__Salt", "p"))
+    assert(LogTable.read(spark, dir).select("k", "__Salt", "p")
+      .as[(Long, String, String)].collect().sortBy(_._1).toSeq == rows)
+  }
+
+  test("a DV delete under a per-file record cap keeps every mark") {
+    val dir = tmp() + "/t"
+    LogTable.create(spark, dir,
+      (1L to 40L).map(k => (k, "p" + (k % 4))).toDF("k", "p"), "p")
+    assert(LogTable.snapshot(spark, dir).files.size >= 2)
+    // one sidecar row per marked file: a cap of one record per file must
+    // not split the sidecar
+    val cap = "spark.sql.files.maxRecordsPerFile"
+    val prev = spark.conf.getOption(cap)
+    spark.conf.set(cap, "1")
+    try LogTable.deleteWhere(spark, dir, pmod(col("k"), lit(2L)) === 0L,
+      deletionVectors = true)
+    finally prev.fold(spark.conf.unset(cap))(spark.conf.set(cap, _))
+    assert(LogTable.snapshot(spark, dir).files.forall(_.dv.isDefined))
+    assert(LogTable.read(spark, dir).select("k").as[Long].collect().sorted.toSeq ==
+      (1L to 40L by 2L))
+  }
+
   test("uncommitted data files are invisible; vacuum reclaims them but never live ones") {
     val dir = tmp() + "/t"
     LogTable.create(spark, dir, baseDf, "p")
@@ -690,24 +717,8 @@ class LogTableSpec extends SparkSpec {
   /** Parquet files under the table that no version references — what a
     * transaction staged and failed to clean up.
     */
-  private def unreferenced(dir: String): Seq[String] = {
-    val fs = LogTable.fsOf(spark, dir)
-    def q(p: org.apache.hadoop.fs.Path) = fs.makeQualified(p).toString
-    val referenced = (1L to LogTable.latestVersion(spark, dir)).flatMap { v =>
-      val c = LogTable.commitAt(spark, dir, v)
-      c.adds.flatMap(f => f.name +: f.dv.map(_.name).toSeq) ++ c.cdc.map(_.name)
-    }.map(n => q(LogTable.dataPath(dir, n))).toSet
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (p.getName.endsWith(".parquet") && !p.getName.startsWith(".") &&
-          !p.toString.contains("/_graft_log/") &&
-          !p.toString.contains("/_branches/") && !referenced(q(p)))
-        out += p.toString
-    }
-    out.result()
-  }
+  private def unreferenced(dir: String): Seq[String] =
+    TableFaults.unreferenced(spark, dir)
 
   private case class RaceCase(name: String, op: String => Any,
                               setup: String => Unit = _ => (),
@@ -862,7 +873,7 @@ class LogTableSpec extends SparkSpec {
     cdcTable(dir)
     val v = LogTable.latestVersion(spark, dir)
     val failing = spark.newSession()
-    failing.conf.set("fs.file.impl", classOf[FailCdcRenameFs].getName)
+    failing.conf.set("fs.file.impl", classOf[FailCdcCreateFs].getName)
     failing.conf.set("fs.file.impl.disable.cache", "true")
     val batch = failing.createDataFrame(Seq((1L, "a1", 1, "p1", "U"),
       (9L, "n", 1, "p1", "U"))).toDF("k", "v", "ver", "p", "op")
@@ -874,7 +885,8 @@ class LogTableSpec extends SparkSpec {
       "MERGE INTO" -> (() => LogTable.mergeInto(failing, dir, batch, Seq("k"))
         .whenMatchedUpdate(Map("v" -> "s.v")).whenNotMatchedInsert().run())
     ).foreach { case (name, op) =>
-      intercept[java.io.IOException](op())
+      val e = intercept[Exception](op())
+      assert(TableFaults.injected(e), s"$name: $e")
       assert(LogTable.latestVersion(spark, dir) == v, name)
       assert(unreferenced(dir).isEmpty,
         s"$name: staged files left behind: ${unreferenced(dir)}")
