@@ -1191,7 +1191,7 @@ object LogTable extends org.apache.spark.internal.Logging {
         clusterBy = clusterBy, bloomCols = bloomFilterCols,
         zorderBy = zorderBy, ndvCols = ndvColsOf(tableProperties),
         histCols = histColsOf(tableProperties),
-        sizeHintBytes = scanBackedBytes(df0))
+        sizeHintBytes = scanBackedBytes(df0))._1
       finally drainFillCaches()
     // identity high-water seeds from the create's own rows (START WITH
     // if none), lattice-aligned past the seed rows' furthest value
@@ -2151,7 +2151,7 @@ object LogTable extends org.apache.spark.internal.Logging {
             bloomCols = snap.bloomCols,
             zorderBy = zorderBy.map(snap.physicalOf), colMap = snap.colMap, nestMaps = snap.nestMaps,
             ndvCols = ndvColsOf(snap.properties),
-            histCols = histColsOf(snap.properties)))
+            histCols = histColsOf(snap.properties))._1)
           finally { rows.unpersist(): Unit }
         // dataChange = false: rows were REARRANGED, not changed — streaming
         // consumers of the change feed skip this commit entirely
@@ -2491,15 +2491,10 @@ object LogTable extends org.apache.spark.internal.Logging {
         // row-level CDC (cdc.enabled): one extra pass over the victims,
         // filtered to the rows that actually change — feed volume at read
         // time becomes O(changed rows), not O(rewritten bytes)
-        val cdcRows = Option.when(cdcEnabled(snap.properties))(() =>
+        val cdcRows = Option.when(cdcEnabled(snap.properties))(
           cdcOf(snap, readFiles(spark, path, snap, victims)))
-        val (adds, cdcFiles) = writeWithCdc(tx, snap, cdcRows) {
-          writeDataFiles(spark, path, rewritten, snap.partitionCols,
-            snap.statsCols, bloomCols = snap.bloomCols, colMap = snap.colMap, nestMaps = snap.nestMaps,
-            ndvCols = ndvColsOf(snap.properties),
-            histCols = histColsOf(snap.properties),
-            sizeHintBytes = Some(victims.iterator.map(_.bytes).sum))
-        }
+        val (adds, cdcFiles) = tx.write(snap, rewritten, cdcRows,
+          sizeHintBytes = Some(victims.iterator.map(_.bytes).sum))
         tx.publish(Commit.of(snap, op).copy(schemaDdl = ddl, adds = adds,
           removes = victims.map(_.name), cdc = cdcFiles))
       }
@@ -2778,17 +2773,24 @@ object LogTable extends org.apache.spark.internal.Logging {
                   .unionByName(marked.filter(col("file").isin(names: _*)))
                   .distinct())))
             }
-          // UPDATE mode: matched rows, transformed, land in fresh files
-          val newFiles: Seq[LogFile] = set match {
+          // row-level CDC off the already-persisted hit set: the marked
+          // rows ARE the change — a DV delete's feed then costs the
+          // deleted rows, never the whole file's delete+insert pair
+          val cdcOn = cdcEnabled(snap.properties)
+          val preRows = hit.drop("__gdv_file", "__gdv_idx")
+          // UPDATE mode: matched rows, transformed, land in fresh files,
+          // their pre/post images in the same write
+          val (newFiles, cdcFiles) = set match {
             case Some(s) =>
-              val assigned = applySet(s)(hit.drop("__gdv_file", "__gdv_idx"))
+              val assigned = applySet(s)(preRows)
               enforceConstraints(path, snap, assigned)
-              tx.stageFiles(writeDataFiles(spark, path, assigned,
-                snap.partitionCols, snap.statsCols,
-                bloomCols = snap.bloomCols, colMap = snap.colMap, nestMaps = snap.nestMaps,
-                ndvCols = ndvColsOf(snap.properties),
-                histCols = histColsOf(snap.properties)))
-            case None => Nil
+              tx.write(snap, assigned, Option.when(cdcOn)(
+                preRows.withColumn("_change_type", lit("update_preimage"))
+                  .unionByName(assigned
+                    .withColumn("_change_type", lit("update_postimage")))))
+            case None =>
+              (Nil, if (!cdcOn) Nil else tx.stageCdc(writeCdcFiles(spark, path,
+                preRows.withColumn("_change_type", lit("delete")), snap)))
           }
           val ddl = set match {
             // unconditional probe: every rewritten row applies the expr
@@ -2797,23 +2799,6 @@ object LogTable extends org.apache.spark.internal.Logging {
           }
           val adds = newFiles ++ partial.map(f =>
             f.copy(dv = Some(DvDescriptor(sidecar.get, newDeleted(f)))))
-          // row-level CDC off the already-persisted hit set: the marked
-          // rows ARE the change — a DV delete's feed then costs the
-          // deleted rows, never the whole file's delete+insert pair
-          val cdcFiles =
-            if (!cdcEnabled(snap.properties)) Nil
-            else {
-              val preRows = hit.drop("__gdv_file", "__gdv_idx")
-              val cdcDf = set match {
-                case Some(s) =>
-                  preRows.withColumn("_change_type", lit("update_preimage"))
-                    .unionByName(applySet(s)(preRows)
-                      .withColumn("_change_type", lit("update_postimage")))
-                case None =>
-                  preRows.withColumn("_change_type", lit("delete"))
-              }
-              tx.stageCdc(writeCdcFiles(spark, path, cdcDf, snap))
-            }
           tx.publish(Commit.of(snap, if (set.isDefined) "UPDATE" else "DELETE")
             .copy(schemaDdl = ddl, adds = adds, removes = affected.map(_.name),
               // deletion vectors are a reader-level-2 feature: an older
@@ -2880,13 +2865,8 @@ object LogTable extends org.apache.spark.internal.Logging {
       val snap = tx.snap
       val victims = snap.files.filter(_.dv.isDefined)
       if (victims.isEmpty) Done(-1L) else {
-        val adds = tx.stageFiles(writeDataFiles(spark, path,
-          readFiles(spark, path, snap, victims),
-          snap.partitionCols, snap.statsCols, bloomCols = snap.bloomCols,
-          colMap = snap.colMap, nestMaps = snap.nestMaps,
-          ndvCols = ndvColsOf(snap.properties),
-          histCols = histColsOf(snap.properties),
-          sizeHintBytes = Some(victims.iterator.map(_.bytes).sum)))
+        val (adds, _) = tx.write(snap, readFiles(spark, path, snap, victims),
+          sizeHintBytes = Some(victims.iterator.map(_.bytes).sum))
         tx.publish(Commit.of(snap, "PURGE").copy(adds = adds,
           removes = victims.map(_.name), dataChange = false))
       }
@@ -3308,13 +3288,8 @@ object LogTable extends org.apache.spark.internal.Logging {
         val victims = snap.files.filter(f => isHive(f.name))
         val adds =
           if (victims.isEmpty) Nil
-          else tx.stageFiles(writeDataFiles(spark, path,
-            readFiles(spark, path, snap, victims), snap.partitionCols,
-            snap.statsCols, bloomCols = snap.bloomCols,
-            colMap = snap.colMap, nestMaps = snap.nestMaps,
-            ndvCols = ndvColsOf(snap.properties),
-            histCols = histColsOf(snap.properties),
-            sizeHintBytes = Some(victims.iterator.map(_.bytes).sum)))
+          else tx.write(snap, readFiles(spark, path, snap, victims),
+            sizeHintBytes = Some(victims.iterator.map(_.bytes).sum))._1
         tx.publish(Commit.of(snap, "MIGRATE_CONVERT").copy(adds = adds,
           removes = victims.map(_.name), dataChange = false,
           properties = snap.properties - ConvertHiveProp))
@@ -3825,16 +3800,18 @@ object LogTable extends org.apache.spark.internal.Logging {
       .select(col("e.r.*"), col("e.t").as("_change_type"))
   }
 
-  /** Write one DML transaction's changed rows (`cdcDf0`: the table's
-    * LOGICAL columns + `_change_type`) as parquet CDC files straight into
-    * `_change_data/` through `GraftBridge.writeFiles` — invisible until
-    * the commit references them, like every other table file. Data
-    * columns land under PHYSICAL names, exactly like data files, so
-    * column renames never invalidate old CDC files. Cost: one pass over
-    * the CHANGED rows only. An empty change set still writes one empty
-    * part (FileFormatWriter's empty-frame file), so the commit carries a
-    * non-empty `cdc` list and readers serve zero rows instead of falling
-    * back to phantom file-level pairs.
+  /** The CDC-only writer: one DML transaction's changed rows (`cdcDf0`:
+    * the table's LOGICAL columns + `_change_type`) as parquet CDC files
+    * straight into `_change_data/` through `GraftBridge.writeFiles` —
+    * invisible until the commit references them, like every other table
+    * file. Data columns land under PHYSICAL names, exactly like data
+    * files, so column renames never invalidate old CDC files. Serves the
+    * transactions whose change rows have no data write to ride
+    * ([[writeDataFiles]] carries the rest): a DV DELETE, and an empty
+    * change set, which still gets one empty part (FileFormatWriter's
+    * empty-frame file) so the commit carries a non-empty `cdc` list and
+    * readers serve zero rows instead of falling back to phantom
+    * file-level pairs.
     */
   private[sources] def writeCdcFiles(spark: SparkSession, path: String,
                                      cdcDf0: DataFrame,
@@ -4486,21 +4463,14 @@ object LogTable extends org.apache.spark.internal.Logging {
             // BATCH's keys (riders never enter), pivoted through one keyed
             // aggregate — a no-op batch row (its version lost the argmax)
             // emits nothing, exactly like readNetChanges' rider cancel —
-            // written overlapped with the data files over the same
-            // persisted frames
-            writeWithCdc(tx, evolved, Option.when(cdcOn)(() =>
-              upsertCdcRows(evolved, base, merged, aligned, keyCols))) {
-              writeDataFiles(spark, path, merged, snap.partitionCols,
-                snap.statsCols, bloomCols = snap.bloomCols,
-                colMap = snap.colMap, nestMaps = snap.nestMaps,
-                ndvCols = ndvColsOf(snap.properties),
-                histCols = histColsOf(snap.properties),
-                // victims + the batch's own bytes when knowable: an
-                // insert-heavy merge (victims near-empty) of a huge
-                // scan-backed batch must not fall back to the floor
-                sizeHintBytes = Some(victims.iterator.map(_.bytes).sum +
-                  scanBackedBytes(changes).getOrElse(0L)))
-            }
+            // written with the data files over the same persisted frames
+            tx.write(snap, merged, Option.when(cdcOn)(
+              upsertCdcRows(evolved, base, merged, aligned, keyCols)),
+              // victims + the batch's own bytes when knowable: an
+              // insert-heavy merge (victims near-empty) of a huge
+              // scan-backed batch must not fall back to the floor
+              sizeHintBytes = Some(victims.iterator.map(_.bytes).sum +
+                scanBackedBytes(changes).getOrElse(0L)))
           } finally {
             merged.unpersist(): Unit
             if (cdcOn) base.unpersist(): Unit
@@ -4771,11 +4741,7 @@ object LogTable extends org.apache.spark.internal.Logging {
         val aligned = alignStrict(path, snap, rowsFilled)
         enforceConstraints(path, snap, aligned)
         val adds =
-          try tx.stageFiles(writeDataFiles(spark, path, aligned, snap.partitionCols,
-            snap.statsCols, bloomCols = snap.bloomCols, colMap = snap.colMap, nestMaps = snap.nestMaps,
-            ndvCols = ndvColsOf(snap.properties),
-            histCols = histColsOf(snap.properties),
-            sizeHintBytes = scanBackedBytes(rows)))
+          try tx.write(snap, aligned, sizeHintBytes = scanBackedBytes(rows))._1
           finally drainFillCaches()
         val idAdv = identityAdvance(snap.properties, adds)
         val c = Commit.of(snap, "APPEND").copy(adds = adds, txns = txn.toMap,
@@ -4808,11 +4774,7 @@ object LogTable extends org.apache.spark.internal.Logging {
         rowIdApply(spark, snap, identityApply(spark, path, snap, rows)))
       enforceConstraints(path, snap, aligned)
       val adds =
-        try tx.stageFiles(writeDataFiles(spark, path, aligned, snap.partitionCols,
-          snap.statsCols, bloomCols = snap.bloomCols, colMap = snap.colMap, nestMaps = snap.nestMaps,
-          ndvCols = ndvColsOf(snap.properties),
-          histCols = histColsOf(snap.properties),
-          sizeHintBytes = scanBackedBytes(rows)))
+        try tx.write(snap, aligned, sizeHintBytes = scanBackedBytes(rows))._1
         finally drainFillCaches()
       tx.publish(Commit.of(snap, "OVERWRITE").copy(adds = adds,
         removes = snap.files.map(_.name)))
@@ -6680,13 +6642,20 @@ object LogTable extends org.apache.spark.internal.Logging {
     FileStatsSpec(tracked, ndvTracked, histTracked, aggs, partitionCols.nonEmpty)
   }
 
-  /** Write `df0` (LOGICAL names) as the table's data files, straight into
-    * the table root at their final names through `GraftBridge.writeFiles`
-    * — invisible until a commit references them. One planned query: a
-    * range shuffle on (partition values, layout key, salt), then the
-    * parquet write, whose tasks fold each file's stats as they write it.
-    * Returns the non-empty files with their stats; a zero-row file is
-    * deleted, never returned.
+  /** Write `df0` (LOGICAL names) as the table's data files — and
+    * `changes`, the transaction's change rows (LOGICAL names +
+    * `_change_type`), as its CDC files — straight to their final names
+    * through `GraftBridge.writeFiles`, invisible until a commit references
+    * them. One planned query: a range shuffle of the data rows on
+    * (partition values, layout key, salt), the change rows unioned in
+    * unshuffled, then the parquet write, whose tasks fold each data file's
+    * stats as they write it. With change rows the write is partitioned on
+    * the hidden `InPlaceCommitProtocol.CdcFlag`, so they land in
+    * `_change_data/` (the data files then carry an all-NULL
+    * `_change_type` column, which no reader of the log's schema sees) and
+    * the shuffle stages of both sides run together. Returns the non-empty
+    * data files with their stats and the CDC files; a zero-row data file
+    * is deleted, never returned, and an empty change set lands no file.
     */
   private[sources] def writeDataFiles(spark: SparkSession, path: String,
                              df0: DataFrame,
@@ -6701,8 +6670,9 @@ object LogTable extends org.apache.spark.internal.Logging {
                              nestMaps: Map[String, Map[String, String]] =
                                Map.empty,
                              histCols: Seq[String] = Nil,
-                             sizeHintBytes: Option[Long] = None)
-      : Seq[LogFile] = {
+                             sizeHintBytes: Option[Long] = None,
+                             changes: Option[DataFrame] = None)
+      : (Seq[LogFile], Seq[CdcFile]) = {
     // partition/stats/bloom/layout params are already the at-rest
     // physical names, so they match the renamed frame
     val df = toPhysical(df0, colMap, nestMaps)
@@ -6785,24 +6755,39 @@ object LogTable extends org.apache.spark.internal.Logging {
     // would (one pass, not two — guide §1.2/§6)
     val spec = fileStatsSpec(df.schema, partitionCols, statsCols, ndvCols,
       histCols)
-    val tracker = FileStatsTracker(shuffled, spec.aggs)
-    // ONE planned query: the range shuffle's stages run under their own
-    // label, then the parquet write consumes the same plan's final stage
-    withDesc(spark, s"write-shuffle($path)") {
-      org.apache.spark.sql.GraftBridge.runShuffleStages(shuffled)
+    // the change rows join unshuffled, aligned to the data rows' types;
+    // the flag (last) routes them to _change_data/
+    val out = changes.fold(shuffled) { ch =>
+      val cdc = toPhysical(ch, colMap, nestMaps, Seq("_change_type"))
+      val flag = InPlaceCommitProtocol.CdcFlag
+      shuffled.withColumn("_change_type", lit(null).cast(StringType))
+        .withColumn(flag, lit(false))
+        .union(cdc.select(shuffled.schema.fields.toIndexedSeq.map(f =>
+          col("`" + f.name.replace("`", "``") + "`").cast(f.dataType)
+            .as(f.name)) :+ col("_change_type") :+ lit(true).as(flag): _*))
     }
-    val bytesOf = withDesc(spark, s"write-data-files($path)") {
-      org.apache.spark.sql.GraftBridge.writeFiles(spark, shuffled, path,
+    // the tracker sees the written columns: all but the flag
+    val tracker = FileStatsTracker(out.drop(InPlaceCommitProtocol.CdcFlag),
+      spec.aggs)
+    // ONE planned query: the shuffle stages run under their own label,
+    // then the parquet write consumes the same plan's final stage
+    withDesc(spark, s"write-shuffle($path)") {
+      org.apache.spark.sql.GraftBridge.runShuffleStages(out)
+    }
+    val (cdcOut, dataOut) = withDesc(spark, s"write-data-files($path)") {
+      org.apache.spark.sql.GraftBridge.writeFiles(spark, out, path,
         bloomOpts, Seq(tracker))
-    }.toMap
-    val (adds, empty) = tracker.files.toIndexedSeq.map { case (name, r) =>
-      spec.logFile(name, bytesOf(name), r)
+    }.partition(_._1.startsWith(CdcDir + "/"))
+    val bytesOf = dataOut.toMap
+    val (adds, empty) = tracker.files.toIndexedSeq.collect {
+      case (name, r) if bytesOf.contains(name) =>
+        spec.logFile(name, bytesOf(name), r)
     }.partition(_.rows > 0L)
     // a zero-row file (footer-only artifact of an empty write) carries
     // no information: it is never referenced, so it goes now
     val fs = fsOf(spark, path)
     empty.foreach(f => deleteUnreferenced(fs, new Path(path, f.name)))
-    adds
+    (adds, cdcOut.map { case (name, bytes) => CdcFile(name, bytes) })
     } finally inputCache.foreach(_.unpersist(): Unit)
   }
 
@@ -7032,7 +7017,7 @@ object LogTable extends org.apache.spark.internal.Logging {
     * gets `next + inc·j`.
     */
   /** Fill-frame caches created by [[denseFill]] on this thread — they
-    * must outlive the transaction's data (and overlapped CDC) writes,
+    * must outlive the transaction's data and CDC write,
     * which is long after denseFill returns, so the TRANSACTION drains
     * them ([[drainFillCaches]] in its write finally) instead of the fill
     * leaking a pinned MEMORY_AND_DISK frame per batch forever (a
@@ -7280,34 +7265,6 @@ object LogTable extends org.apache.spark.internal.Logging {
     * the spec, which wedges it with a latch to prove the commit
     * returns first.
     */
-  /** Overlaps a transaction's INDEPENDENT writes (data files + CDC
-    * files, guide §2.6 — see [[writeWithCdc]]): small, daemon, bounded —
-    * a transaction submits at most one side job and always joins it
-    * before committing.
-    */
-  private[sources] lazy val writeOverlapPool =
-    java.util.concurrent.Executors.newFixedThreadPool(4, r => {
-      val t = new Thread(r, "graft-write-overlap")
-      t.setDaemon(true)
-      t
-    })
-
-  /** Submit an overlapped side job under the SUBMITTER's SparkContext
-    * local properties (job group, description, pool). Pool threads are
-    * created lazily and inherit the FIRST submitter's properties forever
-    * (InheritableThreadLocal) — without the capture, a streaming query's
-    * `cancelJobGroup` could cancel an unrelated transaction's concurrent
-    * CDC write that happened to land on a thread born under its group.
-    */
-  private[sources] def submitOverlapped[T](spark: SparkSession)(body: => T)
-      : java.util.concurrent.Future[T] = {
-    val props = org.apache.spark.sql.GraftBridge.captureLocalProps(spark)
-    writeOverlapPool.submit(new java.util.concurrent.Callable[T] {
-      override def call(): T =
-        org.apache.spark.sql.GraftBridge.withLocalProps(spark, props)(body)
-    })
-  }
-
   private[graft] lazy val mvRefreshExecutor =
     java.util.concurrent.Executors.newSingleThreadExecutor(r => {
       val t = new Thread(r, "graft-mv-autorefresh")
@@ -7368,6 +7325,28 @@ object LogTable extends org.apache.spark.internal.Logging {
       files.foreach(c => staged.add(c.name): Unit); files
     }
     def stageSidecar(name: String): String = { staged.add(name): Unit; name }
+    /** Write `rows` — and in the same job `changes`, this transaction's
+      * change rows — under `layout`'s partition, stats, bloom, NDV and
+      * histogram columns and column mapping ([[writeDataFiles]]), and stage
+      * every file. An empty change set lands one empty CDC file
+      * ([[writeCdcFiles]]), so readers serve zero rows for the commit.
+      */
+    def write(layout: Snapshot, rows: DataFrame,
+              changes: Option[DataFrame] = None,
+              sizeHintBytes: Option[Long] = None): (Seq[LogFile], Seq[CdcFile]) = {
+      val (adds, cdc) = writeDataFiles(spark, path, rows, layout.partitionCols,
+        layout.statsCols, bloomCols = layout.bloomCols, colMap = layout.colMap,
+        nestMaps = layout.nestMaps, ndvCols = ndvColsOf(layout.properties),
+        histCols = histColsOf(layout.properties), sizeHintBytes = sizeHintBytes,
+        changes = changes)
+      stageFiles(adds)
+      stageCdc(cdc)
+      (adds, changes match {
+        case Some(ch) if cdc.isEmpty =>
+          stageCdc(writeCdcFiles(spark, path, ch.limit(0), layout))
+        case _ => cdc
+      })
+    }
     /** Persist `df` until the attempt ends — past its conflict recovery. */
     def persist(df: DataFrame): DataFrame = {
       cached.add(df): Unit
@@ -7438,34 +7417,6 @@ object LogTable extends org.apache.spark.internal.Logging {
       }
     }
     result.get
-  }
-
-  /** A transaction's data write with its CDC write (when `cdcRows` is
-    * given) overlapped on a side thread — independent jobs writing
-    * disjoint files (guide §2.6), so one write's task tail back-fills with the
-    * other's tasks. Both sides' files are staged with `tx` as they land,
-    * and the side job never outlives a failed data write.
-    */
-  private[sources] def writeWithCdc(tx: Attempt, cdcSnap: Snapshot,
-                                    cdcRows: Option[() => DataFrame])
-                                   (data: => Seq[LogFile])
-      : (Seq[LogFile], Seq[CdcFile]) = {
-    val side = cdcRows.map(rows => submitOverlapped(tx.spark) {
-      writeCdcFiles(tx.spark, tx.path, rows(), cdcSnap)
-    })
-    def joinCdc(): Seq[CdcFile] =
-      try tx.stageCdc(side.map(_.get()).getOrElse(Nil))
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw Option(e.getCause).getOrElse(e)
-      }
-    val adds =
-      try tx.stageFiles(data)
-      catch { case t: Throwable =>
-        try joinCdc(): Unit catch { case _: Throwable => () }
-        throw t
-      }
-    (adds, joinCdc())
   }
 
   private[sources] def commit(spark: SparkSession, path: String, version: Long,

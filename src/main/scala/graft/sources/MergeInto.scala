@@ -305,20 +305,13 @@ final case class MergeInto private[sources] (
       LogTable.enforceConstraints(path, snap, outRows)
       val ddl = widenedDdl(snap, fills)
       val (adds, cdcFiles) =
-        // data-file and CDC-file writes are independent jobs over the
-        // persisted tagged join — overlapped, like the upsert path
-        try LogTable.writeWithCdc(tx, snap, cdcDf.map(df => () => df)) {
-          LogTable.writeDataFiles(spark, path, outRows,
-            snap.partitionCols, snap.statsCols, bloomCols = snap.bloomCols,
-            colMap = snap.colMap, nestMaps = snap.nestMaps,
-            ndvCols = LogTable.ndvColsOf(snap.properties),
-            histCols = LogTable.histColsOf(snap.properties),
-            // victims + the source's own bytes when knowable: a pure-
-            // insert merge (victims empty) of a huge scan-backed source
-            // must not fall back to the session floor
-            sizeHintBytes = Some(victims.iterator.map(_.bytes).sum +
-              LogTable.scanBackedBytes(source).getOrElse(0L)))
-        } finally {
+        try tx.write(snap, outRows, cdcDf,
+          // victims + the source's own bytes when knowable: a pure-
+          // insert merge (victims empty) of a huge scan-backed source
+          // must not fall back to the session floor
+          sizeHintBytes = Some(victims.iterator.map(_.bytes).sum +
+            LogTable.scanBackedBytes(source).getOrElse(0L)))
+        finally {
           augCache.foreach(_.unpersist(): Unit)
           LogTable.drainFillCaches()
         }

@@ -48,12 +48,15 @@ object GraftBridge {
     * (the pattern of Delta's transactional write), with `trackers` riding
     * the writer tasks. Every file lands at its final name through
     * [[graft.sources.InPlaceCommitProtocol]] (a `sidecar` prefix names
-    * one-file-per-task sidecars); returns each file's name, relative to
-    * `dir`, and size. The files open under `spark`'s Hadoop conf — the
-    * session of the operation, whose conf also reaches the table's log —
-    * whichever session `data` came from. A `df.write.parquet(dir)` would
-    * wrap the frame in a write command and plan it again. Options, output
-    * metrics and the recorded nullability match that path.
+    * one-file-per-task sidecars). A frame carrying the protocol's hidden
+    * `CdcFlag` column is written partitioned on it alone: its change rows
+    * land in `dir/_change_data/`, its data rows in `dir`, and the column
+    * itself in no file. Returns each file's name, relative to `dir`, and
+    * size. The files open under `spark`'s Hadoop conf — the session of
+    * the operation, whose conf also reaches the table's log — whichever
+    * session `data` came from. A `df.write.parquet(dir)` would wrap the
+    * frame in a write command and plan it again. Options, output metrics
+    * and the recorded nullability match that path.
     */
   def writeFiles(spark: SparkSession, data: DataFrame, dir: String,
                  options: Map[String, String],
@@ -75,32 +78,38 @@ object GraftBridge {
       FileFormatWriter.write(session, plan,
         new execution.datasources.parquet.ParquetFileFormat, committer,
         FileFormatWriter.OutputSpec(dir, Map.empty, output), hadoopConf,
-        partitionColumns = Nil, bucketSpec = None,
+        partitionColumns = output.filter(_.name ==
+          graft.sources.InPlaceCommitProtocol.CdcFlag),
+        bucketSpec = None,
         statsTrackers = basic +: trackers, options = options)
     }: Unit
     committer.files
   }
 
-  /** Snapshot of the calling thread's SparkContext-local properties
-    * (job group, description, scheduler pool) — what a pool thread must
-    * adopt to run a job ON BEHALF of the submitting transaction. Pool
-    * threads otherwise inherit whatever thread FIRST created them
-    * (InheritableThreadLocal) and keep it forever, so a later caller's
-    * job could run under a stranger's job group and be cancelled with it.
+  /** Whether Spark's output commit coordinator lets the running task
+    * attempt commit its output — the check Spark's own committers make
+    * (`SparkHadoopMapRedUtil.commitTask`): of the attempts of one split,
+    * only the first to ask may commit, and none once its stage has ended.
+    * Always true outside a task or with coordination switched off.
     */
-  def captureLocalProps(spark: SparkSession): java.util.Properties =
-    spark.sparkContext.getLocalProperties.clone()
-      .asInstanceOf[java.util.Properties]
+  def mayCommit(task: org.apache.hadoop.mapreduce.TaskAttemptContext): Boolean = {
+    val ctx = org.apache.spark.TaskContext.get()
+    val env = org.apache.spark.SparkEnv.get
+    ctx == null || env == null ||
+      !env.conf.getBoolean("spark.hadoop.outputCommitCoordination.enabled", true) ||
+      env.outputCommitCoordinator.canCommit(ctx.stageId(), ctx.stageAttemptNumber(),
+        ctx.partitionId(), ctx.attemptNumber())
+  }
 
-  /** Run `body` under the given local properties, restoring the thread's
-    * previous ones after — the Delta thread-pool pattern.
+  /** The failure a task attempt denied by [[mayCommit]] throws: Spark
+    * reports it as a denied commit, not as a task failure.
     */
-  def withLocalProps[T](spark: SparkSession,
-                        props: java.util.Properties)(body: => T): T = {
-    val sc = spark.sparkContext
-    val saved = sc.getLocalProperties
-    sc.setLocalProperties(props)
-    try body finally sc.setLocalProperties(saved)
+  def commitDenied(task: org.apache.hadoop.mapreduce.TaskAttemptContext,
+                   msg: String): Throwable = {
+    val ctx = Option(org.apache.spark.TaskContext.get())
+    new org.apache.spark.executor.CommitDeniedException(msg,
+      ctx.fold(-1)(_.stageId()), task.getTaskAttemptID.getTaskID.getId,
+      ctx.fold(task.getTaskAttemptID.getId)(_.attemptNumber()))
   }
 
   /** Run `body` with `spark` as the thread's ACTIVE session — plan

@@ -120,6 +120,24 @@ class ChangeFeedCdcSpec extends SparkSpec {
       (50L, "n", "insert", v)), s"got $got")
   }
 
+  test("an upsert whose every batch row loses the argmax rewrites files " +
+    "yet its commit's CDC files serve zero rows") {
+    val dir = tmp() + "/t"
+    val base = (1L to 20L).map(i => (i, s"v$i", 5, s"p${i % 2}", "U"))
+      .toDF("k", "v", "ver", "p", "op")
+    LogTable.create(spark, dir, base, Seq("p"), statsCols = Seq("k"),
+      tableProperties = Map(LogTable.CdcProp -> "true"))
+    val stale = Seq((2L, "old2", 1, "p0", "U"), (3L, "old3", 1, "p1", "U"))
+      .toDF("k", "v", "ver", "p", "op")
+    val v = LogTable.upsert(spark, dir, stale, Seq("k"), Seq("ver"), "op")
+    val c = LogTable.commitAt(spark, dir, v)
+    assert(c.adds.nonEmpty && c.removes.nonEmpty, "the upsert rewrites files")
+    assert(c.cdc.nonEmpty,
+      "an empty change set still lands a CDC file, so the feed is row-level")
+    assert(changes(dir, v - 1, v).isEmpty)
+    assert(LogTable.read(spark, dir).filter($"ver" === 1).count() == 0L)
+  }
+
   test("per-commit fallback: appends serve their adds as inserts; " +
     "commits predating cdc.enabled keep the file-level shape") {
     val dir = tmp() + "/t"
