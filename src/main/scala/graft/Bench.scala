@@ -65,8 +65,13 @@ object Bench {
     val rowsJson = rows.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    // host facts: the session's cores (local[n]), the JVM's processors and
+    // heap ceiling — records from different core counts never compare
+    val host = s""""cpus":${spark.sparkContext.defaultParallelism},""" +
+      s""""nproc":${Runtime.getRuntime.availableProcessors},""" +
+      s""""max_heap_mb":${Runtime.getRuntime.maxMemory >> 20}"""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"rows":$rowsJson,"errors":$errJson,"n_err":${errors.size},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"rows":$rowsJson,"errors":$errJson,"n_err":${errors.size},"sf":${jstr(sfDir)},$host}"""
     println(line)
     // Always persist the full line: a truncated stdout capture cost round 4
     // its official perf record (BENCH_r04.json cut mid-JSON).

@@ -1,6 +1,6 @@
 package graft.scale
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -130,7 +130,7 @@ object Multimodal {
   def exportPayloads(df: DataFrame, idCol: String, payload: Column,
                      dir: String): Unit = {
     val hconf = new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sessionState.newHadoopConf())
+      GraftBridge.taskHadoopConf(df.sparkSession))
     val base = new org.apache.hadoop.fs.Path(dir)
     base.getFileSystem(hconf.value).mkdirs(base): Unit
     df.select(col(idCol).cast("string").as("__id"), payload.cast("binary").as("__p"))
@@ -208,7 +208,7 @@ object Multimodal {
                           dir: String, maxShardBytes: Long = 256L << 20): Unit = {
     require(maxShardBytes > 0, s"need maxShardBytes > 0, got $maxShardBytes")
     val hconf = new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sessionState.newHadoopConf())
+      GraftBridge.taskHadoopConf(df.sparkSession))
     val base = new org.apache.hadoop.fs.Path(dir)
     base.getFileSystem(hconf.value).mkdirs(base): Unit
     df.select(col(idCol).cast("string").as("__id"), payload.cast("binary").as("__p"))
@@ -305,7 +305,7 @@ object Multimodal {
                         dir: String): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row => SRow}
     val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+      GraftBridge.taskHadoopConf(spark))
     val outSchema = StructType(Seq(
       StructField("shard_path", StringType, nullable = false),
       StructField("name", StringType, nullable = false),

@@ -3,7 +3,7 @@ package graft.sources
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -30,7 +30,8 @@ import org.apache.spark.sql.types.StructType
   * The memo key captures everything the factory closure bakes in: the
   * owning SparkContext (broadcast validity), the three schemas, the
   * pushed filters, the options map, an order-independent fingerprint of
-  * the INCOMING Hadoop conf, and a fingerprint of the session's
+  * the shipped Hadoop conf (the incoming one without its defaults,
+  * `GraftBridge.taskHadoopConf`), and a fingerprint of the session's
   * explicitly-set SQL confs (the closure reads vectorization/rebase/
   * timezone settings from `sessionState.conf`, and every runtime change
   * to those lands in `getAllConfs`). Any drift in any component misses
@@ -62,17 +63,20 @@ final class GraftParquetFileFormat extends ParquetFileFormat {
       hadoopConf: Configuration)
       : PartitionedFile => Iterator[InternalRow] = {
     import GraftParquetFileFormat._
+    // the broadcast conf is copied into a JobConf per file read: ship it
+    // without the Hadoop defaults
+    val conf = GraftBridge.taskHadoopConf(hadoopConf)
     val on = sparkSession.conf.getOption("spark.graft.scan.reuseReaders")
       .forall(_.equalsIgnoreCase("true"))
     if (!on)
       return super.buildReaderWithPartitionValues(sparkSession, dataSchema,
-        partitionSchema, requiredSchema, filters, options, hadoopConf)
+        partitionSchema, requiredSchema, filters, options, conf)
     val key = (
       sparkSession.sparkContext.applicationId,
       System.identityHashCode(sparkSession.sparkContext),
       dataSchema, partitionSchema, requiredSchema,
       filters.toList, options,
-      confFingerprint(hadoopConf),
+      confFingerprint(conf),
       mapFingerprint(sparkSession.sessionState.conf.getAllConfs))
     cache.synchronized {
       val hit = cache.get(key)
@@ -81,8 +85,7 @@ final class GraftParquetFileFormat extends ParquetFileFormat {
     // build OUTSIDE the lock (it launches a broadcast); a racing
     // duplicate is harmless — last one wins the slot, both work
     val built = super.buildReaderWithPartitionValues(sparkSession,
-      dataSchema, partitionSchema, requiredSchema, filters, options,
-      hadoopConf)
+      dataSchema, partitionSchema, requiredSchema, filters, options, conf)
     cache.synchronized { cache.put(key, built): Unit }
     built
   }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.util.Base64
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Directory-level AGGREGATE shard manifest — what takes a pushed
@@ -81,7 +81,7 @@ object ShardAggManifest {
       .map(st => (st.getPath.toUri.toString, st.getLen)).toIndexedSeq
     if (shards.isEmpty) return 0
     val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+      GraftBridge.taskHadoopConf(spark))
     val lines: Seq[String] =
       if (shards.length <= 8) shards.flatMap { case (uri, len) =>
         summarize(new Path(java.net.URI.create(uri)), len, conf.value)

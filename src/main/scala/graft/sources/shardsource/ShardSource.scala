@@ -4,6 +4,7 @@ import java.util
 
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -247,7 +248,7 @@ class ShardScan(path: String, required: StructType,
       if (pending.length > ShardScan.ParallelListThreshold) {
         val sc = spark.sparkContext
         val conf = new SerializableConfiguration(
-          spark.sessionState.newHadoopConf())
+          GraftBridge.taskHadoopConf(spark))
         val dirs = pending.map(_.toUri.toString)
         pending = Nil
         out ++= sc.parallelize(dirs, math.min(dirs.length,
@@ -386,7 +387,7 @@ class ShardScan(path: String, required: StructType,
         else {
           val sc = spark.sparkContext
           val conf = new SerializableConfiguration(
-            spark.sessionState.newHadoopConf())
+            GraftBridge.taskHadoopConf(spark))
           val nf = nameFilters // avoid closing over the Scan
           val withSizes = candidates.map(u => (u, sizeOf.getOrElse(u, -1L)))
           // chunk ~16 manifests per task: one-candidate-per-task pays a
@@ -416,7 +417,7 @@ class ShardScan(path: String, required: StructType,
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = org.apache.spark.sql.SparkSession.active
     new ShardReaderFactory(required, pushed, limit,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+      new SerializableConfiguration(GraftBridge.taskHadoopConf(spark)))
   }
 
   override def supportedCustomMetrics():

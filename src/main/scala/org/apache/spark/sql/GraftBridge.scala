@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
@@ -52,8 +53,8 @@ object GraftBridge {
     * `CdcFlag` column is written partitioned on it alone: its change rows
     * land in `dir/_change_data/`, its data rows in `dir`, and the column
     * itself in no file. Returns each file's name, relative to `dir`, and
-    * size. The files open under `spark`'s Hadoop conf — the session of
-    * the operation, whose conf also reaches the table's log — whichever
+    * size. The files open under `spark`'s [[taskHadoopConf]] — the session
+    * of the operation, whose conf also reaches the table's log — whichever
     * session `data` came from. A `df.write.parquet(dir)` would wrap the
     * frame in a write command and plan it again. Options, output metrics
     * and the recorded nullability match that path.
@@ -69,7 +70,7 @@ object GraftBridge {
     val output = plan.output.zip(data.schema.fields).map { case (a, f) =>
       a.withNullability(f.nullable)
     }
-    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+    val hadoopConf = taskHadoopConf(spark, options)
     val committer = new graft.sources.InPlaceCommitProtocol(dir, sidecar)
     val basic = new BasicWriteJobStatsTracker(
       new org.apache.spark.util.SerializableConfiguration(hadoopConf),
@@ -85,6 +86,48 @@ object GraftBridge {
     }: Unit
     committer.files
   }
+
+  /** The Hadoop conf that the engine's jobs ship to their tasks: the
+    * entries of `spark`'s conf with `options` whose last source is not a
+    * Hadoop `*-default.xml` resource — `spark.hadoop.*` keys, the
+    * session's runtime confs, the options and `*-site.xml` values — plus
+    * the FileSystem class bindings (`fs.<scheme>.impl` and
+    * `fs.AbstractFileSystem.<scheme>.impl`) whatever their source.
+    *
+    * A task rebuilds a shipped conf as `new Configuration(false)`
+    * (`SerializableConfiguration.readObject`), so a key left out resolves
+    * to the default compiled into the code that reads it; for what the
+    * tasks read (checksum size, umask) that is the value the
+    * `*-default.xml` entry holds. The class bindings are the exception:
+    * the object stores (`s3a`, `abfs`, `gs`, …) register with no
+    * `ServiceLoader` and have no compiled default, so they ship. Hadoop
+    * serializes a conf key by key, gzipping each string; the full conf
+    * (~1,100 entries, nearly all of them YARN, MapReduce and core
+    * defaults) costs ~9 ms each way per conf.
+    */
+  def taskHadoopConf(spark: SparkSession,
+                     options: Map[String, String] = Map.empty): Configuration =
+    taskHadoopConf(spark.sessionState.newHadoopConfWithOptions(options))
+
+  /** [[taskHadoopConf]] of an already-built conf: `conf` without its
+    * defaults.
+    */
+  def taskHadoopConf(conf: Configuration): Configuration = {
+    val out = new Configuration(false)
+    conf.iterator().forEachRemaining { e =>
+      val k = e.getKey
+      val src = conf.getPropertySources(k)
+      if (src == null || !src.last.endsWith("-default.xml") ||
+          FsBinding.pattern.matcher(k).matches()) {
+        // expanded here: a `${var}` may name a default left out
+        val v = conf.get(k)
+        if (v != null) out.set(k, v)
+      }
+    }
+    out
+  }
+
+  private val FsBinding = """fs\.(AbstractFileSystem\.)?[^.]+\.impl""".r
 
   /** Whether Spark's output commit coordinator lets the running task
     * attempt commit its output — the check Spark's own committers make

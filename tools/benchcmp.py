@@ -12,6 +12,10 @@ per-query minimum across all of them, and reports the shared-query
 subtotal ratio, median per-query ratio, and every shared query whose
 min-of-N ratio exceeds the regression threshold.
 
+Records from hosts with different core counts are never pooled or
+compared: each record's `cpus` field (the session's local[n]) names its
+class, and a record without the field is its own "unknown" class.
+
 Usage: python3 tools/benchcmp.py 17 18 [--threshold 1.25]
 """
 import argparse
@@ -65,6 +69,16 @@ def round_records(rnd):
     return records
 
 
+def core_class(records):
+    """The one core count the records share ("unknown" for records that
+    predate the field); refuses records of mixed classes."""
+    classes = {str(rec.get("cpus", "unknown")) for _, rec in records}
+    if len(classes) > 1:
+        raise SystemExit("records come from different core counts %s; "
+                         "refusing to pool them" % sorted(classes))
+    return classes.pop()
+
+
 def min_of_n(records):
     mins = {}
     for _, rec in records:
@@ -87,6 +101,10 @@ def main():
               + ", ".join(n for n, _ in recs))
         if not recs:
             raise SystemExit(f"no committed records for round {rnd}")
+    cores_a, cores_b = core_class(recs_a), core_class(recs_b)
+    if cores_a != cores_b:
+        raise SystemExit(f"r{args.round_a} ran on {cores_a} cores and r{args.round_b} "
+                         f"on {cores_b}; refusing to compare them")
     a, b = min_of_n(recs_a), min_of_n(recs_b)
     shared = sorted(set(a) & set(b))
     only_b = sorted(set(b) - set(a))
