@@ -2812,43 +2812,36 @@ object LogTable extends org.apache.spark.internal.Logging {
 
   /** Persist one transaction's deletion-vector rows as a single sidecar
     * parquet file, written by `GraftBridge.writeFiles` straight into the
-    * table root at its final name (`dv-`/`dv2-` + 12 chars + `.parquet`),
-    * invisible until a commit references it. v2 by default: per-file
-    * roaring bitmaps, ~100× denser than the v1 pair rows on dense runs;
-    * v1 written only under the spec's compat flag, sorted by (file,
-    * row_index) for run-length-friendly encoding. One file BY DESIGN: a vector's size is O(marked rows),
+    * table root at its final name (`dv2-` + 12 chars + `.parquet`),
+    * invisible until a commit references it: v2 per-file roaring
+    * bitmaps, ~100× denser than v1 pair rows on dense runs (v1 sidecars
+    * are read, never written). One file BY DESIGN: a vector's size is O(marked rows),
     * and the DV path's contract is selective deletes — a delete big
     * enough to produce an oversized vector wants the rewrite path (or
     * ends in full-file drops, which need no vector at all).
     */
   private def writeDvFile(spark: SparkSession, path: String,
                           pairs: DataFrame): String = {
-    val (df, prefix) =
-      if (!dvWriteV2)
-        (pairs.repartition(1)
-          .sortWithinPartitions(col("file"), col("row_index")), "dv-")
-      else {
-        // v2: fold each file's positions into one roaring bitmap —
-        // distributed per file (memory is one file's bitmap, never the
-        // transaction's), then one tiny (file, bitmap) parquet
-        import spark.implicits._
-        val bitmaps = pairs
-          .select(col("file").as[String], col("row_index").as[Long])
-          .groupByKey(_._1)
-          .mapGroups { (f, it) =>
-            val bm = new org.roaringbitmap.longlong.Roaring64Bitmap()
-            it.foreach(t => bm.addLong(t._2))
-            bm.runOptimize(): Unit
-            val bos = new java.io.ByteArrayOutputStream()
-            val dos = new java.io.DataOutputStream(bos)
-            bm.serialize(dos); dos.close()
-            (f, bos.toByteArray)
-          }.toDF("file", "bitmap")
-        (bitmaps.repartition(1), Dv2Prefix)
-      }
+    // fold each file's positions into one roaring bitmap — distributed
+    // per file (memory is one file's bitmap, never the transaction's),
+    // then one tiny (file, bitmap) parquet
+    import spark.implicits._
+    val bitmaps = pairs
+      .select(col("file").as[String], col("row_index").as[Long])
+      .groupByKey(_._1)
+      .mapGroups { (f, it) =>
+        val bm = new org.roaringbitmap.longlong.Roaring64Bitmap()
+        it.foreach(t => bm.addLong(t._2))
+        bm.runOptimize(): Unit
+        val bos = new java.io.ByteArrayOutputStream()
+        val dos = new java.io.DataOutputStream(bos)
+        bm.serialize(dos); dos.close()
+        (f, bos.toByteArray)
+      }.toDF("file", "bitmap")
     // one task, and no record cap: the sidecar is exactly one file
     val Seq((name, _)) = org.apache.spark.sql.GraftBridge.writeFiles(spark,
-      df, path, Map("maxRecordsPerFile" -> "0"), Nil, sidecar = Some(prefix))
+      bitmaps.repartition(1), path, Map("maxRecordsPerFile" -> "0"), Nil,
+      sidecar = Some(Dv2Prefix))
     name
   }
 
@@ -3969,12 +3962,11 @@ object LogTable extends org.apache.spark.internal.Logging {
   }
 
   /** Read ONLY the rows whose LEADING partition column is in `values` —
-    * log-level file pruning: the plan never references a file whose
-    * typed (pmin, pmax) range excludes every requested value, so the
-    * scan-side cost of a one-partition query on a 2,000-partition table
-    * is one partition's files plus genuinely boundary-spanning files.
-    * The residual equality filter still applies (boundary files carry
-    * neighbor rows).
+    * log-level file pruning: the plan never references a file
+    * [[prunedFiles]] rules out, so the scan-side cost of a one-partition
+    * query on a 2,000-partition table is one partition's files plus
+    * genuinely boundary-spanning files. The residual `IN` filter still
+    * applies (boundary files carry neighbor rows).
     */
   def readPartitions(spark: SparkSession, path: String, values: Seq[Any],
                      asOf: Option[Long] = None): DataFrame = {
@@ -3982,184 +3974,109 @@ object LogTable extends org.apache.spark.internal.Logging {
     require(snap.partitionCols.nonEmpty,
       s"log table $path is unpartitioned — readPartitions has no " +
         "partition column to address; use readWhere")
-    val dt = leadingType(snap)
-    val zone = spark.sessionState.conf.sessionLocalTimeZone
-    val wanted = values.map(v => boundString(dt, v, zone))
-    val keep = prunedFiles(snap, wanted.toSet)
-    // the residual compares in the SAME rendering the bounds use —
-    // timestamps as UTC micros, everything else as its string cast
-    val lhs = dt match {
-      case TimestampType => unix_micros(col(snap.partitionCol)).cast("string")
-      case _ => col(snap.partitionCol).cast("string")
-    }
-    readFiles(spark, path, snap, keep).filter(lhs.isin(wanted: _*))
+    readFiles(spark, path, snap, prunedFiles(spark, snap, values))
+      .filter(leadIn(snap, values))
   }
 
-  /** Render a caller-supplied partition value the way stats are
-    * PERSISTED: timestamps as UTC microsecond integers (zone-free —
-    * matching [[writeDataFiles]]' `unix_micros` bounds), everything else
-    * as its plain string form. A string-typed timestamp value parses
-    * under the SESSION zone, exactly as the engine would cast it.
+  /** The files that may hold a row whose LEADING partition column is in
+    * `values`: `lead IN (values)`, analyzed against the table (values
+    * coerce as in a query's `IN`) and judged by [[verdict]]. Every such
+    * file must be scanned by a read of those partitions.
     */
-  private def boundString(dt: DataType, v: Any, zone: String): String =
-    dt match {
-      case TimestampType => v match {
-        case t: java.sql.Timestamp =>
-          DateTimeUtils.fromJavaTimestamp(t).toString
-        case i: java.time.Instant =>
-          DateTimeUtils.instantToMicros(i).toString
-        case s: String =>
-          DateTimeUtils.stringToTimestamp(UTF8String.fromString(s),
-              java.time.ZoneId.of(zone))
-            .map(_.toString).getOrElse(s)
-        case other => String.valueOf(other)
-      }
-      case _ => String.valueOf(v)
-    }
+  def prunedFiles(spark: SparkSession, snap: Snapshot,
+                  values: Seq[Any]): Seq[LogFile] =
+    possibleFiles(snap, analyzedConjuncts(spark, snap, leadIn(snap, values)),
+      spark.sessionState.conf.sessionLocalTimeZone)
 
-  /** The files whose LEADING-partition value range may contain any of
-    * `values` (stringified): every such file must be scanned by a read
-    * of those partitions, and rewritten by a batch touching them (its
-    * non-matching rows ride along through the rewrite, which is what
-    * keeps removal sound). Ranges compare TYPED per the leading
-    * partition column; a bound the comparator cannot interpret keeps
-    * the file.
+  private def leadIn(snap: Snapshot, values: Seq[Any]): Column =
+    col("`" + snap.partitionCol.replace("`", "``") + "`").isin(values: _*)
+
+  /** What a batch touches, in the batch's own types: its distinct
+    * partition-value tuples (a NULL value is a NULL literal; an
+    * unpartitioned table has the one empty tuple) and a [[KeySpan]] per
+    * key column it carries.
     */
-  def prunedFiles(snap: Snapshot, values: Set[String]): Seq[LogFile] = {
-    val dt = leadingType(snap)
-    // statsRange (not raw pmin/pmax): on a partition-EVOLVED table a
-    // file written under an older spec carries no range for the current
-    // leading column — it must be KEPT, not compared against the wrong
-    // column's bounds
-    snap.files.filter(f => statsRange(snap, f, snap.partitionCol) match {
-      case Some((lo, hi)) => values.exists(v => rangeMayContain(dt, lo, hi, v))
-      case None => true
-    })
-  }
+  private[sources] final case class BatchProbe(tuples: Seq[Seq[Literal]],
+                                               keys: Map[String, KeySpan])
 
-  /** MIN/MAX of the batch's key columns, rendered exactly as file stats
-    * are (timestamps as UTC micros) — what [[recommitDisjoint]] compares
-    * against a winner's file stats to admit KEY-disjoint writes into the
-    * same partition. One small aggregate over the batch, computed only
-    * when a race actually needs it (the caller passes a memoized thunk).
+  /** One key column of a batch: the min/max of its non-NULL values (None
+    * when it has none) and whether it holds a NULL.
     */
-  private[sources] def batchKeyRanges(spark: SparkSession, snap: Snapshot,
-                                      batch: DataFrame, keyCols: Seq[String])
-      : Map[String, (String, String)] = {
-    val present = keyCols.filter(c =>
-      batch.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
-    if (present.isEmpty) return Map.empty
-    val aggs = present.zipWithIndex.flatMap { case (c, i) =>
-      val v = snap.schema.fields.find(_.name.equalsIgnoreCase(c))
-        .map(_.dataType) match {
-        case Some(TimestampType) => unix_micros(col(c))
-        case _ => col(c)
-      }
-      Seq(min(v).cast("string").as(s"__lo_$i"),
-        max(v).cast("string").as(s"__hi_$i"))
-    }
-    val r = withDesc(spark, "batch-key-ranges") {
-      batch.agg(aggs.head, aggs.tail: _*).head()
-    }
-    present.zipWithIndex.flatMap { case (c, i) =>
-      (Option(r.getString(r.fieldIndex(s"__lo_$i"))),
-        Option(r.getString(r.fieldIndex(s"__hi_$i")))) match {
-        case (Some(lo), Some(hi)) => Some(c -> (lo, hi))
-        case _ => None // empty/all-NULL batch keys: no provable range
-      }
-    }.toMap
-  }
+  private[sources] final case class KeySpan(range: Option[(Literal, Literal)],
+                                            hasNull: Boolean)
 
-  /** ONE batch pass computing BOTH the touched partition tuples and the
-    * batch's key min/max ranges — [[touchedTuples]] and
-    * [[batchKeyRanges]] were two separate jobs, i.e. two full
-    * executions of the batch plan per merge (a streaming sink pays
-    * them every micro-batch). A grouping-sets aggregation over
-    * ((partition exprs), ()) yields the distinct tuples (gid 0 rows)
-    * and the global key extremes (the all-grouped row) in one job,
-    * with `grouping_id` telling an all-NULL tuple apart from the
-    * global row. Values are bit-identical to the two originals: same
-    * cast expressions, same NULL handling. Falls back to the original
-    * helpers when only one side is needed.
+  /** ONE batch pass for everything file pruning asks of a batch
+    * ([[BatchProbe]]): a grouping-sets aggregation over ((partition
+    * columns), ()) yields the distinct tuples (gid 0 rows) and the key
+    * extremes and NULL flags (the all-grouped row), with `grouping_id`
+    * telling an all-NULL tuple apart from the global row. An
+    * unpartitioned table needs only the global row; one without key
+    * columns in the batch runs no job.
     */
   private[sources] def batchProbe(spark: SparkSession, path: String,
-                                  snap: Snapshot, evolved: Snapshot,
-                                  changes: DataFrame, keyCols: Seq[String])
-      : (Seq[Seq[String]], Map[String, (String, String)]) = {
+                                  snap: Snapshot, batch: DataFrame,
+                                  keyCols: Seq[String]): BatchProbe = {
+    def q(n: String) = col("`" + n.replace("`", "``") + "`")
     val present = keyCols.filter(c =>
-      changes.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
-    if (snap.partitionCols.isEmpty)
-      return (Seq(Seq.empty), batchKeyRanges(spark, evolved, changes, keyCols))
-    if (present.isEmpty)
-      return (touchedTuples(path, snap, changes), Map.empty)
-    // the cast exprs materialize through a SELECT first — grouping sets
-    // given aliased expressions directly treat each occurrence as a
+      batch.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
+    if (snap.partitionCols.isEmpty && present.isEmpty)
+      return BatchProbe(Seq(Seq.empty), Map.empty)
+    // the partition columns materialize through a SELECT first — grouping
+    // sets given aliased expressions directly treat each occurrence as a
     // distinct grouping attribute (observed: doubled grouping_id bits,
     // all-NULL groups); plain references group correctly
-    val pexprs = snap.partitionCols.zipWithIndex.map { case (c, i) =>
-      (snap.schema.fields.find(_.name.equalsIgnoreCase(c))
-        .map(_.dataType) match {
-        case Some(TimestampType) => unix_micros(col(c)).cast("string")
-        case _ => col(c).cast("string")
-      }).as(s"__graft_bp_$i")
-    }
-    val widened = changes.select(col("*") +: pexprs: _*)
+    val widened = batch.select(col("*") +: snap.partitionCols.zipWithIndex
+      .map { case (c, i) => q(c).as(s"__graft_bp_$i") }: _*)
     val refs = snap.partitionCols.indices.map(i => col(s"__graft_bp_$i"))
     val aggs = present.zipWithIndex.flatMap { case (c, i) =>
-      val v = evolved.schema.fields.find(_.name.equalsIgnoreCase(c))
-        .map(_.dataType) match {
-        case Some(TimestampType) => unix_micros(col(c))
-        case _ => col(c)
-      }
-      Seq(min(v).cast("string").as(s"__lo_$i"),
-        max(v).cast("string").as(s"__hi_$i"))
+      Seq(min(q(c)).as(s"__lo_$i"), max(q(c)).as(s"__hi_$i"),
+        max(q(c).isNull).as(s"__null_$i"))
     }
+    val probe =
+      if (refs.isEmpty) widened.agg(aggs.head, aggs.tail: _*)
+      else widened.groupingSets(Seq(refs, Seq.empty), refs: _*)
+        .agg(grouping_id().as("__gid"), aggs: _*)
     val rows = withDesc(spark, s"batch-probe($path)") {
-      widened.groupingSets(Seq(refs, Seq.empty), refs: _*)
-        .agg(aggs.head, (aggs.tail :+ grouping_id().as("__gid")): _*)
-        .collect() // bounded: distinct tuples + 1 global row
+      probe.collect() // bounded: distinct tuples + 1 global row
     }
-    val globalGid = (1L << snap.partitionCols.size) - 1L
-    val touched = rows.iterator
-      .filter(r => r.getLong(r.fieldIndex("__gid")) == 0L)
-      .map { r =>
-        snap.partitionCols.indices.map { i =>
-          val j = r.fieldIndex(s"__graft_bp_$i")
-          if (r.isNullAt(j)) null else r.getString(j)
-        }
-      }.toIndexedSeq
-    val kr = rows.find(r => r.getLong(r.fieldIndex("__gid")) == globalGid)
-      .map { r =>
-        present.zipWithIndex.flatMap { case (c, i) =>
-          (Option(r.getString(r.fieldIndex(s"__lo_$i"))),
-            Option(r.getString(r.fieldIndex(s"__hi_$i")))) match {
-            case (Some(lo), Some(hi)) => Some(c -> (lo, hi))
-            case _ => None
-          }
-        }.toMap
-      }.getOrElse(Map.empty)
-    (touched, kr)
+    def value(r: Row, n: String): Literal =
+      Literal.create(r.get(r.fieldIndex(n)), probe.schema(n).dataType)
+    def gid(r: Row): Long = if (refs.isEmpty) 0L else r.getAs[Long]("__gid")
+    val tuples =
+      if (refs.isEmpty) Seq(Seq.empty)
+      else rows.iterator.filter(gid(_) == 0L)
+        .map(r => refs.indices.map(i => value(r, s"__graft_bp_$i")))
+        .toIndexedSeq
+    val keys = rows.find(gid(_) == (1L << refs.size) - 1L).fold(
+      Map.empty[String, KeySpan]) { r =>
+      present.zipWithIndex.map { case (c, i) =>
+        c -> KeySpan(
+          Option.when(!r.isNullAt(r.fieldIndex(s"__lo_$i")))(
+            (value(r, s"__lo_$i"), value(r, s"__hi_$i"))),
+          r.getAs[Boolean](s"__null_$i"))
+      }.toMap
+    }
+    BatchProbe(tuples, keys)
   }
 
-  /** Can `f` provably hold NO key in `ranges`? One key column whose
-    * stored range lies strictly outside the batch's suffices (a match
-    * must satisfy every key equality). Unprovable ⇒ false ⇒ the caller
-    * declines the fast path — never admits wrongly.
+  /** Can `f` provably hold NO row whose key matches a batch key? One key
+    * column suffices (a match needs every key column to match): `f`'s
+    * stats must rule out `k >= lo AND k <= hi` for the batch's non-NULL
+    * range and, when the batch holds a NULL key — which [[Merge.merge]]
+    * groups as one key — `k IS NULL` as well. A key column without a
+    * non-NULL batch value proves nothing. Unprovable ⇒ false ⇒ the file
+    * stays a victim, and the caller declines the fast path.
     */
   private[sources] def keyRangeDisjoint(snap: Snapshot, f: LogFile,
-                               ranges: Map[String, (String, String)],
-                               zone: String): Boolean =
-    ranges.exists { case (c, (bLo, bHi)) =>
-      snap.schema.fields.find(_.name.equalsIgnoreCase(c)).exists { fd =>
-        statsRange(snap, f, c).exists { case (fLo, fHi) =>
-          (for {
-            fl <- keyOfString(fd.dataType, fLo, zone)
-            fh <- keyOfString(fd.dataType, fHi, zone)
-            bl <- keyOfString(fd.dataType, bLo, zone)
-            bh <- keyOfString(fd.dataType, bHi, zone)
-          } yield fh.compareTo(bl) < 0 || fl.compareTo(bh) > 0)
-            .getOrElse(false)
-        }
+                                        keys: Map[String, KeySpan],
+                                        zone: String): Boolean =
+    keys.exists { case (c, KeySpan(range, hasNull)) =>
+      range.exists { case (lo, hi) =>
+        val k = AttributeReference(c, lo.dataType)()
+        def cannot(cj: Expression*) =
+          verdict(snap, f, cj, zone) == Verdict.Cannot
+        cannot(GreaterThanOrEqual(k, lo), LessThanOrEqual(k, hi)) &&
+          (!hasNull || cannot(IsNull(k)))
       }
     }
 
@@ -4174,8 +4091,8 @@ object LogTable extends org.apache.spark.internal.Logging {
     * argument: commuting the loser after the winners changes no file
     * either one reads or replaces — (b) says the loser's removes are
     * still live, (c) says no winner row belongs to a partition the
-    * loser rewrote (rangeMayContain is conservative, so an
-    * uninterpretable bound CONFLICTS rather than commutes). Without this
+    * loser rewrote ([[verdict]] answers `May` on a bound it cannot
+    * interpret, so such a bound CONFLICTS rather than commutes). Without this
     * path, N writers to N disjoint partitions serialize through full
     * re-merges — O(N²) reads under contention; with it, each loser pays
     * one metadata check per winner. Falls back to the re-merge retry on
@@ -4186,12 +4103,10 @@ object LogTable extends org.apache.spark.internal.Logging {
     */
   private[sources] def recommitDisjoint(spark: SparkSession, path: String,
                                base: Snapshot, c: Commit,
-                               touched: Seq[Seq[String]], maxRetries: Int,
-                               keyRanges: () => Map[String, (String, String)] =
-                                 () => Map.empty)
+                               touched: Seq[Seq[Literal]], maxRetries: Int,
+                               keys: Map[String, KeySpan] = Map.empty)
       : Option[Long] = {
     val zone = spark.sessionState.conf.sessionLocalTimeZone
-    lazy val kr = keyRanges() // one batch aggregate, only if ever needed
     val victims = c.removes.toSet
     var known = base.version
     var attempts = 0
@@ -4233,10 +4148,8 @@ object LogTable extends org.apache.spark.internal.Logging {
             // of the touched partitions and the winner removed none of
             // them, so key-disjoint additions are rows our merge could
             // never have matched.
-            val overlapping = victimFiles(base.copy(files = w.adds), touched)
-            overlapping.isEmpty ||
-              (kr.nonEmpty &&
-                overlapping.forall(f => keyRangeDisjoint(base, f, kr, zone)))
+            victimFiles(base.copy(files = w.adds), touched, zone)
+              .forall(f => keyRangeDisjoint(base, f, keys, zone))
           }
       }
       if (!commutes) return None
@@ -4389,12 +4302,12 @@ object LogTable extends org.apache.spark.internal.Logging {
         // key has nothing to merge — its rows survive untouched, unread
         // and unrewritten (and two key-disjoint merges into the SAME
         // partition stop conflicting: their victim sets no longer overlap,
-        // so the disjoint fast path admits both). Both probes come out of
-        // ONE batch pass ([[batchProbe]]).
+        // so the disjoint fast path admits both). Both come out of ONE
+        // batch pass ([[batchProbe]]), which the race path reuses.
         val zone = spark.sessionState.conf.sessionLocalTimeZone
-        val (touched, kr) = batchProbe(spark, path, snap, evolved, changes, keyCols)
-        val victims = victimFiles(snap, touched)
-          .filterNot(f => kr.nonEmpty && keyRangeDisjoint(snap, f, kr, zone))
+        val probe = batchProbe(spark, path, snap, changes, keyCols)
+        val victims = victimFiles(snap, probe.tuples, zone)
+          .filterNot(f => keyRangeDisjoint(snap, f, probe.keys, zone))
         val cdcOn = cdcEnabled(snap.properties)
         // the batch aligned to the (possibly widened) table schema: a
         // missing nullable column fills with typed NULL; a NARROWER batch
@@ -4479,9 +4392,8 @@ object LogTable extends org.apache.spark.internal.Logging {
         val c = Commit.of(snap, "MERGE").copy(schemaDdl = evolved.schemaDdl,
           adds = adds, removes = victims.map(_.name), txns = txn.toMap,
           cdc = cdcFiles)
-        tx.publish(c, recover = recommitDisjoint(spark, path, snap, c, touched,
-          maxRetries,
-          keyRanges = () => batchKeyRanges(spark, evolved, changes, keyCols)))
+        tx.publish(c, recover = recommitDisjoint(spark, path, snap, c,
+          probe.tuples, maxRetries, probe.keys))
       }
     }
   }
@@ -5135,7 +5047,7 @@ object LogTable extends org.apache.spark.internal.Logging {
       // every name the mapping must stay unambiguous against: current
       // logicals, current physicals, and retired physicals — one
       // namespace, so a name is EITHER a mapped logical or its own
-      // physical, never both (what keeps statsRange's one-shot
+      // physical, never both (what keeps statsOf's one-shot
       // translation sound)
       def taken(n: String): Boolean =
         fields.exists(_.name.equalsIgnoreCase(n)) ||
@@ -5717,45 +5629,12 @@ object LogTable extends org.apache.spark.internal.Logging {
       .asInstanceOf[Comparable[Any]])
 
   /** Timestamp stats are persisted as UTC MICROSECOND integers (zone-free
-    * and monotonic — a local-time string rendering would re-parse under
-    * the READER's zone and order wrongly across DST folds); a
-    * non-numeric value falls back to a session-zone parse for values
-    * that arrive as strings (readPartitions arguments).
+    * and monotonic). A non-numeric stat is a legacy wall string rendered
+    * under its WRITER's session zone, which the log does not record:
+    * parsing it under the reader's zone (or across a DST fold) could
+    * shift the bound past real rows, so it is not comparable (None).
     */
-  private def tsMicros(s: String, zone: String): Option[Long] =
-    scala.util.Try(s.toLong).toOption.orElse(
-      DateTimeUtils.stringToTimestamp(UTF8String.fromString(s),
-        java.time.ZoneId.of(zone)))
-
-  /** Parse a persisted stat/partition string into a comparable key under
-    * the column's type. None ⇒ not comparable ⇒ the caller must keep the
-    * file (prune conservatively, never wrongly). Float/double columns
-    * compare as the DOUBLES the engine compares (the stat string
-    * round-trips the stored value exactly; widening float→double is
-    * exact), never as their decimal renderings — BigDecimal("0.1") and
-    * the float 0.1f are different numbers, and comparing renderings
-    * would prune files whose rows actually match.
-    */
-  private def keyOfString(dt: DataType, s: String,
-                          zone: String): Option[Comparable[Any]] = {
-    def c(x: Any) = Some(x.asInstanceOf[Comparable[Any]])
-    try dt match {
-      case FloatType => fracKey(s.toFloat.toDouble)
-      case DoubleType => fracKey(s.toDouble)
-      case _: NumericType => c(BigDecimal(s)) // integrals + decimals: exact
-      case StringType => c(UTF8String.fromString(s))
-      case BooleanType => c(java.lang.Boolean.valueOf(s))
-      case DateType =>
-        c(java.lang.Long.valueOf(java.time.LocalDate.parse(s).toEpochDay))
-      case TimestampType =>
-        tsMicros(s, zone).map(m =>
-          java.lang.Long.valueOf(m).asInstanceOf[Comparable[Any]])
-      case TimestampNTZType =>
-        DateTimeUtils.stringToTimestampWithoutTimeZone(UTF8String.fromString(s))
-          .map(m => java.lang.Long.valueOf(m).asInstanceOf[Comparable[Any]])
-      case _ => None
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  private def tsMicros(s: String): Option[Long] = s.toLongOption
 
   /** Sign of (stat − literal) under the semantics the ENGINE evaluates
     * the comparison with. For mixed numeric types that means computing
@@ -5826,11 +5705,11 @@ object LogTable extends org.apache.spark.internal.Logging {
         Some(java.lang.Long.compare(java.time.LocalDate.parse(s).toEpochDay,
           java.time.LocalDate.parse(l.value.toString).toEpochDay))
       case (TimestampType, TimestampType) =>
-        tsMicros(s, zone).map(m =>
+        tsMicros(s).map(m =>
           java.lang.Long.compare(m, l.value.asInstanceOf[Long]))
       case (TimestampType, StringType) =>
         for {
-          m <- tsMicros(s, zone)
+          m <- tsMicros(s)
           lm <- DateTimeUtils.stringToTimestamp(
             UTF8String.fromString(l.value.toString), java.time.ZoneId.of(zone))
         } yield java.lang.Long.compare(m, lm)
@@ -5848,90 +5727,21 @@ object LogTable extends org.apache.spark.internal.Logging {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  private def leadingType(snap: Snapshot): DataType =
-    snap.schema.fields.find(_.name.equalsIgnoreCase(snap.partitionCol))
-      .map(_.dataType).getOrElse(StringType)
-
-  /** Typed `lo ≤ v ≤ hi` over string renderings; an uninterpretable
-    * bound answers TRUE (keep the file). Timestamp values only compare
-    * when all three sides are in the SAME rendering (all UTC-micros
-    * integers, or all legacy wall strings) — a mixed-frame comparison
-    * (a pre-micros file's bounds against a micros value) is meaningless
-    * and conservatively keeps the file.
-    */
-  private def rangeMayContain(dt: DataType, lo: String, hi: String,
-                              v: String, zone: String = "UTC"): Boolean = {
-    if (dt == TimestampType) {
-      def micros(x: String) = scala.util.Try(x.trim.toLong).isSuccess
-      if (Seq(lo, hi, v).map(micros).distinct.size > 1) return true
-    }
-    (for {
-      kl <- keyOfString(dt, lo, zone)
-      kh <- keyOfString(dt, hi, zone)
-      kv <- keyOfString(dt, v, zone)
-    } yield kl.compareTo(kv) <= 0 && kv.compareTo(kh) <= 0).getOrElse(true)
-  }
-
   /** The files a batch touching the given partition-value TUPLES must
-    * rewrite: a file is a victim unless, for every touched tuple, some
-    * partition column's stats range provably excludes the tuple's value.
-    * Missing stats (pre-stats files, untracked columns) and
-    * uninterpretable bounds keep the file — over-rewriting is safe,
-    * under-rewriting would duplicate keys.
+    * rewrite: a file is a victim unless, for every tuple, [[verdict]]
+    * proves that no row satisfies the tuple's conjuncts (`p = v`, or
+    * `p IS NULL` for a NULL value). Missing stats (pre-stats files,
+    * untracked columns) and uninterpretable bounds keep the file —
+    * over-rewriting is safe, under-rewriting would duplicate keys.
     */
-  /** The distinct partition-value TUPLES a batch touches — bounded: one
-    * row per tuple (a daily batch touches a handful of partitions, never
-    * the table's full set). Values render EXACTLY as the stats persist
-    * them — timestamps as UTC micros, not a session-zone wall string, or
-    * victim matching would compare across reference frames and miss
-    * rewrites. A NULL partition value renders as null in the tuple;
-    * [[victimFiles]] matches it against each file's NULL COUNT for the
-    * column (a file provably holding no NULLs is not a victim).
-    */
-  private[sources] def touchedTuples(path: String, snap: Snapshot,
-                                     df: DataFrame): Seq[Seq[String]] = {
-    // an UNPARTITIONED table is ONE partition tuple — every file is a
-    // candidate (key-range pruning still narrows the victims)
-    if (snap.partitionCols.isEmpty) return Seq(Seq.empty)
-    withDesc(df.sparkSession, s"touched-tuples($path)") {
-    df.select(snap.partitionCols.map { c =>
-        snap.schema.fields.find(_.name.equalsIgnoreCase(c))
-          .map(_.dataType) match {
-          case Some(TimestampType) => unix_micros(col(c)).cast("string")
-          case _ => col(c).cast("string")
-        }
-      }: _*)
-      .distinct().collect()
-      .map { r =>
-        snap.partitionCols.indices.map { i =>
-          if (r.isNullAt(i)) null else r.getString(i)
-        }
-      }.toIndexedSeq
-    }
-  }
-
-  private[sources] def victimFiles(snap: Snapshot,
-                          touched: Seq[Seq[String]]): Seq[LogFile] = {
-    val types = snap.partitionCols.map(c =>
-      c -> snap.schema.fields.find(_.name.equalsIgnoreCase(c))
-        .map(_.dataType).getOrElse(StringType))
-    snap.files.filter { f =>
-      touched.exists { tuple =>
-        types.zip(tuple).forall { case ((c, dt), v) =>
-          // NULL tuple value: the file may hold it unless a real stats
-          // entry PROVES zero NULLs in the column; no entry (legacy) ⇒ keep
-          if (v == null) statEntry(snap, f, c).forall(_.nulls > 0L)
-          else statsOf(snap, f, c) match {
-            case Some(ColStats(Some(lo), Some(hi), _, _, _)) =>
-              rangeMayContain(dt, lo, hi, v)
-            // an entry without a range: an all-NULL file, which cannot
-            // hold a non-null touched value
-            case Some(_) => false
-            case None => true // unknown (legacy file, no entry) ⇒ keep
-          }
-        }
-      }
-    }
+  private[sources] def victimFiles(snap: Snapshot, tuples: Seq[Seq[Literal]],
+                                   zone: String): Seq[LogFile] = {
+    val cjs = tuples.map(t => snap.partitionCols.zip(t).map { case (c, v) =>
+      val p = AttributeReference(c, v.dataType)()
+      if (v.value == null) IsNull(p) else EqualTo(p, v)
+    })
+    snap.files.filter(f =>
+      cjs.exists(cj => verdict(snap, f, cj, zone) != Verdict.Cannot))
   }
 
   /** The stats entry `f` really carries for column `c` — stats are keyed
@@ -5964,13 +5774,6 @@ object LogTable extends org.apache.spark.internal.Logging {
           leadFallbackSound(snap))
         Some(ColStats(Some(f.pmin), Some(f.pmax), 0L))
       else None)
-
-  /** A file's (min, max) for `c` per [[statsOf]]. None ⇒ unknown, or an
-    * all-NULL file.
-    */
-  private def statsRange(snap: Snapshot, f: LogFile,
-                         c: String): Option[(String, String)] =
-    statsOf(snap, f, c).flatMap(st => st.min.zip(st.max))
 
   private[sources] def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -6136,11 +5939,6 @@ object LogTable extends org.apache.spark.internal.Logging {
     StructField("file", StringType, nullable = false),
     StructField("bitmap", BinaryType, nullable = false)))
   private val Dv2Prefix = "dv2-"
-
-  /** Spec hook: write v1 pair sidecars instead of v2 bitmaps, to prove
-    * the cross-format read/copy-forward path with a genuinely old table.
-    */
-  @volatile private[sources] var dvWriteV2: Boolean = true
 
   private[sources] def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[Row](), schema)
@@ -6389,13 +6187,6 @@ object LogTable extends org.apache.spark.internal.Logging {
       }, extras = Seq(tag))
   }
 
-  /** Write `df` once as parquet files directly referenced by the log:
-    * land in a scratch dir, collect per-file stats (partition bounds,
-    * rows, per-tracked-column min/max/nulls) with ONE metadata-shaped
-    * scan of the new files only — the scan reads ONLY the tracked
-    * columns — then rename each into the table root under its (already
-    * unique) name. Files are invisible until a commit references them.
-    */
   /** A cluster column as a double preserving order — what both the
     * Z-order bucketer interleaves and `width_bucket` requires.
     */

@@ -182,8 +182,8 @@ final case class MergeInto private[sources] (
           s"merge into $path: the INSERT clause needs partition column " +
             s"`$c` (a source column or an explicit value)")
     }
-    // the source evaluates at least thrice (ambiguity check, touched
-    // tuples, the join itself — more under retry): persist for the
+    // the source evaluates at least thrice (ambiguity check, the batch
+    // probe, the join itself — more under retry): persist for the
     // transaction's scope so an expensive source query runs ONCE (the
     // scd2Apply discipline, cf. Merge.scala)
     source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): Unit
@@ -224,12 +224,12 @@ final case class MergeInto private[sources] (
           .getOrElse(source)
         rtFill.map(_ => LogTable.rowIdApply(spark, snap, s1)).getOrElse(s1)
       }
-      // touched tuples exist for pruning and the disjoint fast path —
-      // both off under a by-source clause (and the source may then
-      // legitimately lack the partition columns the computation reads)
-      val touched =
-        if (bySource.nonEmpty) Nil
-        else LogTable.touchedTuples(path, snap, source)
+      // the batch probe (touched tuples, key spans) exists for pruning
+      // and the disjoint fast path — both off under a by-source clause
+      // (and the source may then legitimately lack the partition
+      // columns the probe reads)
+      val zone = spark.sessionState.conf.sessionLocalTimeZone
+      lazy val probe = LogTable.batchProbe(spark, path, snap, source, keyCols)
       // a by-source clause reaches target rows whose key the source does
       // NOT carry — they can live in any partition, so the transaction
       // READS the whole live file set (exactly Delta's by-source cost
@@ -247,10 +247,8 @@ final case class MergeInto private[sources] (
           // only unmatched target rows — it survives unread and
           // unrewritten (and key-disjoint merges into the same partition
           // stop conflicting: disjoint victim sets admit the fast path)
-          val zone = spark.sessionState.conf.sessionLocalTimeZone
-          val kr = LogTable.batchKeyRanges(spark, snap, source, keyCols)
-          val v = LogTable.victimFiles(snap, touched).filterNot(f =>
-            kr.nonEmpty && LogTable.keyRangeDisjoint(snap, f, kr, zone))
+          val v = LogTable.victimFiles(snap, probe.tuples, zone).filterNot(f =>
+            LogTable.keyRangeDisjoint(snap, f, probe.keys, zone))
           val tagged = taggedJoin(snap,
             LogTable.readFiles(spark, path, snap, v), srcEff)
           if (cdcOn) {
@@ -323,9 +321,8 @@ final case class MergeInto private[sources] (
       // those very rows), so the full re-merge is the only sound path
       tx.publish(c, recover =
         if (bySource.nonEmpty) None
-        else LogTable.recommitDisjoint(spark, path, snap, c, touched,
-          maxRetries, keyRanges = () =>
-            LogTable.batchKeyRanges(spark, snap, source, keyCols)))
+        else LogTable.recommitDisjoint(spark, path, snap, c, probe.tuples,
+          maxRetries, probe.keys))
     }
     } finally source.unpersist(): Unit
   }

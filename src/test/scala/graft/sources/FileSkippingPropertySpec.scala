@@ -212,6 +212,91 @@ class FileSkippingPropertySpec extends SparkSpec {
     assert(seen(Verdict.Cannot) > 300, seen)
     assert(seen(Verdict.Must) > 150, seen)
   }
+
+  test("legacy wall-string timestamp stats decide nothing") {
+    // an older writer rendered timestamp stats as wall strings in its own
+    // session zone, which the log does not record: read under another
+    // zone, "12:00" would bound a New York noon (17:00 UTC) away
+    val c = AttributeReference("c", TimestampType)()
+    val snap = Snapshot(1L, StructType(Seq(StructField("c", TimestampType))).toDDL,
+      Nil, Seq("c"), Nil)
+    val wall = ColStats(Some("2024-03-01 12:00:00"), Some("2024-03-01 12:00:00"), 0L)
+    val f = LogFile("part-0.parquet", "", "", 1L, 1L, Map("c" -> wall))
+    val nyNoon = Literal(1709312400000000L, TimestampType) // 17:00 UTC
+    for (p <- Seq(EqualTo(c, nyNoon), GreaterThan(c, nyNoon), LessThan(c, nyNoon)))
+      assert(LogTable.verdict(snap, f, Seq(p), "UTC") == Verdict.May, p)
+    val span = LogTable.KeySpan(Some((nyNoon, nyNoon)), hasNull = false)
+    assert(!LogTable.keyRangeDisjoint(snap, f, Map("c" -> span), "UTC"))
+  }
+
+  /** A file whose column `c` is not a nested path, and a batch of one to
+    * three values: literals the column's values are compared with
+    * (other types included) or NULL.
+    */
+  private def batchGen(lit: Kind => Gen[Literal]): Gen[(Case, Seq[Literal])] =
+    for {
+      c <- caseGen.suchThat(!_.nested)
+      n <- Gen.choose(1, 3)
+      batch <- Gen.listOfN(n, Gen.frequency(3 -> lit(c.kind),
+        1 -> Gen.const(Literal(null, c.kind.dt))))
+    } yield (c, batch)
+
+  /** Does the column value `v` equal the batch value `b`, NULL matching
+    * NULL (the merge groups NULL keys as one key)? Analyzed, so mixed
+    * types coerce as a query's would.
+    */
+  private def nullSafeEq(c: Case, v: Any, b: Literal): Boolean =
+    analyze(c.attr, EqualNullSafe(c.attr, b)).exists(cond =>
+      BindReferences.bindReference(cond, Seq(c.attr))
+        .eval(InternalRow(v)) == true)
+
+  test("a file that is no victim of a batch's partition tuples holds no " +
+    "row of them") {
+    var spared = 0
+    var nullTuples = 0
+    forSamples(batchGen(_.lit).suchThat(_._1.layout != Tracked(leading = false)),
+        2000) { case (c, tuples) =>
+      val (snap, f, _) = fabricate(c)
+      assert(snap.partitionCols == Seq("c"))
+      if (tuples.exists(_.value == null)) nullTuples += 1
+      if (LogTable.victimFiles(snap.copy(files = Seq(f)), tuples.map(Seq(_)),
+          "UTC").isEmpty) {
+        spared += 1
+        for (v <- c.values; t <- tuples)
+          assert(!nullSafeEq(c, v, t),
+            s"spared, but $v matches $t: ${c.values} (${c.layout}) " +
+              s"stats=${f.stats} pmin=${f.pmin} pmax=${f.pmax}")
+      }
+    }
+    assert(spared > 300 && nullTuples > 300, (spared, nullTuples))
+  }
+
+  test("a file key-range-disjoint from a batch holds none of its keys, " +
+    "NULL included") {
+    val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    forSamples(batchGen(k => k.value.map(Literal(_, k.dt))), 2000) {
+        case (c, batch) =>
+      val (snap, f, _) = fabricate(c)
+      val dt = c.kind.dt
+      val ord = TypeUtils.getInterpretedOrdering(dt)
+      val nn = batch.filter(_.value != null)
+      val span = LogTable.KeySpan(
+        Option.when(nn.nonEmpty)((nn.minBy(_.value)(ord), nn.maxBy(_.value)(ord))),
+        batch.exists(_.value == null))
+      val disjoint = LogTable.keyRangeDisjoint(snap, f, Map("c" -> span), "UTC")
+      if (disjoint) {
+        seen("disjoint") += 1
+        if (span.hasNull) seen("disjoint, NULL key") += 1
+        if (c.values.forall(_ == null)) seen("disjoint, all-NULL file") += 1
+        for (v <- c.values; b <- batch)
+          assert(!nullSafeEq(c, v, b),
+            s"disjoint, but $v matches $b: ${c.values} (${c.layout}) " +
+              s"stats=${f.stats} pmin=${f.pmin} pmax=${f.pmax}")
+      }
+    }
+    assert(seen("disjoint") > 400 && seen("disjoint, NULL key") > 50 &&
+      seen("disjoint, all-NULL file") > 20, seen)
+  }
 }
 
 object FileSkippingPropertySpec {

@@ -22,7 +22,7 @@ class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
   private val budgets = Map(
-    "upsert" -> 12, "MERGE INTO" -> 15, "rewrite UPDATE" -> 3, "DV UPDATE" -> 9,
+    "upsert" -> 12, "MERGE INTO" -> 13, "rewrite UPDATE" -> 3, "DV UPDATE" -> 9,
     "append" -> 3, "DV DELETE" -> 7, "stream batch" -> 13, "MV refresh" -> 12)
 
   /** The labels of the jobs `op` runs, in start order ("" if unlabeled). */
@@ -75,6 +75,10 @@ class JobBudgetSpec extends SparkSpec {
     counted.foreach { case (name, labels) =>
       assert(!labels.exists(_.startsWith("graft:write-cdc-files")),
         s"$name ran a separate CDC write job: $labels")
+      // a batch is probed once, for its partition tuples and key spans
+      assert(!labels.exists(l => l.startsWith("graft:touched-tuples") ||
+        l.startsWith("graft:batch-key-ranges")),
+        s"$name ran a separate batch probe job: $labels")
       assert(labels.forall(_.startsWith("graft:")),
         s"$name ran an unlabeled job: $labels")
       assert(labels.size <= budgets(name),

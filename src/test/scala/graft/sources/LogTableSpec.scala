@@ -73,7 +73,7 @@ class LogTableSpec extends SparkSpec {
     val snap = LogTable.snapshot(spark, dir)
     val spanning = snap.files.filter(f => f.pmin != f.pmax)
     assert(spanning.nonEmpty, snap.files)
-    val pruned = LogTable.prunedFiles(snap, Set("p01")).map(_.name).toSet
+    val pruned = LogTable.prunedFiles(spark, snap, Seq("p01")).map(_.name).toSet
     // typed range pruning: every spanning file whose [pmin,pmax] can hold
     // p01 is a victim; one provably past it (pmin > p01) is NOT
     spanning.filter(f => f.pmin <= "p01" && "p01" <= f.pmax)
@@ -476,7 +476,7 @@ class LogTableSpec extends SparkSpec {
       LogTable.create(spark, dir, df, "y")
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     val snap = LogTable.snapshot(spark, dir)
-    val pruned = LogTable.prunedFiles(snap, Set("2")).map(_.name).toSet
+    val pruned = LogTable.prunedFiles(spark, snap, Seq(2)).map(_.name).toSet
     // a file whose numeric range starts past 2 (e.g. ["10","19"]) is NOT
     // kept — lexicographically "10" <= "2" <= "19" would wrongly keep it
     snap.files.filter(f => BigDecimal(f.pmin) > 2 || BigDecimal(f.pmax) < 2)
@@ -528,6 +528,32 @@ class LogTableSpec extends SparkSpec {
     untouched.foreach(f => assert(live.contains(f.name), f))
     // and at least one (2001, B)-capable file was rewritten
     assert(before.files.exists(f => !live.contains(f.name)))
+  }
+
+  test("upsert: a NULL key beside an unrelated key replaces the stored NULL-key row") {
+    // the merge groups NULL keys as one key, so a file holding a NULL key
+    // is a victim of a batch holding one, whatever the batch's non-NULL
+    // key range: here [100, 100] misses the file's k range [1, 3]
+    val dir = tmp() + "/t"
+    val base = Seq((Some(1L), "old", 0, "a", "U"), (Some(2L), "old", 0, "a", "U"),
+      (Some(3L), "old", 0, "a", "U"), (None, "old", 0, "a", "U"))
+      .toDF("k", "v", "ver", "p", "op")
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "1")
+      LogTable.create(spark, dir, base, Seq("p"), statsCols = Seq("k"))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val Seq(f) = LogTable.snapshot(spark, dir).files
+    assert(f.stats("k") == LogTable.ColStats(Some("1"), Some("3"), 1L), f)
+    val changes = Seq((None, "new", 1, "a", "U"), (Some(100L), "x", 1, "a", "U"))
+      .toDF("k", "v", "ver", "p", "op")
+    LogTable.upsert(spark, dir, changes, Seq("k"), Seq("ver"), "op")
+    val got = LogTable.read(spark, dir).select("k", "v")
+      .as[(Option[Long], String)].collect().sortBy(_._1).toSeq
+    assert(got == Seq((None, "new"), (Some(1L), "old"), (Some(2L), "old"),
+      (Some(3L), "old"), (Some(100L), "x")), got)
+    assert(got == Merge.merge(base, changes, Seq("k"), Seq("ver"), "op")
+      .select("k", "v").as[(Option[Long], String)].collect().sortBy(_._1).toSeq)
   }
 
   test("countWhere: stats-decided files contribute counts without a scan") {
@@ -1569,32 +1595,39 @@ class LogTableSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     def sidecar(): String =
       LogTable.snapshot(spark, dir).files.flatMap(_.dv).map(_.name).head
-    try {
-      // a LEGACY v1 table: pair-encoded sidecar
-      LogTable.dvWriteV2 = false
-      LogTable.deleteWhere(spark, dir, $"k" === 2L,
-        deletionVectors = true): Unit
-      assert(sidecar().startsWith("dv-"), sidecar())
-      assert(LogTable.read(spark, dir).select("k").as[Long]
-        .collect().sorted.toSeq == Seq(1L, 3L, 4L))
-      // the next delete copies the v1 content forward INTO a v2 bitmap
-      LogTable.dvWriteV2 = true
-      LogTable.deleteWhere(spark, dir, $"k" === 3L,
-        deletionVectors = true): Unit
-      assert(sidecar().startsWith("dv2-"), sidecar())
-      assert(LogTable.snapshot(spark, dir).files.flatMap(_.dv)
-        .map(_.deleted).sum == 2L)
-      assert(LogTable.read(spark, dir).select("k").as[Long]
-        .collect().sorted.toSeq == Seq(1L, 4L))
-      // time travel still reads the RETIRED v1 sidecar
-      assert(LogTable.read(spark, dir, Some(2L)).select("k").as[Long]
-        .collect().sorted.toSeq == Seq(1L, 3L, 4L))
-      // purge materializes bitmapped vectors away like pair vectors
-      assert(LogTable.purgeDeletes(spark, dir) > 0L)
-      assert(LogTable.snapshot(spark, dir).files.forall(_.dv.isEmpty))
-      assert(LogTable.read(spark, dir).select("k").as[Long]
-        .collect().sorted.toSeq == Seq(1L, 4L))
-    } finally LogTable.dvWriteV2 = true
+    // a LEGACY v1 table, as an older writer left it: a pair-encoded
+    // `dv-` sidecar marking k = 2's row position, committed as a DELETE
+    val snap1 = LogTable.snapshot(spark, dir)
+    val Seq(f) = snap1.files
+    val pairs = spark.read.parquet(LogTable.dataPath(dir, f.name).toString)
+      .filter($"k" === 2L)
+      .select(lit(f.name).as("file"), col("_metadata.row_index").as("row_index"))
+    val Seq((v1, _)) = org.apache.spark.sql.GraftBridge.writeFiles(spark,
+      pairs.repartition(1), dir, Map.empty, Nil, sidecar = Some("dv-"))
+    LogTable.commit(spark, dir, snap1.version + 1,
+      LogTable.Commit.of(snap1, "DELETE").copy(
+        adds = Seq(f.copy(dv = Some(LogTable.DvDescriptor(v1, 1L)))),
+        removes = Seq(f.name),
+        properties = snap1.properties + (LogTable.ProtocolProp -> "2")))
+    assert(sidecar().startsWith("dv-"), sidecar())
+    assert(LogTable.read(spark, dir).select("k").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 3L, 4L))
+    // the next delete copies the v1 content forward INTO a v2 bitmap
+    LogTable.deleteWhere(spark, dir, $"k" === 3L,
+      deletionVectors = true): Unit
+    assert(sidecar().startsWith("dv2-"), sidecar())
+    assert(LogTable.snapshot(spark, dir).files.flatMap(_.dv)
+      .map(_.deleted).sum == 2L)
+    assert(LogTable.read(spark, dir).select("k").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 4L))
+    // time travel still reads the RETIRED v1 sidecar
+    assert(LogTable.read(spark, dir, Some(2L)).select("k").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 3L, 4L))
+    // purge materializes bitmapped vectors away like pair vectors
+    assert(LogTable.purgeDeletes(spark, dir) > 0L)
+    assert(LogTable.snapshot(spark, dir).files.forall(_.dv.isEmpty))
+    assert(LogTable.read(spark, dir).select("k").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 4L))
   }
 
   test("readNetChanges is lazy and single-pass; key discipline raises at action") {

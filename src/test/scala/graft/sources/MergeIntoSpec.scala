@@ -342,7 +342,7 @@ class MergeIntoSpec extends SparkSpec {
       .whenMatchedUpdate(Map("cents" -> "s.cents"))
       .whenNotMatchedInsert(values = Map("ver" -> "0"))
       .run(): Unit
-    // dup-check + touched-tuples + the join all read the persisted
+    // dup-check + batch probe + the join all read the persisted
     // source: each input row materializes ONCE, not three times
     assert(evals.value == 2L,
       s"source evaluated ${evals.value} row-reads for 2 rows — recomputed")
