@@ -6440,8 +6440,16 @@ object LogTable extends org.apache.spark.internal.Logging {
     * them. One planned query: a range shuffle of the data rows on
     * (partition values, layout key, salt), the change rows unioned in
     * unshuffled, then the parquet write, whose tasks fold each data file's
-    * stats as they write it. With change rows the write is partitioned on
-    * the hidden `InPlaceCommitProtocol.CdcFlag`, so they land in
+    * stats as they write it. Data rows already on the driver — a
+    * deterministic frame whose plan optimizes to a `LocalRelation`, such as
+    * `createDataFrame`/`toDF` rows or `INSERT … VALUES` — are range-split
+    * there instead ([[org.apache.spark.sql.GraftBridge.rangeSplit]]), so a
+    * plain append runs one job, the write; the split must pick the bounds
+    * `RangePartitioner.determineBounds` picks from a sample of every row,
+    * or the same rows would land in other files with other stats than the
+    * shuffle gives them. Every other frame takes the shuffle. With change
+    * rows the write is partitioned on the hidden
+    * `InPlaceCommitProtocol.CdcFlag`, so they land in
     * `_change_data/` (the data files then carry an all-NULL
     * `_change_type` column, which no reader of the log's schema sees) and
     * the shuffle stages of both sides run together. Returns the non-empty
@@ -6509,7 +6517,27 @@ object LogTable extends org.apache.spark.internal.Logging {
     val saltCols = df.schema.fields.toIndexedSeq
       .filter(f => hashable(f.dataType))
       .map(f => col("`" + f.name.replace("`", "``") + "`"))
-    // The range partitioner SAMPLES its input (one full extra execution
+    // A driver-resident input — its plan optimizes to a LocalRelation:
+    // createDataFrame/toDF rows, INSERT … VALUES — is range-split on the
+    // driver instead ([[GraftBridge.rangeSplit]]), by the bounds the
+    // exchange's sample would pick from its every row. The write then
+    // runs one job: no sample job, no map stage, no AQE re-plan. A
+    // nondeterministic input keeps the shuffle (its LocalRelation holds
+    // the values one optimization drew), as does every other input.
+    val optimized = df.queryExecution.optimizedPlan
+    val ranged = partitionCols.map(col) ++ layout
+    val salt =
+      if (saltCols.isEmpty) lit(0L)
+      else pmod(xxhash64(struct(saltCols: _*)), lit(1L << 20))
+    val driverSplit = optimized match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if !l.isStreaming && df.queryExecution.analyzed.deterministic =>
+        org.apache.spark.sql.GraftBridge.rangeSplit(spark, l, df.schema,
+          ranged :+ salt, n)
+      case _ => None
+    }
+    // On the shuffle route — every input not split on the driver above —
+    // the range partitioner SAMPLES its input (one full extra execution
     // of the input plan) before the shuffle map pass executes it again.
     // Scan-backed inputs re-execute cheaply (a columnar parquet read);
     // COMPUTED frames — joins/aggregates/windows/generates over raw
@@ -6529,17 +6557,14 @@ object LogTable extends org.apache.spark.internal.Logging {
         case _: Join | _: Aggregate | _: LWindow | _: Generate => rawLeaves(p)
         case other => other.children.exists(expensive)
       }
-      if (expensive(df.queryExecution.optimizedPlan))
+      if (expensive(optimized))
         Some(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       else None
     }
     try {
-    val shuffled = df.withColumn("__graft_salt",
-        if (saltCols.isEmpty) lit(0L)
-        else pmod(xxhash64(struct(saltCols: _*)), lit(1L << 20)))
-      .repartitionByRange(n,
-        (partitionCols.map(col) ++ layout) :+ col("__graft_salt"): _*)
-      .drop("__graft_salt")
+    val shuffled = driverSplit.getOrElse(df.withColumn("__graft_salt", salt)
+      .repartitionByRange(n, ranged :+ col("__graft_salt"): _*)
+      .drop("__graft_salt"))
     // Per-file stats WITHOUT a second query: the writer tasks fold every
     // row they write into per-file buffers ([[FileStatsTracker]]) that
     // evaluate the same Catalyst aggregates a rescan grouped by file

@@ -1,8 +1,9 @@
 package org.apache.spark.sql
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Expression, InterpretedOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 
 /** Bridge into `private[sql]` Column↔Expression conversion for the
   * engine's custom Catalyst expressions (the standard extension-point
@@ -33,10 +34,96 @@ object GraftBridge {
       data.queryExecution.toRdd, data.schema, isStreaming = false)
   }
 
+  /** The rows of a driver-resident frame, cut on the driver into the
+    * slices a range exchange (`repartitionByRange(n, keys)`) would give
+    * them: a frame over one RDD slice per range, each holding its rows in
+    * input order, with no exchange in its plan — so writing it runs one
+    * job, where the exchange runs a sample job, a map stage and the write.
+    * `rows` is the frame's optimized plan and `schema` its schema; `keys`
+    * are expressions over the schema's column names. The ranges are the
+    * ones the exchange picks whenever its sample holds every row
+    * ([[rangeBounds]], [[rangeOf]]): the same rows land in the same task,
+    * so the files and their stats match. None when the keys do not
+    * evaluate on the driver.
+    */
+  def rangeSplit(spark: SparkSession, rows: LocalRelation,
+                 schema: types.StructType, keys: Seq[Column],
+                 n: Int): Option[DataFrame] =
+    ofRows(spark, rows).toDF(schema.fieldNames.toIndexedSeq: _*)
+      .select(keys: _*).queryExecution.optimizedPlan match {
+      case k: LocalRelation if k.data.size == rows.data.size =>
+        // the exchange's ordering: every key ascending, nulls first
+        implicit val ord: Ordering[InternalRow] =
+          new InterpretedOrdering(k.output.zipWithIndex.map { case (a, i) =>
+            SortOrder(BoundReference(i, a.dataType, a.nullable), Ascending)
+          })
+        val bounds = rangeBounds(k.data, n)
+        val slices = Array.fill(bounds.size + 1)(Array.newBuilder[InternalRow])
+        val unsafe = UnsafeProjection.create(rows.schema)
+        rows.data.iterator.zip(k.data.iterator).foreach { case (r, key) =>
+          slices(rangeOf(bounds, key)) += unsafe(r).copy()
+        }
+        val rdd = spark.sparkContext
+          .parallelize(slices.toSeq.map(_.result()), slices.length)
+          .flatMap(_.iterator)
+        Some(spark.asInstanceOf[classic.SparkSession]
+          .internalCreateDataFrame(rdd, schema))
+      case _ => None
+    }
+
+  /** The upper bounds of the ranges that `RangePartitioner.determineBounds`
+    * picks for `n` partitions from a sample that holds each of `keys` once
+    * (every weight 1): over the sorted keys, with `step` = keys ÷
+    * min(n, keys), a bound is the key at which the running count first
+    * reaches the next multiple of `step` — accumulated by repeated
+    * addition, as there — and a key equal to the previous bound is
+    * skipped. An even cut of the sorted keys differs: three keys (a, a, b)
+    * into two ranges split a a | b here, where an even cut gives a | a b,
+    * and the table's files and their stats follow the split.
+    */
+  def rangeBounds[K](keys: Seq[K], n: Int)(implicit ord: Ordering[K]): IndexedSeq[K] = {
+    val parts = math.min(n, keys.size)
+    val step = keys.size.toDouble / parts
+    val bounds = IndexedSeq.newBuilder[K]
+    var last = Option.empty[K]
+    var found = 0
+    var seen = 0.0
+    var target = step
+    val it = keys.sorted(ord).iterator
+    while (it.hasNext && found < parts - 1) {
+      val key = it.next()
+      seen += 1.0
+      if (seen >= target && last.forall(ord.gt(key, _))) {
+        bounds += key
+        last = Some(key)
+        found += 1
+        target += step
+      }
+    }
+    bounds.result()
+  }
+
+  /** The range of `key` under `bounds` ([[rangeBounds]]), as
+    * `RangePartitioner.getPartition` finds it: the first bound at or above
+    * the key, so a key equal to a bound goes low; past the last bound, the
+    * last range.
+    */
+  def rangeOf[K](bounds: IndexedSeq[K], key: K)(implicit ord: Ordering[K]): Int = {
+    var lo = 0
+    var hi = bounds.size
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (ord.gt(key, bounds(mid))) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
   /** Run a frame's AQE plan up to its final stage (shuffle map stages,
     * and the sample a range partitioning takes) without running that
     * stage — so the caller can label the shuffle's jobs apart from the
     * write that consumes it. The plan is kept; [[writeFiles]] resumes it.
+    * A plan without an exchange (a [[rangeSplit]] frame with no change
+    * rows) is not adaptive, and nothing runs here.
     */
   def runShuffleStages(data: DataFrame): Unit =
     data.queryExecution.executedPlan match {

@@ -2,10 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
-import scala.collection.mutable
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -13,41 +10,33 @@ import graft.SparkSpec
 import graft.sources.MaterializedView.{MvCount, MvSum}
 
 /** The Spark jobs each table operation runs on a tiny `cdc.enabled`
-  * table: a listener counts them with their `graft:` labels. Every job
-  * carries a label, and the CDC-bearing DML writes data and change rows
-  * in one write job, so none of it runs a `write-cdc-files` job. Budgets
-  * may only go down.
+  * table: a listener counts them with their `graft:` labels, and the
+  * stages they run. Every job carries a label, and the CDC-bearing DML
+  * writes data and change rows in one write job, so none of it runs a
+  * `write-cdc-files` job. Rows already on the driver are range-split
+  * there, so writing them runs the write job alone. Budgets may only go
+  * down.
   */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
   private val budgets = Map(
     "upsert" -> 12, "MERGE INTO" -> 13, "rewrite UPDATE" -> 3, "DV UPDATE" -> 9,
-    "append" -> 3, "DV DELETE" -> 7, "stream batch" -> 13, "MV refresh" -> 12)
+    "append" -> 1, "DV DELETE" -> 7, "stream batch" -> 13, "MV refresh" -> 12,
+    "create" -> 1, "INSERT VALUES" -> 1)
 
-  /** The labels of the jobs `op` runs, in start order ("" if unlabeled). */
-  private def jobsOf(op: => Any): Seq[String] = {
-    val labels = mutable.ArrayBuffer.empty[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = labels.synchronized {
-        labels += Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-      }
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { op; ListenerBusDrain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    labels.synchronized(labels.toList)
-  }
+  private def jobsOf(op: => Any): JobsRan = JobsRan.of(spark)(op)
+
+  private def base = (1L to 20L).map(i => (i, s"v$i", 5, s"p${i % 2}", "U"))
+    .toDF("k", "v", "ver", "p", "op")
+
+  private def create(dir: String, rows: DataFrame): Long =
+    LogTable.create(spark, dir, rows, Seq("p"), statsCols = Seq("k"),
+      tableProperties = Map(LogTable.CdcProp -> "true"))
 
   private def table(): String = {
     val dir = Files.createTempDirectory("graft-budget").toString + "/t"
-    val base = (1L to 20L).map(i => (i, s"v$i", 5, s"p${i % 2}", "U"))
-      .toDF("k", "v", "ver", "p", "op")
-    LogTable.create(spark, dir, base, Seq("p"), statsCols = Seq("k"),
-      tableProperties = Map(LogTable.CdcProp -> "true"))
+    create(dir, base)
     dir
   }
 
@@ -64,13 +53,12 @@ class JobBudgetSpec extends SparkSpec {
         Map("v" -> lit("y")), deletionVectors = true)))
     val counted = ops.map { case (name, op) =>
       val d = table()
-      val labels = jobsOf(op(d))
+      val ran = jobsOf(op(d))
       // every operation committed row-level changes
       val c = LogTable.commitAt(spark, d, LogTable.latestVersion(spark, d))
       assert(c.cdc.nonEmpty, name)
-      info(s"$name: ${labels.size} jobs: " +
-        labels.map(_.replaceAll("\\(.*", "(…)")).mkString(", "))
-      name -> labels
+      info(ran.line(name))
+      name -> ran.labels
     }
     counted.foreach { case (name, labels) =>
       assert(!labels.exists(_.startsWith("graft:write-cdc-files")),
@@ -125,20 +113,40 @@ class JobBudgetSpec extends SparkSpec {
       val run = setUp(d)
       val v = LogTable.latestVersion(spark, d)
       var out: Any = null
-      val labels = jobsOf { out = run() }
+      val ran = jobsOf { out = run() }
       // every operation did its work: a new table version, or a refresh
       // that folded the base append into the view
       if (name == "MV refresh") assert(out.asInstanceOf[Long] > 0L, name)
       else assert(LogTable.latestVersion(spark, d) > v, s"$name committed nothing")
-      info(s"$name: ${labels.size} jobs: " +
-        labels.map(_.replaceAll("\\(.*", "(…)")).mkString(", "))
-      name -> labels
+      info(ran.line(name))
+      name -> ran.labels
     }
     counted.foreach { case (name, labels) =>
       assert(labels.forall(_.startsWith("graft:")),
         s"$name ran an unlabeled job: $labels")
       assert(labels.size <= budgets(name),
         s"$name ran ${labels.size} jobs, over its budget of ${budgets(name)}: $labels")
+    }
+  }
+
+  test("rows on the driver — create from a Seq, SQL INSERT … VALUES — " +
+    "are written by the write job alone, within their job budgets") {
+    val created = Files.createTempDirectory("graft-budget").toString + "/t"
+    val rows = base
+    val inserted = table()
+    val counted = Seq(
+      ("create", jobsOf(create(created, rows)), created, 20L),
+      ("INSERT VALUES", jobsOf(spark.sql(s"INSERT INTO graft.`$inserted` " +
+        "VALUES (60, 'i', 9, 'p0', 'U'), (61, 'j', 9, 'p1', 'U')")), inserted, 22L))
+    counted.foreach { case (name, ran, d, want) =>
+      info(ran.line(name))
+      assert(LogTable.read(spark, d).count() == want, name)
+      assert(ran.labels.forall(_.startsWith("graft:")),
+        s"$name ran an unlabeled job: ${ran.labels}")
+      assert(!ran.labels.exists(_.startsWith("graft:write-shuffle")),
+        s"$name shuffled rows that were on the driver: ${ran.labels}")
+      assert(ran.labels.size <= budgets(name),
+        s"$name ran ${ran.labels.size} jobs, over its budget of ${budgets(name)}: ${ran.labels}")
     }
   }
 }
