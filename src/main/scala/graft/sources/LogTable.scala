@@ -165,10 +165,7 @@ object LogTable extends org.apache.spark.internal.Logging {
       * property) for never-renamed columns — the empty-map fast path
       * keeps every pre-mapping table's plan byte-identical.
       */
-    lazy val colMap: Map[String, String] = properties.collect {
-      case (k, v) if k.startsWith(ColMapMapPrefix) =>
-        k.drop(ColMapMapPrefix.length) -> v
-    }
+    lazy val colMap: Map[String, String] = colMapOfProps(properties)
     /** This column's at-rest name (identity when never renamed). */
     def physicalOf(logical: String): String = physicalIn(colMap, logical)
 
@@ -556,24 +553,8 @@ object LogTable extends org.apache.spark.internal.Logging {
     snap.properties.get(GenLateProp)
       .map(_.split(",").iterator.filter(_.nonEmpty).toSeq).getOrElse(Nil)
 
-  /** The late generated columns WITH their generator SQL, from a raw
-    * properties map — for the streaming source, whose per-batch frames
-    * bypass [[toLogical]] and must apply the same read-exit computation.
-    */
-  private[sources] def lateGeneratorsOf(props: Map[String, String])
-      : Map[String, String] = {
-    val late = props.get(GenLateProp)
-      .map(_.split(",").iterator.filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    props.collect {
-      case (k, v) if k.startsWith(GenPropPrefix) &&
-          late.contains(k.drop(GenPropPrefix.length)) =>
-        k.drop(GenPropPrefix.length) -> v
-    }
-  }
-
-  /** The logical→physical column mapping out of a raw properties map —
-    * for callers holding a [[ParsedCommit]] rather than a snapshot.
+  /** The logical→physical column mapping ([[Snapshot.colMap]]) out of a
+    * raw properties map.
     */
   private[sources] def colMapOfProps(props: Map[String, String])
       : Map[String, String] =
@@ -632,10 +613,15 @@ object LogTable extends org.apache.spark.internal.Logging {
     Some((exact.result().mkString("."), cur))
   }
 
+  /** A column name backtick-quoted, so a dot in it never parses as
+    * nested-field access — the one quoting rule of the package.
+    */
+  private[sources] def quoted(n: String): String =
+    "`" + n.replace("`", "``") + "`"
+
   /** A Column addressing a dotted path, each segment backtick-quoted. */
   private[sources] def pathCol(path: String): Column =
-    col(path.split("\\.").iterator
-      .map(s => "`" + s.replace("`", "``") + "`").mkString("."))
+    col(path.split("\\.").iterator.map(quoted).mkString("."))
 
   /** A logical-named struct VALUE rebuilt under physical leaf names
     * (`toPhysical`, the write direction), or vice versa (the read
@@ -1244,27 +1230,24 @@ object LogTable extends org.apache.spark.internal.Logging {
     * bake them), directory values fill the converted files. `fp` is the
     * caller-captured `_metadata.file_path` rendering — metadata columns
     * resolve only on the scan itself, so every caller captures it in
-    * the SAME projection that needs it.
-    */
-  /** The ONE fill expression (shared by batch reads and the streaming
-    * source — two copies would drift): in-data values win, directory
-    * values fill. `schema` is the PHYSICAL frame schema; directory
-    * segments carry the name at convert time — the physical name,
-    * stable forever.
+    * the SAME projection that needs it. `schema` is the PHYSICAL frame
+    * schema; directory segments carry the name at convert time — the
+    * physical name, stable forever. Every read reaches it through
+    * [[hiveFill]]: [[table]], and [[readFiles]]/[[readFilesTagged]],
+    * which serve batch and streaming reads alike.
     */
   private[sources] def hiveFillOn(schema: StructType, cols: Seq[String],
                                   df: DataFrame, fp: Column): DataFrame =
     cols.foldLeft(df) { (d, c) =>
       schema.fields.find(_.name.equalsIgnoreCase(c)) match {
         case Some(f) =>
-          val q = "`" + f.name.replace("`", "``") + "`"
           // regexp_extract renders a NO-MATCH as '' (not NULL): a flat
           // post-convert file whose row holds NULL in a STRING hive
           // column must stay NULL, not become empty string — nullif
           // restores the miss. Safe: hive layouts never emit `p=` (NULL
           // and '' both render __HIVE_DEFAULT_PARTITION__), so '' here
           // can only ever mean "no directory segment".
-          d.withColumn(f.name, coalesce(col(q),
+          d.withColumn(f.name, coalesce(col(quoted(f.name)),
             nullif(nullif(url_decode(regexp_extract(fp,
               "/" + java.util.regex.Pattern.quote(f.name) + "=([^/]+)/", 1)),
               lit("")), lit("__HIVE_DEFAULT_PARTITION__")).cast(f.dataType)))
@@ -3544,7 +3527,7 @@ object LogTable extends org.apache.spark.internal.Logging {
     // matches the FileIndex's live-bytes number, so non-CBO planning
     // (broadcast thresholds) is byte-identical with or without it.
     val rel = org.apache.spark.sql.GraftBridge.ofRows(spark,
-      LogicalRelation(fsRelationFor(spark, path, snap),
+      LogicalRelation(fsRelationFor(spark, path, snap, snap.physicalSchema),
         statsShell(spark, path, snap)))
     val dved = snap.files.filter(_.dv.isDefined)
     // converted hive-layout fill (no-op projection otherwise); DVs are
@@ -3594,7 +3577,7 @@ object LogTable extends org.apache.spark.internal.Logging {
         "columns (column mapping, top-level or nested), which a bare " +
         "relation cannot alias back to logical names — read via " +
         "LogTable.read/table")
-    fsRelationFor(spark, path, snap)
+    fsRelationFor(spark, path, snap, snap.physicalSchema)
   }
 
   /** Live bytes (DV-deleted fraction excluded) — the one size number
@@ -3662,14 +3645,16 @@ object LogTable extends org.apache.spark.internal.Logging {
         }.toMap)))
   }
 
-  private def fsRelationFor(spark: SparkSession, path: String, snap: Snapshot)
-      : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
-    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val index = new LogTableFileIndex(spark, path, snap)
-    HadoopFsRelation(index, StructType(Nil), snap.physicalSchema,
+  /** The one parquet relation over a [[LogTableFileIndex]] of `snap`,
+    * reading `dataSchema` — [[table]]'s and [[fsRelation]]'s over a
+    * snapshot, [[scanFiles]]' over a file-set shell.
+    */
+  private def fsRelationFor(spark: SparkSession, path: String, snap: Snapshot,
+                            dataSchema: StructType)
+      : org.apache.spark.sql.execution.datasources.HadoopFsRelation =
+    org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      new LogTableFileIndex(spark, path, snap), StructType(Nil), dataSchema,
       None, GraftParquetFileFormat.instance, Map.empty[String, String])(spark)
-  }
 
   /** File-level CHANGE FEED between two committed versions, off the log
     * alone: the rows of files net-ADDED in `(fromVersion, toVersion]`
@@ -3819,16 +3804,19 @@ object LogTable extends org.apache.spark.internal.Logging {
   /** The rows of one commit's CDC files, read under `snap`'s schema
     * (schema-on-read NULL-fills columns added after the commit, exactly
     * like data files) with `_change_type` carried through the
-    * physical→logical exit.
+    * physical→logical exit. The scan's shell carries no partition
+    * columns: CDC entries have no partition bounds (pmin = pmax = ""),
+    * so a pushed partition filter must never prune them by those.
     */
   private[sources] def readCdcFiles(spark: SparkSession, path: String,
-                                    snap: Snapshot,
-                                    files: Seq[CdcFile]): DataFrame = {
+                                    snap: Snapshot, files: Seq[CdcFile],
+                                    isStreaming: Boolean = false): DataFrame = {
     val phys = StructType(snap.physicalSchema.fields :+
       StructField("_change_type", org.apache.spark.sql.types.StringType))
     toLogical(snap,
       scanFiles(spark, path, phys,
-        files.map(f => LogFile(f.name, "", "", -1L, f.bytes))),
+        files.map(f => LogFile(f.name, "", "", -1L, f.bytes)),
+        isStreaming = isStreaming),
       extras = Seq("_change_type"))
   }
 
@@ -3850,61 +3838,69 @@ object LogTable extends org.apache.spark.internal.Logging {
                         fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion < toVersion,
       s"need fromVersion < toVersion, got $fromVersion >= $toVersion")
-    val to = snapshot(spark, path, Some(toVersion))
-    val parts = Seq.newBuilder[DataFrame]
-    ((fromVersion + 1) to toVersion).foreach { v =>
-      val c =
-        try commitAt(spark, path, v)
-        catch {
-          case e: java.io.FileNotFoundException =>
-            throw new IllegalStateException(
-              s"log table $path: commit $v has been expired behind a " +
-                "checkpoint — the change window is gone; widen from a " +
-                "later version or stop expiring the log", e)
-        }
-      if (c.dataChange) {
-        if (c.cdc.nonEmpty)
-          parts += readCdcFiles(spark, path, to, c.cdc)
-            .withColumn("_commit_version", lit(v))
-        else {
-          if (c.adds.nonEmpty)
-            parts += readFiles(spark, path, to, c.adds)
-              .withColumn("_change_type", lit("insert"))
-              .withColumn("_commit_version", lit(v))
-          if (c.removes.nonEmpty) {
-            val removedSet = c.removes.toSet
-            // resolving the removed files' entries needs the PARENT
-            // snapshot — behind the checkpoint horizon it is just as
-            // gone as an expired commit, so it gets the same friendly
-            // refusal (not a raw replay error)
-            val parent =
-              try snapshot(spark, path, Some(v - 1))
-              catch {
-                case e: Exception =>
-                  throw new IllegalStateException(
-                    s"log table $path: version ${v - 1} has been " +
-                      "expired behind a checkpoint — the change window " +
-                      "is gone; widen from a later version or stop " +
-                      "expiring the log", e)
-              }
-            val removed = parent.files.filter(f => removedSet.contains(f.name))
-            if (removed.nonEmpty)
-              parts += readFiles(spark, path, to, removed)
-                .withColumn("_change_type", lit("delete"))
-                .withColumn("_commit_version", lit(v))
-          }
-        }
-      }
-    }
-    parts.result() match {
-      case Seq() =>
-        emptyDf(spark, to.schema)
-          .withColumn("_change_type", lit("").cast("string"))
-          .withColumn("_commit_version", lit(0L))
-          .limit(0)
-      case ps => ps.reduce(_ unionByName _)
-    }
+    commitChanges(spark, path, snapshot(spark, path, Some(toVersion)),
+      fromVersion, toVersion, isStreaming = false)
   }
+
+  /** The per-commit change feed of `(fromVersion, toVersion]` read under
+    * `snap`'s schema: [[readCommitChanges]]' `to` snapshot, or a
+    * streaming source's pinned shell (`isStreaming`). A window without
+    * changes still reads as a zero-file scan, so a streaming batch stays
+    * a streaming plan.
+    */
+  private[sources] def commitChanges(spark: SparkSession, path: String,
+                                     snap: Snapshot, fromVersion: Long,
+                                     toVersion: Long,
+                                     isStreaming: Boolean): DataFrame = {
+    def read(files: Seq[LogFile], change: String): DataFrame =
+      readFiles(spark, path, snap, files, isStreaming)
+        .withColumn("_change_type", lit(change))
+    val parts = ((fromVersion + 1) to toVersion).flatMap { v =>
+      val c = windowCommit(spark, path, v)
+      val frames =
+        if (!c.dataChange) Nil
+        else if (c.cdc.nonEmpty)
+          Seq(readCdcFiles(spark, path, snap, c.cdc, isStreaming))
+        else {
+          // resolving the removed files' entries needs the PARENT
+          // snapshot — behind the checkpoint horizon it is just as gone
+          // as an expired commit, so it gets the same friendly refusal
+          // (not a raw replay error)
+          val removed =
+            if (c.removes.isEmpty) Nil
+            else {
+              val parent =
+                try snapshot(spark, path, Some(v - 1))
+                catch { case e: Exception => throw windowGone(path, v - 1, e) }
+              val removedSet = c.removes.toSet
+              parent.files.filter(f => removedSet.contains(f.name))
+            }
+          (if (c.adds.nonEmpty) Seq(read(c.adds, "insert")) else Nil) ++
+            (if (removed.nonEmpty) Seq(read(removed, "delete")) else Nil)
+        }
+      frames.map(_.withColumn("_commit_version", lit(v)))
+    }
+    if (parts.isEmpty)
+      read(Nil, "insert").withColumn("_commit_version", lit(toVersion))
+    else parts.reduce(_ unionByName _)
+  }
+
+  /** Commit `v` of a change window — a batch feed's or a stream's; one
+    * expired behind a checkpoint fails loud, never silently skips.
+    */
+  private[sources] def windowCommit(spark: SparkSession, path: String,
+                                    v: Long): ParsedCommit =
+    try commitAt(spark, path, v)
+    catch {
+      case e: java.io.FileNotFoundException => throw windowGone(path, v, e)
+    }
+
+  private def windowGone(path: String, v: Long, cause: Throwable) =
+    new IllegalStateException(
+      s"log table $path: version $v has been expired behind a checkpoint " +
+        "— the change window is gone; read from a later version (restart " +
+        "a stream with startingVersion=latest) or stop expiring the log " +
+        "while change feeds read it", cause)
 
   /** OPERATION HISTORY off the log — one row per still-readable commit,
     * newest first: version, operation name, dataChange, file/row/byte
@@ -3989,7 +3985,7 @@ object LogTable extends org.apache.spark.internal.Logging {
       spark.sessionState.conf.sessionLocalTimeZone)
 
   private def leadIn(snap: Snapshot, values: Seq[Any]): Column =
-    col("`" + snap.partitionCol.replace("`", "``") + "`").isin(values: _*)
+    col(quoted(snap.partitionCol)).isin(values: _*)
 
   /** What a batch touches, in the batch's own types: its distinct
     * partition-value tuples (a NULL value is a NULL literal; an
@@ -4016,7 +4012,6 @@ object LogTable extends org.apache.spark.internal.Logging {
   private[sources] def batchProbe(spark: SparkSession, path: String,
                                   snap: Snapshot, batch: DataFrame,
                                   keyCols: Seq[String]): BatchProbe = {
-    def q(n: String) = col("`" + n.replace("`", "``") + "`")
     val present = keyCols.filter(c =>
       batch.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
     if (snap.partitionCols.isEmpty && present.isEmpty)
@@ -4026,11 +4021,12 @@ object LogTable extends org.apache.spark.internal.Logging {
     // distinct grouping attribute (observed: doubled grouping_id bits,
     // all-NULL groups); plain references group correctly
     val widened = batch.select(col("*") +: snap.partitionCols.zipWithIndex
-      .map { case (c, i) => q(c).as(s"__graft_bp_$i") }: _*)
+      .map { case (c, i) => col(quoted(c)).as(s"__graft_bp_$i") }: _*)
     val refs = snap.partitionCols.indices.map(i => col(s"__graft_bp_$i"))
     val aggs = present.zipWithIndex.flatMap { case (c, i) =>
-      Seq(min(q(c)).as(s"__lo_$i"), max(q(c)).as(s"__hi_$i"),
-        max(q(c).isNull).as(s"__null_$i"))
+      val v = col(quoted(c))
+      Seq(min(v).as(s"__lo_$i"), max(v).as(s"__hi_$i"),
+        max(v.isNull).as(s"__null_$i"))
     }
     val probe =
       if (refs.isEmpty) widened.agg(aggs.head, aggs.tail: _*)
@@ -4316,12 +4312,12 @@ object LogTable extends org.apache.spark.internal.Logging {
         val aligned = changes.select(schema.fields.toIndexedSeq.map { f =>
           // backtick-quoted so a literal dot in a column name is never
           // parsed as nested-field access
-          def ref(n: String) = col("`" + n.replace("`", "``") + "`")
           changes.schema.fields.find(_.name.equalsIgnoreCase(f.name)) match {
-            case Some(g) if g.dataType == f.dataType => ref(g.name).as(f.name)
+            case Some(g) if g.dataType == f.dataType =>
+              col(quoted(g.name)).as(f.name)
             case Some(g) if g.dataType == NullType ||
                 typeWidens(g.dataType, f.dataType) =>
-              ref(g.name).cast(f.dataType).as(f.name)
+              col(quoted(g.name)).cast(f.dataType).as(f.name)
             case Some(g) => throw new IllegalArgumentException(
               s"log table $path: column `${f.name}` is ${f.dataType.sql}; a " +
                 s"${g.dataType.sql} batch cannot evolve it — only ADD-column " +
@@ -4347,11 +4343,12 @@ object LogTable extends org.apache.spark.internal.Logging {
         val alignedId = sysOmitted.foldLeft(aligned) { (acc, fn0) =>
           val fn = schema.fields.find(_.name.equalsIgnoreCase(fn0))
             .map(_.name).getOrElse(fn0)
-          def q(n: String) = col("`" + n.replace("`", "``") + "`")
           val existing = base.select(
-            keyCols.map(q) :+ q(fn).as("__graft_idv"): _*)
+            keyCols.map(n => col(quoted(n))) :+
+              col(quoted(fn)).as("__graft_idv"): _*)
           val j = acc.drop(fn).join(existing, keyCols, "left")
-          val order = schema.fields.toIndexedSeq.map(f => q(f.name).as(f.name))
+          val order = schema.fields.toIndexedSeq
+            .map(f => col(quoted(f.name)).as(f.name))
           val kept = j.filter(col("__graft_idv").isNotNull)
             .withColumn(fn, col("__graft_idv")).select(order: _*)
           val needFill = j.filter(col("__graft_idv").isNull)
@@ -4410,13 +4407,13 @@ object LogTable extends org.apache.spark.internal.Logging {
   private def upsertCdcRows(snap: Snapshot, base: DataFrame,
                             merged: DataFrame, batch: DataFrame,
                             keyCols: Seq[String]): DataFrame = {
-    def q(n: String) = col("`" + n.replace("`", "``") + "`")
-    val keys = batch.select(keyCols.map(q): _*).distinct()
+    val keyRefs = keyCols.map(n => col(quoted(n)))
+    val keys = batch.select(keyRefs: _*).distinct()
     val dataCols = snap.schema.fieldNames.toIndexedSeq
     def side(df: DataFrame, t: String): DataFrame =
       df.join(keys, keyCols, "left_semi").select(
-        struct(keyCols.map(q): _*).as("__k"),
-        struct(dataCols.map(q): _*).as("__r"),
+        struct(keyRefs: _*).as("__k"),
+        struct(dataCols.map(n => col(quoted(n))): _*).as("__r"),
         lit(t).as("__t"))
     val g = side(base, "d").unionByName(side(merged, "i"))
       .groupBy(col("__k")).agg(
@@ -4572,11 +4569,11 @@ object LogTable extends org.apache.spark.internal.Logging {
             s"batch has ${h.sql} — cast explicitly")
       }
     rows.select(schema.fields.toIndexedSeq.map { f =>
-      def ref(n: String) = col("`" + n.replace("`", "``") + "`")
       have.get(f.name.toLowerCase) match {
-        case Some(g) if g.dataType == f.dataType => ref(g.name).as(f.name)
+        case Some(g) if g.dataType == f.dataType =>
+          col(quoted(g.name)).as(f.name)
         case Some(g) =>
-          alignCol(ref(g.name), g.dataType, f.dataType,
+          alignCol(col(quoted(g.name)), g.dataType, f.dataType,
             snap.physicalOf(f.name), f.name).as(f.name)
         case None =>
           // a DECLARED default fills an omitted column (write-side only —
@@ -6016,7 +6013,7 @@ object LogTable extends org.apache.spark.internal.Logging {
       if (extras.contains(f.name)) col(f.name)
       else {
         val pn = physicalIn(colMap, f.name)
-        colRemapped(col("`" + f.name.replace("`", "``") + "`"), f.dataType,
+        colRemapped(col(quoted(f.name)), f.dataType,
           pn, nestMaps, toPhysical = true).as(pn)
       }
     }: _*)
@@ -6032,7 +6029,7 @@ object LogTable extends org.apache.spark.internal.Logging {
       if (snap.colMap.isEmpty && snap.nestMaps.isEmpty) df
       else df.select(snap.schema.fields.toIndexedSeq.map { f =>
         val pn = snap.physicalOf(f.name)
-        colRemapped(col("`" + pn.replace("`", "``") + "`"), f.dataType,
+        colRemapped(col(quoted(pn)), f.dataType,
           pn, snap.nestMaps, toPhysical = false).as(f.name)
       } ++ extras.map(col): _*)
     // generated columns introduced by PARTITION EVOLUTION: files written
@@ -6048,7 +6045,7 @@ object LogTable extends org.apache.spark.internal.Logging {
         (gens.get(c), snap.schema.fields.find(_.name.equalsIgnoreCase(c))) match {
           case (Some(g), Some(fd)) =>
             d.withColumn(fd.name,
-              coalesce(col("`" + fd.name.replace("`", "``") + "`"),
+              coalesce(col(quoted(fd.name)),
                 expr(g).cast(fd.dataType)))
           case _ => d
         }
@@ -6090,9 +6087,8 @@ object LogTable extends org.apache.spark.internal.Logging {
                                  partitionCols: Seq[String] = Nil,
                                  statsCols: Seq[String] = Nil,
                                  snapProps: Option[Map[String, String]] =
-                                   None): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+                                   None,
+                                 isStreaming: Boolean = false): DataFrame = {
     // asNullable mirrors DataFrameReader.schema(...): a batch may have
     // legitimately written NULL into a column whose create-time DDL
     // said NOT NULL (alignment NULL-fill, evolved columns) — reading
@@ -6110,14 +6106,27 @@ object LogTable extends org.apache.spark.internal.Logging {
       case Some(p) => p.get(PspecOriginProp).map(PspecOriginProp -> _).toMap
       case None => Map(PspecOriginProp -> "\u0000")
     }
-    val shell = Snapshot(0L, readSchema.toDDL, partitionCols, statsCols,
-      files, properties = originProps)
-    val index = new LogTableFileIndex(spark, path, shell)
-    val relation = HadoopFsRelation(index, StructType(Nil), readSchema,
-      None, GraftParquetFileFormat.instance, Map.empty[String, String])(spark)
+    val shell = fileSetShell(readSchema, partitionCols, statsCols,
+      originProps, files)
+    // a streaming source's micro-batch plan must be a streaming leaf: the
+    // engine asserts it (the FileStreamSource pattern)
     org.apache.spark.sql.GraftBridge.ofRows(spark,
-      LogicalRelation(relation, isStreaming = false))
+      org.apache.spark.sql.execution.datasources.LogicalRelation(
+        fsRelationFor(spark, path, shell, readSchema), isStreaming))
   }
+
+  /** A snapshot SHELL: the schema, layout and properties the read path
+    * consults, around an explicit file list — not a table state, so
+    * version 0. [[scanFiles]]' FileIndex reads through one, and a
+    * streaming source pins one as its layout.
+    */
+  private[sources] def fileSetShell(schema: StructType,
+                                    partitionCols: Seq[String],
+                                    statsCols: Seq[String],
+                                    properties: Map[String, String],
+                                    files: Seq[LogFile] = Nil): Snapshot =
+    Snapshot(0L, schema.toDDL, partitionCols, statsCols, files,
+      properties = properties)
 
   /** Read `files` under `snap.schema`, applying each entry's OWN deletion
     * vector: files without a DV scan straight through the vectorized
@@ -6128,17 +6137,20 @@ object LogTable extends org.apache.spark.internal.Logging {
     */
   private[sources] def readFiles(spark: SparkSession, path: String,
                                  snap: Snapshot,
-                                 files: Seq[LogFile]): DataFrame = {
+                                 files: Seq[LogFile],
+                                 isStreaming: Boolean = false): DataFrame = {
     // files store PHYSICAL names — scan physical, alias logical at exit
     def raw(fs: Seq[LogFile]): DataFrame =
       scanFiles(spark, path, snap.physicalSchema, fs,
-        snap.partitionCols, snap.statsCols, Some(snap.properties))
+        snap.partitionCols, snap.statsCols, Some(snap.properties),
+        isStreaming)
     val (dved, plain) = files.partition(_.dv.isDefined)
     // converted hive-layout tables fill partition values off the file
     // path (DVs are refused while that debt exists, so the dved branch
-    // never needs the fill — its metadata projection stays intact)
-    val plainDf =
-      if (plain.isEmpty) emptyDf(spark, snap.physicalSchema)
+    // never needs the fill — its metadata projection stays intact). A
+    // streaming read of no files is still a (zero-file) streaming scan.
+    lazy val plainDf =
+      if (plain.isEmpty && !isStreaming) emptyDf(spark, snap.physicalSchema)
       else hiveFilled(snap, raw(plain))
     toLogical(snap,
       if (dved.isEmpty) plainDf
@@ -6516,7 +6528,7 @@ object LogTable extends org.apache.spark.internal.Logging {
     }
     val saltCols = df.schema.fields.toIndexedSeq
       .filter(f => hashable(f.dataType))
-      .map(f => col("`" + f.name.replace("`", "``") + "`"))
+      .map(f => col(quoted(f.name)))
     // A driver-resident input — its plan optimizes to a LocalRelation:
     // createDataFrame/toDF rows, INSERT … VALUES — is range-split on the
     // driver instead ([[GraftBridge.rangeSplit]]), by the bounds the
@@ -6579,7 +6591,7 @@ object LogTable extends org.apache.spark.internal.Logging {
       shuffled.withColumn("_change_type", lit(null).cast(StringType))
         .withColumn(flag, lit(false))
         .union(cdc.select(shuffled.schema.fields.toIndexedSeq.map(f =>
-          col("`" + f.name.replace("`", "``") + "`").cast(f.dataType)
+          col(quoted(f.name)).cast(f.dataType)
             .as(f.name)) :+ col("_change_type") :+ lit(true).as(flag): _*))
     }
     // the tracker sees the written columns: all but the flag
@@ -6903,7 +6915,7 @@ object LogTable extends org.apache.spark.internal.Logging {
     val offDf = spark.createDataFrame(offsets).toDF(pidC, offC)
     val local = monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1L))
     val order = rows.schema.fields.toIndexedSeq
-      .map(f => col("`" + f.name.replace("`", "``") + "`")) :+ col(fieldName)
+      .map(f => col(quoted(f.name))) :+ col(fieldName)
     cached.withColumn(pidC, spark_partition_id())
       .join(broadcast(offDf), pidC)
       .withColumn(fieldName, lit(nxt) + lit(inc) * (col(offC) + local))

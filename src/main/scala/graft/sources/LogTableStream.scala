@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions._
@@ -46,42 +44,32 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * can never silently skip a window it cannot prove empty.
   *
   * Scale: `latestOffset` is one directory listing; `getBatch` parses
-  * O(versions-in-window) small JSON files and plans only their added
-  * files through [[LogTableFileIndex]] (metadata-only listing, the
-  * vectorized parquet reader, whole-stage codegen downstream). Nothing
-  * driver-side grows with table size — only with the window's commit
-  * count, which `maxVersionsPerTrigger` caps.
+  * O(versions-in-window) small JSON files and reads only their files
+  * through the batch read path itself — [[LogTable.readFiles]] and the
+  * per-commit change feed [[LogTable.commitChanges]] over the same
+  * [[LogTableFileIndex]] scan (metadata-only listing, stats pruning, the
+  * vectorized parquet reader), as a streaming leaf. The stream pins one
+  * [[LogTable.Snapshot]] shell: the schema at stream start and the
+  * newest commit's layout and properties, so column mapping, late
+  * generated columns, converted hive columns and the pruning guards
+  * apply exactly as in a batch read. Nothing driver-side grows with
+  * table size — only with the window's commit count, which
+  * `maxVersionsPerTrigger` caps.
   */
 final class LogTableStreamSource(spark: SparkSession, path: String,
-                                 pinned: StructType,
-                                 partitionCols: Seq[String],
-                                 statsCols: Seq[String],
+                                 pinned: LogTable.Snapshot,
                                  startingVersion: Long,
                                  maxVersionsPerTrigger: Long,
                                  ignoreChanges: Boolean,
-                                 colMap: Map[String, String] = Map.empty,
-                                 lateGens: Map[String, String] = Map.empty,
-                                 nestMaps: Map[String, Map[String, String]] =
-                                   Map.empty,
-                                 changeFeed: Boolean = false,
-                                 hiveCols: Seq[String] = Nil)
+                                 changeFeed: Boolean = false)
     extends Source with SupportsTriggerAvailableNow {
-
-  // files store PHYSICAL column names (column mapping, incl. nested
-  // struct fields): scan under them, alias back to the pinned logical
-  // names per batch — pinned at stream start like the schema itself (a
-  // mid-stream rename does not retitle this stream's columns; physical
-  // names are stable forever)
-  private val pinnedPhysical: StructType =
-    if (colMap.isEmpty && nestMaps.isEmpty) pinned
-    else LogTable.physicalizeStruct(pinned, colMap, nestMaps)
 
   require(maxVersionsPerTrigger > 0, "maxVersionsPerTrigger must be positive")
 
   // read schema = pinned table schema; output schema adds the version
   // tag (and, in CHANGE-FEED mode, the Delta CDF _change_type column)
   override val schema: StructType =
-    StructType(pinned.fields ++
+    StructType(pinned.schema.fields ++
       (if (changeFeed)
         Seq(StructField("_change_type", StringType, nullable = false))
       else Nil) :+
@@ -119,170 +107,26 @@ final class LogTableStreamSource(spark: SparkSession, path: String,
     throw new UnsupportedOperationException(
       "admission-controlled source: the engine calls latestOffset")
 
-  /** The pinned-physical streaming scan of `files` at version `v` —
-    * shared by the file feed and the change feed.
+  /** A batch `(from, to]`. CHANGE-FEED mode serves the per-commit feed
+    * of [[LogTable.readCommitChanges]]: row-level CDC files where a
+    * commit has them, otherwise its adds as `insert`s and its removes'
+    * parent-snapshot rows (each under its own deletion vector) as
+    * `delete`s — merges and DV commits stream natively. The file feed
+    * serves each data-change commit's adds.
     */
-  private def rawScan(v: Long, files: Seq[LogTable.LogFile],
-                      schema: StructType = null,
-                      pcols: Seq[String] = null): DataFrame = {
-    // asNullable mirrors DataFrameReader.schema(...): reading a file
-    // holding NULL under a non-nullable read schema lets codegen treat
-    // the null slot as garbage (see LogTable.scanFiles)
-    val sch = LogTable.nullableSchema(Option(schema).getOrElse(pinnedPhysical))
-    // pinned-schema snapshot shell — the TRUE partition columns matter:
-    // the stats resolver (`LogTable.statsOf`) falls back to (pmin, pmax)
-    // for the leading partition column, so a wrong name here would prune
-    // pushed filters on an unrelated column against the partition
-    // bounds. CDC-file shells
-    // pass pcols = Nil: their entries carry NO partition bounds (pmin =
-    // pmax = ""), and the fallback would read those empties as real
-    // bounds and wrongly prune a filtered change feed.
-    val snap = LogTable.Snapshot(v, sch.toDDL,
-      Option(pcols).getOrElse(partitionCols), statsCols, files)
-    val index = new LogTableFileIndex(spark, path, snap)
-    val relation = HadoopFsRelation(index, StructType(Nil), sch,
-      None, GraftParquetFileFormat.instance, Map.empty[String, String])(spark)
-    // isStreaming = true: the engine asserts every getBatch plan is a
-    // streaming leaf (the FileStreamSource/Delta pattern)
-    org.apache.spark.sql.GraftBridge
-      .ofRows(spark, LogicalRelation(relation, isStreaming = true))
-  }
-
-  /** Physical→logical exit + late generated columns (the streaming twin
-    * of LogTable.toLogical — per-batch frames bypass it).
-    */
-  private def toPinnedLogical(raw: DataFrame,
-                              extras: Seq[String] = Nil): DataFrame = {
-    val logical0 =
-      if (colMap.isEmpty && nestMaps.isEmpty) raw
-      else raw.select(pinned.fields.zip(pinnedPhysical.fields)
-        .map { case (lf, pf) =>
-          LogTable.colRemapped(
-            col("`" + pf.name.replace("`", "``") + "`"),
-            lf.dataType, pf.name, nestMaps, toPhysical = false).as(lf.name)
-        }.toIndexedSeq ++ extras.map(col): _*)
-    lateGens.foldLeft(logical0) { case (d, (c, g)) =>
-      pinned.fields.find(_.name.equalsIgnoreCase(c)) match {
-        case Some(fd) =>
-          d.withColumn(fd.name,
-            coalesce(col("`" + fd.name.replace("`", "``") + "`"),
-              expr(g).cast(fd.dataType)))
-        case None => d
-      }
-    }
-  }
-
-  /** CONVERTed hive-layout tables: fill directory-valued partition
-    * columns from the scan's own path — one metadata projection on the
-    * raw scan (DVs are refused while convert.hive debt exists, so this
-    * never has to compose with the DV helpers' metadata capture).
-    */
-  private def hiveFillPinned(raw: DataFrame): DataFrame =
-    if (hiveCols.isEmpty) raw
-    else LogTable.hiveFillOn(pinnedPhysical, hiveCols,
-      raw.select(col("*"), col("_metadata.file_path").as("__graft_fp")),
-      col("__graft_fp")).drop("__graft_fp")
-
-  /** One change-feed side at one version: the entries' LIVE rows (each
-    * file under its OWN deletion vector — the static DV-pair set joins
-    * the streaming scan) tagged with the change type and version.
-    */
-  private def cdfFrame(v: Long, files: Seq[LogTable.LogFile],
-                       change: String): DataFrame = {
-    val raw0 = rawScan(v, files)
-    val dved = files.filter(_.dv.isDefined)
-    val raw =
-      if (dved.isEmpty) hiveFillPinned(raw0)
-      else LogTable.antiJoinDv(LogTable.withDvHelpers(raw0),
-        LogTable.dvPairs(spark, path, dved),
-        dved.iterator.map(_.dv.get.deleted).sum)
-    toPinnedLogical(raw)
-      .withColumn("_change_type", lit(change))
-      .withColumn("_commit_version", lit(v))
-  }
-
-  /** One commit's ROW-LEVEL CDC files (`cdc.enabled` DML — see
-    * [[LogTable.CdcProp]]) as a streaming frame: the changed rows with
-    * their written `_change_type` carried through the physical→logical
-    * exit. Feed volume is the changed rows — a one-row UPDATE in a
-    * multi-GB file streams two rows, not the file-level delete+insert
-    * pair [[cdfFrame]] would.
-    */
-  private def cdcFrame(v: Long, files: Seq[LogTable.CdcFile]): DataFrame = {
-    val phys = StructType(pinnedPhysical.fields :+
-      StructField("_change_type", org.apache.spark.sql.types.StringType))
-    val shells = files.map(f =>
-      LogTable.LogFile(f.name, "", "", -1L, f.bytes))
-    toPinnedLogical(rawScan(v, shells, phys, pcols = Nil),
-        extras = Seq("_change_type"))
-      .withColumn("_commit_version", lit(v))
-  }
-
-  /** CHANGE-FEED batch: per data-change commit in (from, to], the ADDED
-    * entries' live rows stream as `insert`s and the REMOVED entries' —
-    * as of the PARENT snapshot, each under its own deletion vector — as
-    * `delete`s: per commit, the same identity the batch
-    * [[LogTable.readChanges]] proves, with `_commit_version`
-    * attribution. Merges and DV commits stream NATIVELY here (riders
-    * appear as delete+insert pairs — the batch CDF's file-level shape;
-    * key them through readNetChanges-style folding downstream to
-    * cancel). On a `cdc.enabled` table, DML commits carry ROW-LEVEL
-    * CDC files instead and the feed serves exactly the changed rows
-    * ([[cdcFrame]]) — no riders, update pre/post images attributed.
-    */
-  private def getChangeBatch(fromV: Long, toV: Long): DataFrame = {
-    val parts = Seq.newBuilder[DataFrame]
-    ((fromV + 1) to toV).foreach { v =>
-      val c =
-        try LogTable.commitAt(spark, path, v)
-        catch {
-          case e: java.io.FileNotFoundException =>
-            throw new IllegalStateException(
-              s"log table $path: commit $v has been expired behind a " +
-                "checkpoint — this stream's window is gone; restart the " +
-                "stream from a fresh snapshot (startingVersion=latest) " +
-                "or stop expiring the log while streams read it", e)
-        }
-      if (c.dataChange) {
-        // a commit carrying row-level CDC files serves EXACTLY those —
-        // commits that predate `cdc.enabled` (or bypassed the DML
-        // paths) fall back to the file-level delete+insert shape below
-        if (c.cdc.nonEmpty) parts += cdcFrame(v, c.cdc)
-        else {
-          if (c.adds.nonEmpty) parts += cdfFrame(v, c.adds, "insert")
-          if (c.removes.nonEmpty) {
-            val removedSet = c.removes.toSet
-            val removed = LogTable.snapshot(spark, path, Some(v - 1))
-              .files.filter(f => removedSet.contains(f.name))
-            if (removed.nonEmpty) parts += cdfFrame(v, removed, "delete")
-          }
-        }
-      }
-    }
-    parts.result() match {
-      case Seq() => cdfFrame(toV, Nil, "insert") // empty, still streaming
-      case ps => ps.reduce(_ union _)
-    }
-  }
-
   override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
     val fromV = start.map(o => versionOf(o.json)).getOrElse(startingVersion)
     val toV = versionOf(end.json)
-    if (changeFeed) return getChangeBatch(fromV, toV)
-    val batches = (fromV + 1) to toV
-    val emit = Seq.newBuilder[(Long, Seq[LogTable.LogFile])]
-    batches.foreach { v =>
-      val c =
-        try LogTable.commitAt(spark, path, v)
-        catch {
-          case e: java.io.FileNotFoundException =>
-            throw new IllegalStateException(
-              s"log table $path: commit $v has been expired behind a " +
-                "checkpoint — this stream's window is gone; restart the " +
-                "stream from a fresh snapshot (startingVersion=latest) " +
-                "or stop expiring the log while streams read it", e)
-        }
-      if (c.dataChange) {
+    if (changeFeed)
+      return LogTable.commitChanges(spark, path, pinned, fromV, toV,
+        isStreaming = true)
+    def frame(v: Long, files: Seq[LogTable.LogFile]): DataFrame =
+      LogTable.readFiles(spark, path, pinned, files, isStreaming = true)
+        .withColumn("_commit_version", lit(v))
+    val frames = ((fromV + 1) to toV).flatMap { v =>
+      val c = LogTable.windowCommit(spark, path, v)
+      if (!c.dataChange) None
+      else {
         require(c.removes.isEmpty || ignoreChanges,
           s"log table $path: commit $v rewrote files (a merge). Its adds " +
             "carry unchanged rider rows alongside the real changes; set " +
@@ -295,17 +139,11 @@ final class LogTableStreamSource(spark: SparkSession, path: String,
           s"log table $path: commit $v attached deletion vectors; a file " +
             "stream cannot apply row-level deletes — consume " +
             "LogTable.readChanges (or purgeDeletes + restart)")
-        emit += ((v, c.adds))
+        Some(frame(v, c.adds))
       }
     }
-    val versions = emit.result()
-    def frame(v: Long, files: Seq[LogTable.LogFile]): DataFrame =
-      toPinnedLogical(hiveFillPinned(rawScan(v, files)))
-        .withColumn("_commit_version", lit(v))
-    versions match {
-      case Seq() => frame(toV, Nil) // zero-file scan: empty, still streaming
-      case vs => vs.map { case (v, fl) => frame(v, fl) }.reduce(_ union _)
-    }
+    // zero-file scan: empty, still streaming
+    if (frames.isEmpty) frame(toV, Nil) else frames.reduce(_ union _)
   }
 
   override def commit(end: OffsetV1): Unit = ()
@@ -420,32 +258,23 @@ class LogTableSourceProvider extends StreamSourceProvider
     // commit file carries it — one small JSON read instead of a second
     // full snapshot replay at stream start (an expired newest commit —
     // checkpoint-only log tip — falls back to the replay).
-    def replay() = LogTable.snapshot(spark, path)
-    lazy val snap = replay()
-    val meta = schema match {
-      case Some(_) =>
-        try {
-          val c = LogTable.commitAt(spark, path,
-            LogTable.latestVersion(spark, path))
-          (c.partitionCols, c.statsCols, LogTable.colMapOfProps(c.properties),
-            LogTable.lateGeneratorsOf(c.properties),
-            LogTable.nestMapsOfProps(c.properties),
-            LogTable.convertHiveColsOf(c.properties))
-        } catch {
-          case _: java.io.IOException =>
-            (snap.partitionCols, snap.statsCols, snap.colMap,
-              LogTable.lateGeneratorsOf(snap.properties), snap.nestMaps,
-              LogTable.convertHiveColsOf(snap.properties))
-        }
-      case None => (snap.partitionCols, snap.statsCols, snap.colMap,
-        LogTable.lateGeneratorsOf(snap.properties), snap.nestMaps,
-        LogTable.convertHiveColsOf(snap.properties))
-    }
-    val changeFeed = opt(parameters, "readChangeFeed").exists(_.toBoolean)
-    val pinned = schema match {
+    lazy val snap = LogTable.snapshot(spark, path)
+    val pinnedSchema = schema match {
       case Some(s) => StructType(s.fields.filterNot(f =>
         f.name == "_commit_version" || f.name == "_change_type"))
       case None => snap.schema
+    }
+    val newest =
+      if (schema.isEmpty) None
+      else
+        try Some(LogTable.commitAt(spark, path,
+          LogTable.latestVersion(spark, path)))
+        catch { case _: java.io.IOException => None }
+    val pinned = newest match {
+      case Some(c) => LogTable.fileSetShell(pinnedSchema, c.partitionCols,
+        c.statsCols, c.properties)
+      case None => LogTable.fileSetShell(pinnedSchema, snap.partitionCols,
+        snap.statsCols, snap.properties)
     }
     val startingTs = opt(parameters, "startingTimestamp")
     require(startingTs.isEmpty || opt(parameters, "startingVersion").isEmpty,
@@ -475,9 +304,7 @@ class LogTableSourceProvider extends StreamSourceProvider
       .map(_.toLong).getOrElse(Long.MaxValue)
     val ignoreChanges = opt(parameters, "ignoreChanges")
       .exists(_.toBoolean)
-    new LogTableStreamSource(spark, path, pinned, meta._1, meta._2,
-      startingVersion, maxPer, ignoreChanges, colMap = meta._3,
-      lateGens = meta._4, nestMaps = meta._5, changeFeed = changeFeed,
-      hiveCols = meta._6)
+    new LogTableStreamSource(spark, path, pinned, startingVersion, maxPer,
+      ignoreChanges, opt(parameters, "readChangeFeed").exists(_.toBoolean))
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
+import LogTable.quoted
+
 /** Full MERGE INTO over the commit-log table — the general form of
   * [[LogTable.upsert]]'s fixed latest-wins semantics (the reference's
   * merges are op-column CDC batches, cf.
@@ -190,7 +192,7 @@ final case class MergeInto private[sources] (
     try {
     // ambiguity check, once: two source rows for one key would make the
     // clause outcome depend on join order — fail loud, the Delta rule
-    val dup = source.groupBy(keyCols.map(c => col(quote(c))): _*)
+    val dup = source.groupBy(keyCols.map(c => col(quoted(c))): _*)
       .count().filter(col("count") > 1).limit(1).count()
     require(dup == 0L,
       s"merge into $path: source has duplicate keys on " +
@@ -329,8 +331,6 @@ final case class MergeInto private[sources] (
 
   // ------------------------------------------------------------ internals
 
-  private def quote(n: String): String = "`" + n.replace("`", "``") + "`"
-
   private def validate(snap: LogTable.Snapshot): Unit = {
     def known(c: String): Boolean =
       snap.schema.fields.exists(_.name.equalsIgnoreCase(c))
@@ -401,7 +401,7 @@ final case class MergeInto private[sources] (
     val t = base.withColumn("__t_ex", lit(true)).alias("t")
     val s = src.withColumn("__s_ex", lit(true)).alias("s")
     val joinCond = keyCols.map(k =>
-      col("t." + quote(k)) === col("s." + quote(k))).reduce(_ && _)
+      col("t." + quoted(k)) === col("s." + quoted(k))).reduce(_ && _)
     val joined = t.join(s, joinCond, "full_outer")
     val matchedAct = matched.zipWithIndex.foldRight(lit("keep"): Column) {
       case ((cl, i), acc) =>
@@ -466,7 +466,7 @@ final case class MergeInto private[sources] (
       // no outer cast: each leaf already cast to its own type, and a
       // struct cast that TIGHTENS nullability (NOT NULL leaves) is
       // refused by the analyzer
-      else Some(rebuild(col("t." + quote(f.name)), f.dataType, f.name, m))
+      else Some(rebuild(col("t." + quoted(f.name)), f.dataType, f.name, m))
     }
 
   /** One output column per schema field, dispatched on `__act` — shared
@@ -477,7 +477,7 @@ final case class MergeInto private[sources] (
   private def outputCols(snap: LogTable.Snapshot,
                          fills: Seq[String] = Nil): Seq[Column] =
     snap.schema.fields.toIndexedSeq.map { f =>
-      var e: Column = col("t." + quote(f.name))
+      var e: Column = col("t." + quoted(f.name))
       matched.zipWithIndex.foreach { case (cl, i) =>
         cl.set.foreach { m =>
           branchValue(f, m).foreach { v =>
@@ -513,14 +513,14 @@ final case class MergeInto private[sources] (
                          fills: Seq[String]): DataFrame = {
     val fields = snap.schema.fields.toIndexedSeq
     val preS = struct(fields.map(f =>
-      col("t." + quote(f.name)).as(f.name)): _*)
+      col("t." + quoted(f.name)).as(f.name)): _*)
     // flat post columns first so the generated-column expressions (which
     // name top-level schema columns) rebind onto the post-clause values
     val flat = joined.select(Seq(preS.as("__pre"), col("__act")) ++
       extraCols.map(col) ++ outputCols(snap, fills): _*)
     LogTable.materializeGenerated(gens, flat)
       .select(Seq(col("__pre"),
-        struct(fields.map(f => col(quote(f.name)).as(f.name)): _*)
+        struct(fields.map(f => col(quoted(f.name)).as(f.name)): _*)
           .as("__post"),
         col("__act")) ++ extraCols.map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -566,7 +566,7 @@ final case class MergeInto private[sources] (
       }
       .orElse((source.schema.fieldNames.toSeq ++ fills)
         .find(_.equalsIgnoreCase(field))
-        .map(n => col("s." + quote(n))))
+        .map(n => col("s." + quoted(n))))
       .getOrElse(lit(null))
       .cast(dt)
 
@@ -621,7 +621,7 @@ final case class MergeInto private[sources] (
       StructType(sc.fields :+ StructField(fn, LongType, nullable = false)))
     val sShell = LogTable.emptyDf(spark, srcSchema).alias("s")
     val joinCond = keyCols.map(k =>
-      col("t." + quote(k)) === col("s." + quote(k))).reduce(_ && _)
+      col("t." + quoted(k)) === col("s." + quoted(k))).reduce(_ && _)
     val inner = tShell.join(sShell, joinCond, "inner")
     def nullableOn(shell: DataFrame, e: Column, dt: DataType): Boolean =
       shell.select(e.cast(dt).as("x")).schema.head.nullable

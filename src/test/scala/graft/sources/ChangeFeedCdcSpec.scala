@@ -2,11 +2,11 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+
+import StreamDrain.drain
 
 /** ROW-LEVEL change data capture (`cdc.enabled`): DML writes the changed
   * rows as `_change_data/` parquet referenced by the commit, and every
@@ -183,16 +183,9 @@ class ChangeFeedCdcSpec extends SparkSpec {
       .whenMatchedUpdate(Map("v" -> "s.v"))
       .whenNotMatchedInsert()
       .run()                                                            // v4
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.Row]()
-    val q = spark.readStream.format(classOf[LogTableSourceProvider].getName)
-      .option("path", dir).option("readChangeFeed", "true").load()
-      .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-        b.collect().foreach(r => buf.add(r): Unit)
-      }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = scala.jdk.CollectionConverters
-      .CollectionHasAsScala(buf).asScala.toSeq
+    val (rows, _) = drain(
+      spark.readStream.format(classOf[LogTableSourceProvider].getName)
+        .option("path", dir).option("readChangeFeed", "true").load())
     def at(ver: Long): Seq[(Long, String, String)] = rows
       .filter(_.getAs[Long]("_commit_version") == ver)
       .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"),
@@ -217,6 +210,12 @@ class ChangeFeedCdcSpec extends SparkSpec {
     val live = LogTable.read(spark, dir).select("k", "v")
       .as[(Long, String)].collect().toSeq.sorted
     assert(net == live, s"net $net != live $live")
+    // the stream and the batch per-commit feed are one read path: the
+    // same rows, as a multiset
+    val streamed = rows.map(_.toString).sorted
+    val batch = LogTable.readCommitChanges(spark, dir, 0L, 4L).collect()
+      .map(_.toString).toSeq.sorted
+    assert(streamed == batch, s"stream $streamed != batch $batch")
   }
 
   test("a partition-column filter pushed into the streaming change feed " +
@@ -225,18 +224,12 @@ class ChangeFeedCdcSpec extends SparkSpec {
     mk(dir)
     LogTable.updateWhere(spark, dir, col("k") === 11L,
       Map("v" -> lit("flt"))): Unit // k=11 lives in p1
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.Row]()
-    val q = spark.readStream.format(classOf[LogTableSourceProvider].getName)
-      .option("path", dir).option("readChangeFeed", "true")
-      .option("startingVersion", "1").load()
-      .filter(col("p") === "p1") // pushed into the FileIndex
-      .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-        b.collect().foreach(r => buf.add(r): Unit)
-      }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = scala.jdk.CollectionConverters
-      .CollectionHasAsScala(buf).asScala.toSeq
+    val rows = drain(
+      spark.readStream.format(classOf[LogTableSourceProvider].getName)
+        .option("path", dir).option("readChangeFeed", "true")
+        .option("startingVersion", "1").load()
+        .filter(col("p") === "p1")) // pushed into the FileIndex
+      ._1
       .filter(_.getAs[Long]("_commit_version") == 2L)
       .map(r => (r.getAs[Long]("k"), r.getAs[String]("_change_type")))
       .sorted

@@ -8,6 +8,8 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 
+import StreamDrain.drain
+
 /** Structured Streaming over the commit log: versions as offsets,
   * admission control, dataChange skipping, rewrite fail-loud, and the
   * latest-wins downstream contract.
@@ -22,22 +24,6 @@ class LogTableStreamSpec extends SparkSpec {
     opts.foldLeft(spark.readStream.format(fmt).option("path", dir)) {
       case (r, (k, v)) => r.option(k, v)
     }.load()
-
-  /** Run to completion under AvailableNow, collecting every emitted row
-    * (thread-safe buffer) and counting NON-EMPTY micro-batches.
-    */
-  private def drain(df: DataFrame): (Seq[org.apache.spark.sql.Row], Long) = {
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-    val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = df.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-      val rows = b.collect()
-      if (rows.nonEmpty) batches.incrementAndGet(): Unit
-      rows.foreach(r => buf.add(r): Unit)
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    (scala.jdk.CollectionConverters.CollectionHasAsScala(buf).asScala.toSeq,
-      batches.get())
-  }
 
   /** Does any throwable in the cause chain mention `needle`? */
   private def causeContains(t: Throwable, needle: String): Boolean =
@@ -324,6 +310,11 @@ class LogTableStreamSpec extends SparkSpec {
     val live = LogTable.read(spark, dir).select("k").as[Long]
       .collect().sorted.toSeq
     assert(net == live, s"net $net != live $live")
+    // one commit per batch: the compaction-only window (3, 4] is an
+    // empty batch, which must still plan as a streaming scan
+    val (paced, _) = drain(stream(dir, "readChangeFeed" -> "true",
+      "maxVersionsPerTrigger" -> "1"))
+    assert(paced.map(_.toString).sorted == rows.map(_.toString).sorted)
   }
 
   test("startingTimestamp starts the feed at the first commit at or " +

@@ -314,6 +314,44 @@ class PartitionEvolutionSpec extends SparkSpec {
       "pre-evolution rows must stream the COMPUTED derived value")
   }
 
+  /** 30 rows led by `region`, then evolved to lead with `zone` — an
+    * existing string column that carries no per-file stats, so the
+    * pre-evolution files hold only `region`'s (pmin, pmax). Returns the
+    * keys a batch read filtered on the new leading column sees.
+    */
+  private def evolvedToZone(t: String): Seq[Long] = {
+    LogTable.create(spark, t, rows().withColumn("zone", lit("z1")),
+      Seq("region"), statsCols = Seq("k"))
+    LogTable.evolvePartitioning(spark, t, Seq("zone")): Unit
+    val batch = LogTable.table(spark, t).filter(col("zone") === "z1")
+      .select("k").as[Long].collect().toSeq.sorted
+    assert(batch == (0L until 30L), s"batch read lost rows: $batch")
+    batch
+  }
+
+  private def streamedKeys(t: String, changeFeed: Boolean): Seq[Long] =
+    StreamDrain.drain(spark.readStream
+      .format(classOf[LogTableSourceProvider].getName)
+      .option("path", t).option("readChangeFeed", changeFeed.toString).load()
+      .filter(col("zone") === "z1"))._1.map(_.getAs[Long]("k")).sorted
+
+  test("a stream filtered on the NEW leading column emits every row the " +
+    "batch read does (file feed): pre-evolution files never prune by " +
+    "the old column's pmin/pmax") {
+    val t = tmp()
+    val batch = evolvedToZone(t)
+    val got = streamedKeys(t, changeFeed = false)
+    assert(got == batch, s"file feed streamed ${got.size} of ${batch.size}")
+  }
+
+  test("a change feed filtered on the NEW leading column emits every row " +
+    "the batch read does") {
+    val t = tmp()
+    val batch = evolvedToZone(t)
+    val got = streamedKeys(t, changeFeed = true)
+    assert(got == batch, s"change feed streamed ${got.size} of ${batch.size}")
+  }
+
   test("REPLACE PARTITIONED BY works on NAMED tables through the catalog") {
     val root = Files.createTempDirectory("graft-pevo-cat").toString
     spark.conf.set("spark.sql.catalog.pevocat",
